@@ -1232,8 +1232,9 @@ def multiclass_classify(
     """Score every document against every class and emit the argmax —
     ``(id, n_features, pred_label, score_ppm)`` with ``score_ppm`` the
     winner's per-feature mean weight (length-comparable). Ties break to
-    the SMALLEST label string; token-less docs have no features and are
-    absent (``quality_classifier_score`` discipline).
+    the SMALLEST label in the label type's order (labels keep
+    ``class_stats``' type, string or integer); token-less docs have no
+    features and are absent (``quality_classifier_score`` discipline).
 
     Scale shape: per-(doc, bucket) counts with map-side combine are the
     only persist (the ``dsir_importance`` frame); the sparse weight
@@ -1261,8 +1262,9 @@ def multiclass_classify(
     classes = sorted({lab for lab, _, _ in stats_rows})
     if not classes:
         raise ValueError("class_stats is empty — train on a non-empty corpus")
+    label_t = class_stats.schema["label"].dataType.simpleString()
     class_stats = literal_frame(
-        df.sparkSession, stats_rows, "label string, n_feats long, floor_w long"
+        df.sparkSession, stats_rows, f"label {label_t}, n_feats long, floor_w long"
     )
     rank_of = {lab: len(classes) - i for i, lab in enumerate(classes)}
     label_of = F.create_map(

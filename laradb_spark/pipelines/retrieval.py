@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ranking import grouped_rank
-from ..util import fan_out, literal_frame, persist_once
+from ..util import fan_out, literal_frame, persist_once, read_stored
 from .text import tokenize_str, tokens
 
 K1_MILLI = 1200  # k1 = 1.2
@@ -650,14 +650,14 @@ def bm25_search_index(
     buckets = sorted(
         {zlib.crc32(w.encode()) % 256 for _, t in queries for w in tokenize_str(str(t))}
     )
-    postings = spark.read.parquet(f"{path}/postings").filter(
+    postings = read_stored(spark, f"{path}/postings").filter(
         F.col("bucket").isin(buckets)
     )
     hits = postings
     if "dl" not in postings.columns:
         # pre-r12 layout without denormalized dl: fall back to the
         # doclens join (corpus-sized shuffle — rebuild the index to fix)
-        hits = postings.join(spark.read.parquet(f"{path}/doclens"), on="id")
+        hits = postings.join(read_stored(spark, f"{path}/doclens"), on="id")
     # prune termstats to the query terms. Interactive-sized term sets use
     # a driver-side IN list (no shuffle, and the predicate reaches the
     # parquet scan); past ``inlist_max_terms`` distinct terms — a 10⁵-query
@@ -667,13 +667,13 @@ def bm25_search_index(
     # way (both routes keep exactly the stored (term, df) rows whose term
     # appears in the query set).
     qterms = sorted({w for _, t in queries for w in tokenize_str(str(t))})
-    termstats = spark.read.parquet(f"{path}/termstats")
+    termstats = read_stored(spark, f"{path}/termstats")
     if len(qterms) <= inlist_max_terms:
         dfreq = termstats.filter(F.col("term").isin(qterms))
     else:
         qt = literal_frame(spark, [(t,) for t in qterms], "term string")
         dfreq = termstats.join(F.broadcast(qt), on="term")
-    stats = spark.read.parquet(f"{path}/stats")
+    stats = read_stored(spark, f"{path}/stats")
     scored = (
         hits.join(F.broadcast(q), on="term")
         .join(F.broadcast(dfreq), on="term")
@@ -835,15 +835,15 @@ def bm25_prf_search_index(
     refuses the legacy layout like the append does."""
     import zlib
 
-    postings = spark.read.parquet(f"{path}/postings")
+    postings = read_stored(spark, f"{path}/postings")
     if "dl" not in postings.columns:
         raise ValueError(
             "bm25_prf_search_index: stored postings lack the denormalized "
             "'dl' column (pre-dl layout). Rebuild the index with "
             "bm25_build_index first."
         )
-    termstats = spark.read.parquet(f"{path}/termstats")
-    stats = spark.read.parquet(f"{path}/stats")
+    termstats = read_stored(spark, f"{path}/termstats")
+    stats = read_stored(spark, f"{path}/stats")
 
     def score_pass(qterms: DataFrame, terms: list[str]) -> DataFrame:
         buckets = sorted({zlib.crc32(t.encode()) % 256 for t in terms})
@@ -883,7 +883,7 @@ def bm25_prf_search_index(
 
     if _os.path.isdir(f"{path}/doc_tf"):
         dbuckets = sorted({_dbucket_of(r["id"]) for r in fb_rows})
-        fetch_src = spark.read.parquet(f"{path}/doc_tf").filter(
+        fetch_src = read_stored(spark, f"{path}/doc_tf").filter(
             F.col("dbucket").isin(dbuckets)
         )
     else:  # pre-r15 layout: full postings pass (see docstring)

@@ -32,6 +32,7 @@ from ..util import (
     literal_frame,
     persist_once,
     plan_size_bytes,
+    read_stored,
 )
 
 
@@ -1454,7 +1455,7 @@ def ivf_search_index(
     semantics: the predicate restricts candidates BEFORE ranking —
     identical member sets to ``ivf_topk_filtered`` under the same
     centroids."""
-    cents = spark.read.parquet(f"{path}/centroids")
+    cents = read_stored(spark, f"{path}/centroids")
     q = queries.select(
         F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("qvec")
     )
@@ -1477,7 +1478,7 @@ def ivf_search_index(
     probe_rows = probes_plan.collect()
     probes = literal_frame(spark, probe_rows, probes_plan.schema)
     probe_cids = sorted({r.cid for r in probe_rows})
-    idx = spark.read.parquet(f"{path}/corpus").filter(F.col("cid").isin(probe_cids))
+    idx = read_stored(spark, f"{path}/corpus").filter(F.col("cid").isin(probe_cids))
     if where is not None:
         idx = idx.filter(F.expr(where))
     scored = (
@@ -1540,7 +1541,7 @@ def lsh_search_index(
     q_rows = q_plan.collect()
     q = literal_frame(spark, q_rows, q_plan.schema)
     probe_buckets = sorted({r.bucket for r in q_rows})
-    idx = spark.read.parquet(f"{path}/corpus").filter(F.col("bucket").isin(probe_buckets))
+    idx = read_stored(spark, f"{path}/corpus").filter(F.col("bucket").isin(probe_buckets))
     scored = (
         idx.join(F.broadcast(q), on="bucket")
         .filter(F.col("neighbor_id") != F.col(query_id_col))
@@ -2393,8 +2394,8 @@ def pq_search_index(
     the codebooks (m·k_sub rows, driver-side), build the per-query LUTs,
     map-scan the code table. No shuffle on the corpus side at all until
     the candidates-sized ranking."""
-    cb = _pq_codebook_rows(spark.read.parquet(f"{path}/codebooks"))
-    codes = spark.read.parquet(f"{path}/codes")
+    cb = _pq_codebook_rows(read_stored(spark, f"{path}/codebooks"))
+    codes = read_stored(spark, f"{path}/codes")
     q = queries.select(
         F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("qvec")
     )
@@ -2635,8 +2636,8 @@ def ivfpq_search_index(
     ``where`` = filtered serving over an index built with matching
     ``meta_cols`` (see ivf_search_index — same pre-filter semantics,
     same pushed-row-filter composition with the partition pruning)."""
-    coarse = spark.read.parquet(f"{path}/coarse")
-    cb = _pq_codebook_rows(spark.read.parquet(f"{path}/codebooks"))
+    coarse = read_stored(spark, f"{path}/coarse")
+    cb = _pq_codebook_rows(read_stored(spark, f"{path}/codebooks"))
     q = queries.select(
         F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("qvec")
     )
@@ -2654,7 +2655,7 @@ def ivfpq_search_index(
         probes_plan.select(query_id_col, "qvec").schema,
     )
     qlut = _pq_qlut(qframe, cb, dim, query_id_col)
-    idx = spark.read.parquet(f"{path}/codes").filter(F.col("cid").isin(probe_cids))
+    idx = read_stored(spark, f"{path}/codes").filter(F.col("cid").isin(probe_cids))
     if where is not None:
         idx = idx.filter(F.expr(where))
     scored = (
@@ -3044,8 +3045,8 @@ def ivfpq_res_search_index(
     mechanics (probe rows collected and rebuilt as a literal frame) and
     its ``where`` filtered serving (meta_cols-built index; pre-filter
     semantics, pushed row filter composed with partition pruning)."""
-    coarse = spark.read.parquet(f"{path}/coarse")
-    cb = _pq_codebook_rows(spark.read.parquet(f"{path}/codebooks"))
+    coarse = read_stored(spark, f"{path}/coarse")
+    cb = _pq_codebook_rows(read_stored(spark, f"{path}/codebooks"))
     coarse_rows = [(r["cid"], list(r["cent"])) for r in coarse.collect()]
     if not cb or not coarse_rows:
         # an index built from an empty corpus stores empty tables;
@@ -3073,7 +3074,7 @@ def ivfpq_res_search_index(
     )
     qlut = _pq_qlut(qframe, cb, dim, query_id_col)
     densq, subs = _res_densq_frame(spark, coarse_rows, cb, dim)
-    idx = spark.read.parquet(f"{path}/codes").filter(F.col("cid").isin(probe_cids))
+    idx = read_stored(spark, f"{path}/codes").filter(F.col("cid").isin(probe_cids))
     if where is not None:
         idx = idx.filter(F.expr(where))
     scored = (

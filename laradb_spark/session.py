@@ -56,9 +56,9 @@ def get_spark(app_name: str = "laradb-spark", shuffle_partitions: int | None = N
         # SCALE GUARD (VERDICT r15 #3): an SHJ build side cannot spill, so
         # a skewed/misestimated partition OOMs where SMJ would have
         # spilled. tools/audit_plans.py flags every SHJ in every audited
-        # plan (currently zero — the conf is inert on these shapes); the
-        # documented OOM fallback is re-enabling SMJ via
-        # SPARK_GRAFT_PREFER_SMJ=1 below, no code change needed.
+        # plan (PLANS.md lists one, in lang_classifier); the documented
+        # OOM fallback is re-enabling SMJ via SPARK_GRAFT_PREFER_SMJ=1
+        # below, no code change needed.
         .config(
             "spark.sql.join.preferSortMergeJoin",
             "true" if os.environ.get("SPARK_GRAFT_PREFER_SMJ") == "1" else "false",

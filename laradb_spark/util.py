@@ -248,17 +248,28 @@ def _sql_double_lit(x, t: str) -> str:
     return f"CAST('{x!r}' AS {t})"
 
 
+#: Bit width of each integer type literal_frame renders, by DDL name.
+_INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
+
+
 def _sql_cell(v, dt) -> str:
     """Render one Python value as a type-exact Spark SQL literal
     expression. Raises _UnsupportedLiteral for types literal_frame does
-    not cover (caller falls back to createDataFrame)."""
+    not cover and for integers outside their type's range (caller falls
+    back to createDataFrame)."""
     from pyspark.sql import types as T
 
     ddl = dt.simpleString()
     if v is None:
         return f"CAST(NULL AS {ddl})"
-    if isinstance(dt, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)):
-        return f"CAST({int(v)} AS {ddl})"
+    bits = _INT_BITS.get(ddl)
+    if bits is not None:
+        # out of range: CAST would wrap silently (300 → tinyint 44);
+        # createDataFrame rejects it instead
+        i = int(v)
+        if not -(1 << (bits - 1)) <= i < (1 << (bits - 1)):
+            raise _UnsupportedLiteral(ddl)
+        return f"CAST({i} AS {ddl})"
     if isinstance(dt, (T.DoubleType, T.FloatType)):
         return _sql_double_lit(v, ddl)
     if isinstance(dt, T.BooleanType):
@@ -277,8 +288,17 @@ def _sql_cell(v, dt) -> str:
 # Above this many cells the VALUES string's parse cost outgrows the
 # parallelize job it replaces; bounded driver-literal frames in the
 # query paths (query terms, probe sets, codebooks, offsets) sit far
-# below it.
+# below it. Every array element counts as a cell: a probe, centroid or
+# codebook row carries a dim-sized vector.
 LITERAL_FRAME_MAX_CELLS = 50_000
+
+
+def _n_cells(v) -> int:
+    """Cells a row or value adds to a VALUES body: 1 per scalar, 1 per
+    array element."""
+    if isinstance(v, (list, tuple)):
+        return max(1, sum(_n_cells(e) for e in v))
+    return 1
 
 
 def literal_frame(spark, rows, schema) -> DataFrame:
@@ -305,10 +325,11 @@ def literal_frame(spark, rows, schema) -> DataFrame:
     a semantics change."""
     from pyspark.sql.types import StructType
 
+    rows = list(rows)
     try:
         st = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
         n_cols = len(st.fields)
-        if n_cols == 0 or (max(len(rows), 1) * n_cols) > LITERAL_FRAME_MAX_CELLS:
+        if n_cols == 0 or sum(map(_n_cells, rows)) > LITERAL_FRAME_MAX_CELLS:
             return spark.createDataFrame(rows, schema)
         if any("`" in f.name for f in st.fields):
             return spark.createDataFrame(rows, schema)
@@ -329,6 +350,62 @@ def literal_frame(spark, rows, schema) -> DataFrame:
         return spark.sql(f"SELECT {names} FROM VALUES {body} AS t({cols})")
     except Exception:
         return spark.createDataFrame(rows, schema)
+
+
+#: path → (directory identity, StructType) for ``read_stored``. Holds
+#: schemas only: never a DataFrame, never a file listing. Entries are
+#: replaced whole, so two threads racing on one path at worst both infer.
+_STORED_SCHEMAS: dict = {}
+
+
+def _dir_identity(path: str):
+    """``(st_dev, st_ino, st_mtime_ns)`` of a stored table's directory,
+    or None when ``os.stat`` cannot see it (a missing path, or a URI
+    whose scheme is not ``file:``)."""
+    import os
+    from urllib.parse import urlparse
+
+    u = urlparse(path)
+    if u.scheme == "file" and u.netloc in ("", "localhost"):
+        local = u.path
+    elif u.scheme == "":
+        local = path
+    else:
+        return None
+    try:
+        st = os.stat(local)
+    except OSError:
+        return None
+    return (st.st_dev, st.st_ino, st.st_mtime_ns)
+
+
+def read_stored(spark, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` for a table of a stored index layout,
+    without the per-call schema-inference job.
+
+    A stored layout's schema is fixed when the index is built (the
+    paper's explicit schemas), but a bare ``spark.read.parquet`` runs a
+    footer-reading Spark job on every call to rediscover it. The first
+    read of ``path`` infers the schema; later reads hand it to
+    ``spark.read.schema(...)``, which skips inference. Spark still lists
+    the files on every call, so files appended since the last read show
+    up in the next one.
+
+    The memoized schema is tied to the directory's identity (device,
+    inode, mtime from one ``os.stat``). Every rewrite the library does —
+    an overwrite rebuild, a rename-aside swap, a compaction — changes
+    that identity, and the next read infers the schema again. A path
+    ``os.stat`` cannot see is read exactly as before, so a missing or
+    non-local path raises or resolves as ``spark.read.parquet`` does."""
+    ident = _dir_identity(path)
+    if ident is None:
+        return spark.read.parquet(path)
+    hit = _STORED_SCHEMAS.get(path)
+    if hit is not None and hit[0] == ident:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _STORED_SCHEMAS[path] = (ident, df.schema)
+    return df
 
 
 # NEGATIVE RESULT (r16), recorded so it is not retried: eagerly

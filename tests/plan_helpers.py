@@ -36,3 +36,19 @@ def scan_num_files(df, col_marker: str) -> int:
     """numFiles metric of the executed FileScan outputting ``col_marker``
     (post-execution, so partition pruning is reflected)."""
     return find_file_scan(df, col_marker).metrics().apply("numFiles").value()
+
+
+def count_jobs(spark, fn):
+    """Run ``fn()`` and return ``(its result, the number of Spark jobs it
+    launched)``, counted through a job group of this call alone."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

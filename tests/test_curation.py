@@ -691,6 +691,36 @@ def test_multiclass_classifier_matches_dense_python_replay(spark):
     assert "unknown" in totals
 
 
+def test_multiclass_classifier_keeps_integer_labels(spark):
+    """class_stats with integer labels classify like their string twins,
+    and pred_label keeps the integer type; ties break to the smallest
+    label in integer order (2 < 10, where the strings give '10')."""
+    from laradb_spark.pipelines.curation import (
+        multiclass_classify,
+        train_multiclass_weights,
+    )
+
+    train = spark.createDataFrame(
+        [(1, "aa bb aa", "2"), (2, "cc dd cc", "10"), (3, "ee ff", "7")],
+        "doc_id long, text string, lang string",
+    )
+    test = spark.createDataFrame(
+        [(10, "aa bb"), (11, "cc dd dd"), (12, "zz yy")], "doc_id long, text string"
+    )
+    w, st = train_multiclass_weights(train)
+    as_int = F.col("label").cast("int")
+    out = multiclass_classify(
+        test, w.withColumn("label", as_int), st.withColumn("label", as_int)
+    )
+    assert out.schema["pred_label"].dataType.simpleString() == "int"
+    got = {r.doc_id: (r.pred_label, r.score_ppm) for r in out.collect()}
+    want = {r.doc_id: (r.pred_label, r.score_ppm) for r in multiclass_classify(test, w, st).collect()}
+    assert {d: (int(lab), s) for d, (lab, s) in want.items() if d != 12} == {
+        d: v for d, v in got.items() if d != 12
+    }
+    assert got[12] == (2, want[12][1]) and want[12][0] == "10"
+
+
 def test_decontaminate_fuzzy_drops_near_dups_only(spark):
     """The fuzzy drop path genuinely fires: a training doc that is a
     lightly-edited copy of a bench doc (high 3-gram Jaccard, but NOT an
