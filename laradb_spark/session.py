@@ -55,10 +55,12 @@ def get_spark(app_name: str = "laradb-spark", shuffle_partitions: int | None = N
         # Identical results — join strategy never changes values.
         # SCALE GUARD (VERDICT r15 #3): an SHJ build side cannot spill, so
         # a skewed/misestimated partition OOMs where SMJ would have
-        # spilled. tools/audit_plans.py flags every SHJ in every audited
-        # plan (PLANS.md lists one, in lang_classifier); the documented
-        # OOM fallback is re-enabling SMJ via SPARK_GRAFT_PREFER_SMJ=1
-        # below, no code change needed.
+        # spilled. The default test pass enforces it: test_registered_query
+        # fails any registered query whose plan has an SHJ outside
+        # check_correctness.SHJ_ALLOWED, where each entry names the
+        # aggregate bounding its build side (lang_classifier today); the
+        # documented OOM fallback is re-enabling SMJ via
+        # SPARK_GRAFT_PREFER_SMJ=1 below, no code change needed.
         .config(
             "spark.sql.join.preferSortMergeJoin",
             "true" if os.environ.get("SPARK_GRAFT_PREFER_SMJ") == "1" else "false",

@@ -57,245 +57,6 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.withColumn("ts_ms", ts_ms)
 
 
-# The driver oracles only the FIRST 50 registered queries per round, in
-# registration order. Rotate so every query earns a green driver row across
-# rounds: queries with no driver row yet (r01 capped them out) and queries
-# whose plan/SQL changed this round come first; long-green unchanged queries
-# fill the tail and fall out of the window harmlessly.
-_PRIORITY = [
-    # --- r16 window head (the driver oracles the FIRST 50) ------------------
-    # (a) the 8 rows r15 pinned to this window's front (4 r11-era
-    # leftovers + 2 r15-behavior-changed + 2 r15-new with no driver row):
-    #     token_apportionment topk_parts_per_brand tumbling_event_stats
-    #     user_retention_cohorts bm25_maintenance_cycle bm25_prf_topk
-    #     decon_hashscreen sketch_source_census
-    # (b) the PQ/IVF-PQ family whose score expressions were rewritten in
-    # r15 (F.expr LUTs) and whose trainer/probe machinery changed again
-    # in r16 (driver-side mean assembly, shared training pin, collected
-    # probes) — VERDICT r15 #5 requires their driver rows this round:
-    #     ann_pq_topk ann_pq_recall ann_ivfpq_topk ann_ivfpq_res_topk
-    #     ann_ivfpq_res_recall ann_probe_sweep
-    # (c) every other query whose construction changed in r16 (trainer
-    # mean assembly: ivf/knn/semantic/maintenance; persisted bounded
-    # aggregates: kn/bigram/dsir/quality; collected class stats:
-    # lang_*; literal-frame front doors and spend quartiles; bm25
-    # literal query frames: bm25_topk, hybrid_rrf_topk) — all
-    # checker-certified at sf0.01 on landing (206/206 green);
-    # (d) fill to exactly 50 with the stalest remaining evidence
-    # (r12-era rows, staleness order). ---------------------------------------
-    "token_apportionment",
-    "topk_parts_per_brand",
-    "tumbling_event_stats",
-    "user_retention_cohorts",
-    "bm25_maintenance_cycle",
-    "bm25_prf_topk",
-    "decon_hashscreen",
-    "sketch_source_census",
-    "ann_pq_topk",
-    "ann_pq_recall",
-    "ann_ivfpq_topk",
-    "ann_ivfpq_res_topk",
-    "ann_ivfpq_res_recall",
-    "ann_probe_sweep",
-    "ann_ivf_topk",
-    "knn_label_noise_ivf_auto",
-    "ivf_maintenance_cycle",
-    "semantic_dedup",
-    "semantic_dedup_fast",
-    "hard_negatives",
-    "kn_lm_score",
-    "bigram_lm",
-    "dsir_importance",
-    "quality_classifier",
-    "quality_classifier_eval",
-    "lang_classifier",
-    "lang_confusion",
-    "hybrid_rrf_topk",
-    "bm25_topk",
-    "customer_spend_quartiles",
-    "raco_front_door_q",
-    "sql_front_door_q",
-    "ann_ivf_list_skew",
-    "ann_ivf_filtered",
-    "dedup_lsh_recall",
-    "wordpiece_stats",
-    "unigram_stats",
-    "bpe_byte_token_count_fast",
-    "bpe_fertility",
-    "token_shard_stats",
-    "shard_decode_roundtrip",
-    "approx_stats",
-    "c4_line_clean",
-    "corpus_frequent_ngrams",
-    "cross_source_dup_matrix",
-    "decon_fuzzy",
-    "dedup_ngram_jaccard",
-    "doc_boilerplate_ppm",
-    "fuzzy_cross_batch",
-    "heavy_hitters",
-    # --- front of the r17 window (test_registry pins this allocation):
-    # the next-stalest r12-era rows the 50-slot budget could not fit --------
-    "ngram_diversity",
-    "q19_disjunctive_revenue",
-    "all_account_balances",
-    "alpha_mixture",
-    "asof_last_order",
-    "bm25_topk_fast",
-    "bpe_token_apportionment",
-    "bpe_token_count",
-    # --- tail: fresher rows, staleness-ordered (remaining r12/r13/r14-era
-    # rows in prior order, then the r15-window greens last) -----------------
-    "ccnet_lm_buckets",
-    "corpus_integrity",
-    "corpus_line_dedup",
-    "cube_order_stats",
-    "customer_order_counts_left",
-    "d4m_set_filter",
-    "graph_brand_degree",
-    "graph_brand_gram",
-    "knn_label_noise",
-    "lara_cross_grid",
-    "lara_union_quarters",
-    "line_profile",
-    "monthly_revenue",
-    "multimodal_features",
-    "nation_presence_trio",
-    "nation_region_full_outer",
-    "order_price_histogram",
-    "order_price_percentiles",
-    "pagerank_supplier_part",
-    "purchase_attribution",
-    "redact_pii_stats",
-    "salted_lineitem_stats",
-    "shuffle_shards_q",
-    "source_datacard",
-    "source_drift_tv",
-    "top_prices_with_ties",
-    "train_val_split_stats",
-    "trim_length_outliers",
-    "twap_value_by_user_type",
-    "unimax_allocation",
-    "value_quantiles_by_type",
-    "value_spikes_by_type",
-    "value_variance_by_type",
-    "vocab_coverage",
-    "ann_brute_force_fast",
-    "ann_hamming_topk",
-    "ann_sq8_fast",
-    "bpe_token_count_auto",
-    "cap_docs_per_source",
-    "chunk_documents_q",
-    "corpus_clean",
-    "curation_funnel",
-    "domain_caps",
-    "html_extract",
-    "mixture_materialize",
-    "order_status_pivot",
-    "orders_within_30_days",
-    "q10_returned_items",
-    "q11_nation_balance_share",
-    "q12_priority_buckets",
-    "q13_order_count_distribution",
-    "q14_promo_share",
-    "q15_top_supplier",
-    "q16_supplier_count_by_part",
-    "q18_large_volume_customers",
-    "q20_promo_suppliers",
-    "q21_sole_fault_suppliers",
-    "q22_idle_rich_customers",
-    "q2_cheapest_part_per_type",
-    "q6_forecast_revenue",
-    "q7_nation_volume",
-    "q8_market_share",
-    "q9_profit_by_nation_year",
-    "repeat_customers_96_97",
-    "small_quantity_revenue",
-    "status_except_all",
-    "suppliers_without_recent_sales",
-    "text_replace_map",
-    "unpivot_order_measures",
-    "url_canonicalize",
-    "url_dedup",
-    "customer_merge_upsert",
-    "customer_order_gaps",
-    "customers_without_orders",
-    "dedup_components",
-    "dedup_exact",
-    "dedup_keep_representatives",
-    "dedup_lsh_jaccard",
-    "dedup_prefix_jaccard",
-    "dedup_rate_by_source",
-    "embedding_gram",
-    "event_funnel",
-    "events_daily_pivot",
-    "events_daily_users",
-    "events_dow_hour_heatmap",
-    "events_json_stats",
-    "forward_fill_hourly",
-    "fuzzy_part_pairs",
-    "lara_matmul_event_gram",
-    "lara_union_max",
-    "lara_union_revenue",
-    "lara_wordcount",
-    "lara_wordcount_py",
-    "orders_quality_report",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "revenue_share_by_nation",
-    "rollup_returns",
-    "running_customer_totals",
-    "scd2_customer_segments",
-    "sensor_covariance_events",
-    "session_window_stats",
-    "sessionize_events",
-    "bm25_prf_serve",
-    "sliding_event_stats",
-    "tfidf_top_terms",
-    "ann_brute_force",
-    "ann_lsh_multiprobe",
-    "ann_lsh_topk",
-    "ann_sq8_topk",
-    "bpe_byte_token_count",
-    "bpe_contraction_parity",
-    "contamination_report",
-    "decontaminate_docs",
-    "dedup_embedding",
-    "dedup_minhash_lsh",
-    "dedup_minhash_lsh_fast",
-    "dedup_simhash",
-    "dedup_simhash_fast",
-    "dup_span_census",
-    "event_transitions",
-    "event_trigram_paths",
-    "gopher_funnel",
-    "gopher_quality",
-    "grouping_sets_revenue",
-    "knn_label_noise_ivf",
-    "label_centroid_outliers",
-    "mad_outliers_by_type",
-    "median_value_by_type",
-    "mix_sources_counts",
-    "moments_by_type",
-    "monthly_revenue_mom",
-    "orders_segment_at_day",
-    "pack_sequences_q",
-    "semantic_decon",
-    "semantic_decon_fast",
-    "span_source_matrix",
-    "split_leakage",
-    "strip_dup_spans",
-    "supplier_copart_triangles",
-    "text_fingerprint",
-    "text_langid",
-    "text_normalize",
-    "text_quality",
-    "text_repetition",
-    "text_token_counts",
-]
-
-
 def all_specs() -> dict[str, QuerySpec]:
     from . import (
         advanced_q,
@@ -315,9 +76,4 @@ def all_specs() -> dict[str, QuerySpec]:
         if overlap:
             raise ValueError(f"duplicate query names: {sorted(overlap)}")
         specs.update(mod.QUERIES)
-    missing = [n for n in _PRIORITY if n not in specs]
-    if missing:
-        raise ValueError(f"_PRIORITY names not registered: {missing}")
-    ordered = {name: specs.pop(name) for name in _PRIORITY}
-    ordered.update(specs)
-    return ordered
+    return specs

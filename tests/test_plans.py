@@ -1,12 +1,23 @@
 """Plan-quality audits: assert the physical plans are the plans we want at
 scale — pushdown reaches the scan, column pruning works, small dims
 broadcast, partial aggregation happens, no unexpected cartesian products.
-(The '.explain and iterate' discipline, mechanized.)"""
+(The '.explain and iterate' discipline, mechanized.) ``test_registered_query``
+is the registry's correctness gate: every registered query against its
+DuckDB oracle and the plan invariants, in the default pass."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from laradb_spark.operators.skew import salted_agg, salted_join_hot_keys
+from laradb_spark.workloads import all_specs
+from tools.check_correctness import (
+    ON_EDITED_FIXTURE,
+    check_query,
+    oracle_connection,
+    write_edited_fixture,
+)
+
+SPECS = all_specs()
 
 
 def _plan(df) -> str:
@@ -244,25 +255,6 @@ def test_grouped_rank_small_frame_route_parity(spark, monkeypatch, tmp_path):
     )
 
 
-@pytest.mark.slow  # driver-verify gate (r16): long-tail; run with -m ""
-def test_no_query_plans_cartesian(spark, sfq):
-    """Sweep EVERY registered query: no CartesianProduct in any physical
-    plan (broadcast scalar/tiny cross-joins lower to
-    BroadcastNestedLoopJoin, which is fine). lara_cross_grid is the one
-    intentional cross product (Lara join on disjoint key sets)."""
-    qs, sf = sfq
-    offenders = []
-    for name, fn in qs.items():
-        if name == "lara_cross_grid":
-            continue
-        try:
-            if "CartesianProduct" in _plan(fn(spark, sf)):
-                offenders.append(name)
-        except Exception as e:  # building the plan must not fail either
-            offenders.append(f"{name} (plan build failed: {e})")
-    assert not offenders, offenders
-
-
 def test_fan_out_gates_on_splits_and_size(spark, tmp_path):
     """util.fan_out fires ONLY in the few-splits regime and sizes the
     fan-out to the work: a KB-scale scan stays at 1 task (worker overhead
@@ -299,29 +291,6 @@ def test_fan_out_gates_on_splits_and_size(spark, tmp_path):
 
     wide = big.repartition(spark.sparkContext.defaultParallelism)
     assert fan_out(wide, CPU_HEAVY) is wide
-
-
-@pytest.mark.slow  # driver-verify gate (r16): long-tail; run with -m ""
-def test_no_query_emits_decimal_columns(spark, sfq):
-    """Value-discipline rule (workloads/__init__ docstring), mechanized:
-    NO registered query may emit a DecimalType column. Spark 4 types
-    decimal-literal arithmetic (SUM(bigint)/100.0) as decimal(p,s) while
-    DuckDB returns DOUBLE — numerically identical values then stringify
-    differently under the driver's hash (the r5 sql_front_door_q red).
-    The fix at any offending site is CAST(... AS DOUBLE)."""
-    qs, sf = sfq
-    offenders = []
-    for name, fn in qs.items():
-        try:
-            schema = fn(spark, sf).schema
-        except Exception as e:
-            offenders.append(f"{name} (schema build failed: {e})")
-            continue
-        decs = [f.name for f in schema.fields
-                if f.dataType.typeName().startswith("decimal")]
-        if decs:
-            offenders.append(f"{name}: {decs}")
-    assert not offenders, offenders
 
 
 def test_join_strategy_hints(spark, sf_dir):
@@ -362,96 +331,50 @@ def test_embedding_gram_shuffles_cells_not_rows(spark, sfq):
     assert df.count() == 64 * 65 // 2
 
 
-# Queries ALLOWED an Exchange SinglePartition: every one is a bounded
-# one-row/scalar flow (global scalar aggregates, ≤50-row windows, bounded
-# month/grid series) — the single partition carries rows counted in ones,
-# never data-sized input. A query appearing here must document why.
-SINGLE_PARTITION_ALLOWED = {
-    "ann_ivf_list_skew",       # 1-row member-total broadcast; the count agg
-                               # itself is a distributed groupBy(cid)
-    "approx_stats",            # one-row sketch aggregate
-    "bm25_topk",               # query-term/stats scalar flows
-    "bm25_topk_fast",          # same scalar flows (n_docs/n_toks 1-row agg,
-                               # query-terms-sized df) over the Arrow twin
-    "hybrid_rrf_topk",         # contains bm25_topk verbatim (its scalar
-                               # flows above); the fusion itself is
-                               # (queries×k)-bounded + grouped_rank
-    "bm25_prf_topk",           # TWO bm25 scalar flows by construction
-                               # (both passes aggregate the 1-row
-                               # n_docs/n_toks stats + broadcast the
-                               # query-terms-sized frames); the corpus-
-                               # sized rankings use grouped_rank, the
-                               # bounded expansion selection a window
-    "kn_lm_score",             # 1-row bigram-type-count broadcast (the
-                               # heavy_hitters E/N-totals shape); every
-                               # corpus-sized stat is a distributed groupBy
-    "dedup_lsh_recall",        # deliberate 1-row eval report (counters
-                               # aggregate pair frames that are themselves
-                               # the production distributed paths)
-    "quality_classifier",      # trainer totals: 1-row P/N aggregate over the
-                               # 4096-bucket histogram spine
-    "quality_classifier_eval", # same trainer flows + a 2-group report agg
-    "corpus_integrity",        # 10-row rule report: two one-pass conditional-
-                               # sum scalar aggregates (operators.quality),
-                               # partials map-side; final agg is 1 row/side
-    "bpe_token_apportionment", # sources-sized Hamilton tail (1-row total +
-                               # whole-frame rank), same as token_apportionment
-    "corpus_clean",            # scalar report row
-    "dsir_importance",         # 1-row T/R totals over the 4096-bucket hist
-    "gopher_funnel",           # 1-row conditional-count aggregate → 4-row stack
-    "split_leakage",           # two 1-row distinct-set counts → one summary row
-    "token_apportionment",     # sources-sized frame: 1-row total + whole-frame rank
-    "alpha_mixture",           # sources-sized frame only: 1-row token total +
-                               # whole-frame window over ~20 sources (curation.py)
-    "unimax_allocation",       # closed-form waterfill over the sources-sized
-                               # frame: 1-row totals + whole-frame sort (~20 rows)
-    "mixture_materialize",     # runs the unimax waterfill above verbatim (same
-                               # sources-sized windows + 1-row totals); the
-                               # materialization itself is broadcast+explode,
-                               # map-only (curation.materialize_mixture)
-    "heavy_hitters",           # 1-row E/N totals aggregate; the candidate merge
-                               # itself is a distributed groupBy("tok") (text.py)
-    "shard_decode_roundtrip",  # head-segment ownership fill: ignorenulls
-                               # last_value over PACK order — rows ∝ packs
-                               # (tokens/context_len), never tokens; a 100 TB
-                               # audit would range-partition it like the
-                               # packing cumsum (shards.reassemble docstring)
-    "curation_funnel",         # deliberate 1-row global per-stage survivor
-                               # aggregates, 4-row report (pipelines_q.py)
-    "event_funnel",            # three scalar counts
-    "forward_fill_hourly",     # bounded time-grid series
-    "monthly_revenue_mom",     # ~83-month aggregated series window
-    "pagerank_supplier_part",  # per-iteration scalar N
-    "q11_nation_balance_share",
-    "q14_promo_share",
-    "q15_top_supplier",
-    "q19_disjunctive_revenue",
-    "q22_idle_rich_customers",
-    "q6_forecast_revenue",     # single-row revenue scalar
-    "revenue_share_by_nation", # broadcast scalar denominator
-    "sensor_covariance_events",  # scalar N broadcast
-    "small_quantity_revenue",
-    "source_drift_tv",         # one-row global token total
-    "supplier_copart_triangles",  # scalar triangle count
-    "tfidf_top_terms",         # bounded top-set flow
-    "vocab_coverage",          # 50-row window by construction
-}
+@pytest.fixture(scope="module")
+def edited_sf_dir(sf_dir, tmp_path_factory):
+    return write_edited_fixture(sf_dir, str(tmp_path_factory.mktemp("edited_fixture")))
 
 
-@pytest.mark.slow  # driver-verify gate (r16): long-tail; run with -m ""
-def test_no_unexpected_single_partition_exchanges(spark, sfq):
-    """Sweep EVERY query plan: an Exchange SinglePartition outside the
-    documented bounded-scalar allowlist means a new query funnels
-    data-sized input through one task — the 100× parallelism collapse the
-    two-phase ranking work exists to prevent."""
+@pytest.fixture(scope="module")
+def oracle_cons(sf_dir, edited_sf_dir):
+    cons = {d: oracle_connection(d) for d in (sf_dir, edited_sf_dir)}
+    yield cons
+    for con in cons.values():
+        con.close()
+
+
+@pytest.mark.parametrize("name", list(SPECS))
+def test_registered_query(spark, sfq, edited_sf_dir, oracle_cons, name):
+    """Build the query once: its plan passes the invariants (no cartesian
+    product, single-partition exchange or shuffled-hash join outside the
+    allowlists, no decimal column) and its non-empty result hash-matches
+    the DuckDB oracle."""
     qs, sf = sfq
-    offenders = []
-    for name, fn in qs.items():
-        try:
-            plan = _plan(fn(spark, sf))
-        except Exception as e:
-            offenders.append(f"{name} (plan build failed: {e})")
-            continue
-        if "Exchange SinglePartition" in plan and name not in SINGLE_PARTITION_ALLOWED:
-            offenders.append(name)
-    assert not offenders, offenders
+    if name in ON_EDITED_FIXTURE:
+        sf = edited_sf_dir
+    problems = check_query(oracle_cons[sf], name, qs[name](spark, sf), SPECS[name][1])
+    assert not problems, f"{name}: {problems}"
+
+
+def test_check_query_reports_each_fault(spark):
+    """The gate itself: check_query passes a matching frame and reports a
+    wrong oracle value, a cartesian plan, a decimal column and an empty
+    result — a comparator that returned [] for everything would pass
+    every registered query."""
+    import duckdb
+
+    con = duckdb.connect()
+    df = spark.createDataFrame([(1, 2.5), (2, 4.0)], "k long, v double")
+    sql = "SELECT * FROM (VALUES (1::BIGINT, 2.5::DOUBLE), (2, 4.0)) t(k, v)"
+    assert check_query(con, "probe", df, sql) == []
+    assert "value-hash mismatch" in check_query(con, "probe", df, sql.replace("4.0", "4.5"))
+    cross = df.hint("shuffle_replicate_nl").crossJoin(df.select(F.col("k").alias("k2")))
+    assert "CartesianProduct" in _plan(cross)
+    cross_sql = f"SELECT a.k, a.v, b.k AS k2 FROM ({sql}) a CROSS JOIN ({sql}) b"
+    assert check_query(con, "probe", cross, cross_sql) == ["plan has a CartesianProduct"]
+    assert check_query(con, "lara_cross_grid", cross, cross_sql) == []
+    dec = df.select("k", F.col("v").cast("decimal(10,2)").alias("v"))
+    assert any("decimal" in p for p in check_query(con, "probe", dec, sql))
+    assert any("empty" in p for p in check_query(con, "probe", df.limit(0), sql + " LIMIT 0"))
+    con.close()

@@ -1,67 +1,7 @@
 """Workload-registry invariants the driver contract depends on."""
 
-from laradb_spark.workloads import _PRIORITY, all_specs
+from laradb_spark.workloads import all_specs
 
-DRIVER_ORACLE_WINDOW = 50  # the driver oracles only the first N registered
-
-
-def test_priority_order_is_registration_order():
-    # _PRIORITY is the FULL registration ordering (r3+): the first
-    # DRIVER_ORACLE_WINDOW entries are exactly the queries the driver
-    # oracles this round, so registration must follow it verbatim.
-    names = list(all_specs())
-    assert names[: len(_PRIORITY)] == _PRIORITY
-
-
-def test_changed_queries_inside_oracle_window():
-    # Window policy: the driver oracles 50 queries/round, so changed
-    # queries are budgeted against stale-evidence rotations. Priority
-    # order: (1) queries with no driver row yet and queries whose
-    # BEHAVIOR changed this round -> this round's window; (2) the stalest
-    # green rows -> fill the window; (3) the next-stalest rows -> pinned to
-    # the FRONT of the next window. This test pins the current allocation
-    # so a registry edit can't silently drop a changed query out of both
-    # windows.
-    changed_in_window = {
-        # r16: (a) the 8 rows r15 pinned to this window's front (4 r11-era
-        # leftovers + 2 r15-behavior-changed + 2 r15-new)...
-        "token_apportionment", "topk_parts_per_brand",
-        "tumbling_event_stats", "user_retention_cohorts",
-        "bm25_maintenance_cycle", "bm25_prf_topk",
-        "decon_hashscreen", "sketch_source_census",
-        # ...(b) the PQ/IVF-PQ family (r15 F.expr LUT rewrite + r16
-        # trainer/probe restructure — VERDICT r15 #5)...
-        "ann_pq_topk", "ann_pq_recall", "ann_ivfpq_topk",
-        "ann_ivfpq_res_topk", "ann_ivfpq_res_recall", "ann_probe_sweep",
-        # ...(c) every other r16-changed construction (trainer mean
-        # assembly, persisted bounded aggregates, collected class stats,
-        # literal frames) — checker-certified 206/206 on landing
-        "ann_ivf_topk", "knn_label_noise_ivf_auto", "ivf_maintenance_cycle",
-        "semantic_dedup", "semantic_dedup_fast", "hard_negatives",
-        "kn_lm_score", "bigram_lm", "dsir_importance",
-        "quality_classifier", "quality_classifier_eval",
-        "lang_classifier", "lang_confusion", "hybrid_rrf_topk",
-        "bm25_topk", "customer_spend_quartiles",
-        "raco_front_door_q", "sql_front_door_q",
-    }
-    # r17 window front: the next-stalest r12-era rows the r16 budget
-    # could not fit.
-    next_window = {
-        "ngram_diversity", "q19_disjunctive_revenue",
-        "all_account_balances", "alpha_mixture", "asof_last_order",
-        "bm25_topk_fast", "bpe_token_apportionment", "bpe_token_count",
-    }
-    names = list(all_specs())
-    head = set(names[:DRIVER_ORACLE_WINDOW])
-    missing = changed_in_window - head
-    assert not missing, f"changed queries outside the driver window: {missing}"
-    next_slots = set(
-        names[DRIVER_ORACLE_WINDOW : DRIVER_ORACLE_WINDOW + len(next_window)]
-    )
-    assert next_window == next_slots, (
-        "the leftover r12-era rows must lead the r17 window: "
-        f"{next_window ^ next_slots}"
-    )
 
 def test_spec_shapes():
     specs = all_specs()

@@ -192,69 +192,3 @@ def test_stateful_idle_session_close(spark, tmp_path):
         assert (r.n_events, r.sum_value) == (2, 5.0)
     finally:
         q.stop()
-
-
-def test_transform_with_state_v2_running_total(spark, tmp_path):
-    """Spark-4 arbitrary-state v2 (transformWithStateInPandas): per-key
-    running totals accumulate across micro-batches and the final state
-    equals the batch groupBy — the v2 twin of the applyInPandasWithState
-    op. Requires the RocksDB state store provider AND protobuf (the v2
-    Python state server imports google.protobuf; absent in this image →
-    skip, not fail — see streaming/stateful_v2.py docstring)."""
-    pytest.importorskip("google.protobuf")
-    import os
-    import time
-
-    from pyspark.sql import types as T
-
-    from laradb_spark.streaming.stateful_v2 import running_totals_v2
-
-    schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("value", T.LongType()),
-    ])
-    src = str(tmp_path / "in")
-    os.makedirs(src)
-    spark.createDataFrame([(1, 10), (2, 5)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    time.sleep(1.1)
-    spark.createDataFrame([(1, 7), (3, 2)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        out = running_totals_v2(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("twsv2_out")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        rows = spark.sql("SELECT * FROM twsv2_out").collect()
-        # last emission per key = final running totals
-        final = {}
-        for r in rows:
-            final[r.key] = (r.running_sum, r.n_seen)
-        assert final["1"] == (17, 2)   # 10 then +7 across batches
-        assert final["2"] == (5, 1)
-        assert final["3"] == (2, 1)
-        # key 1 appears in both batches → two emissions, increasing
-        k1 = sorted((r.running_sum, r.n_seen) for r in rows if r.key == "1")
-        assert k1 == [(10, 1), (17, 2)]
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
