@@ -159,7 +159,8 @@ def decontaminate_fuzzy(
     Physical shape — nothing is all-pairs, and the 100 TB corpus never
     shuffles its text:
       * both sides get MinHash band buckets (``dedup.minhash_band_buckets``
-        — staged md5 projections, the interpreted-HOF lesson);
+        — md5 shingle hashes JVM-side, NumPy signature kernel; each side's
+        buckets are read once, so each signature is computed once);
       * the BENCHMARK side is eval-set-sized, so its bucket table
         broadcasts; candidates = train docs sharing any (band, band-hash)
         bucket with a bench doc — a broadcast equi-join on the train

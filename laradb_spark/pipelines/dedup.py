@@ -9,7 +9,8 @@ fixed literal (a,b) pairs over a >2^32 prime, so oracles can replay them.
 Scale design:
   * exact dedup — one hash-shuffle on the digest; at 100 TB shuffle only
     (digest, id), never the payload.
-  * minhash signatures — map-only (higher-order expressions, no UDF);
+  * minhash signatures — map-only (md5 shingle hashes JVM-side, the
+    permutation mins in one NumPy pandas_udf);
     LSH banding turns all-pairs O(n²) into a groupBy on (band, hash) —
     the shuffle key is the band bucket, and skewed buckets (boilerplate
     docs) are exactly what AQE skew-split handles.
@@ -54,7 +55,7 @@ def _shingles_of(toks: Column, n: int) -> Column:
     """Distinct shingle windows over an ALREADY-STAGED token array — the
     shared builder behind ``word_shingles`` (which binds the split) and
     the staged-projection form the Python-UDF consumers need (see
-    ``minhash_band_buckets_vectorized``)."""
+    ``minhash_signatures``)."""
     cnt = F.size(toks)
     idx = F.sequence(F.lit(1), F.greatest(cnt - n + 1, F.lit(1)))
     return F.array_distinct(
@@ -187,7 +188,7 @@ def ngram_jaccard_pairs(
     O(pairs-sharing-a-shingle): fine for verification / small tables; the
     100 TB path is minhash_lsh_pairs → this computation on candidates only.
     """
-    df = fan_out(df)  # heavy shingle map — see minhash_band_buckets
+    df = fan_out(df)  # heavy shingle map — see minhash_signatures
     sh = df.select(
         F.col(id_col).alias("id"), F.explode(word_shingles(F.col(text_col), n)).alias("sh")
     )
@@ -242,7 +243,7 @@ def prefix_filter_jaccard_pairs(
     float mis-round can only lengthen the prefix (extra candidates),
     never shorten it (missed pairs).
     """
-    df = fan_out(df)  # heavy shingle map — see minhash_band_buckets
+    df = fan_out(df)  # heavy shingle map — see minhash_signatures
     sh = df.select(
         F.col(id_col).alias("id"), F.explode(word_shingles(F.col(text_col), n)).alias("sh")
     )
@@ -307,54 +308,51 @@ def prefix_filter_jaccard_pairs(
 
 # --- MinHash + LSH -----------------------------------------------------------
 
-def _perm(a: int, b: int):
-    # NB: closure factory, not default-arg lambdas — PySpark derives the
-    # higher-order-function arity from the Python signature.
-    return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME)
-
-
 def minhash_signature(hashes: Column, num_perm: int = NUM_PERM) -> Column:
     """array<long> MinHash signature over a pre-hashed shingle array.
 
-    Takes the *hashed* shingles (see ``shingle_hash``) rather than raw text:
-    the md5 stage must live in its own projection so it is evaluated once,
-    not once per permutation — higher-order functions run interpreted (no
-    whole-stage-codegen subexpression elimination), so a fused expression
-    tree would recompute the shingle hashing ``num_perm`` times (measured
-    ~40× slowdown).
+    Takes the *hashed* shingles (see ``shingle_hash``) rather than raw
+    text: the md5 stage stays JVM-side and only the 31-bit ints cross
+    Arrow. The signature itself is a NumPy pandas_udf: one broadcast
+    ``(a·h + b) mod P`` per row over the fixed (a, b, P) literals, int64
+    exact (a·h < 2^62, no overflow), so the oracle replays it. The
+    ``num_perm``-fold chain of interpreted higher-order functions it
+    replaced ran outside whole-stage codegen: 1.7× slower on the 10×
+    corpus (4-core host).
 
-    When the input is a bare column reference the ``num_perm`` transform
-    folds are built as ONE SQL string parsed JVM-side (``F.expr``): the
-    per-permutation Python-lambda construction was ~30 ms of py4j round
-    trips EACH — ~2 s of pure DRIVER time per signature call site, twice
-    that for the two-sided decontamination paths (measured r15, the
-    ``_pq_qlut`` precedent). The parsed tree is the same Catalyst
-    ``array_min(transform(...))`` with the same integer literals, so
-    signatures are bit-identical; non-trivial column expressions keep the
-    original construction."""
-    import re
+    ``hashes`` must be a staged column, never ``word_shingles``' bound
+    form (see its docstring): ``minhash_signatures`` stages the token
+    array first. A null or empty hash array gives a null signature.
+    Arrow UDF subtrees are not deduplicated by exchange reuse, so every
+    consumer of the result re-runs the kernel: consume it once (carry
+    ``sig`` through the band explode) or persist it."""
+    from pyspark.sql.types import ArrayType, LongType
 
-    name = None
-    try:
-        # ADVICE r15: only an UNRESOLVED attribute may take the SQL-string
-        # fast path — a bound Column (df['hs'] from one side of a
-        # self-join) also prints as a bare name, but rebuilding it as
-        # F.expr('`hs`') would lose the binding (AMBIGUOUS_REFERENCE or
-        # wrong-side resolution in two-sided plans).
-        if hashes._jc.node().getClass().getSimpleName() == "UnresolvedAttribute":
-            name = hashes._jc.toString()
-    except Exception:
-        pass
-    if name and re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
-        terms = ",".join(
-            f"array_min(transform(`{name}`,"
-            f" h -> ({_A[i]} * h + {_B[i]}) % {MINHASH_PRIME}))"
-            for i in range(num_perm)
-        )
-        return F.expr(f"array({terms})")
-    return F.array(
-        *[F.array_min(F.transform(hashes, _perm(_A[i], _B[i]))) for i in range(num_perm)]
-    )
+    a = np.asarray(_A[:num_perm], dtype=np.int64)[:, None]
+    b = np.asarray(_B[:num_perm], dtype=np.int64)[:, None]
+    # NB: the per-row broadcast-matmul loop was A/B'd against a batched
+    # concat + np.minimum.reduceat formulation (r15): reduceat's generic
+    # segment loop was >100× SLOWER than these per-row whole-matrix mins
+    # — keep the loop. r16 second negative result (VERDICT r15 #8): the
+    # padded-2D formulation (pad ragged rows into one dense batch×maxlen
+    # block, mask pads to MINHASH_PRIME, num_perm vectorized passes) was
+    # also SLOWER — 1.61 s vs 1.45 s avg over three alternating
+    # back-to-back dedup_minhash_lsh_fast A/B pairs: the per-row Python
+    # padding/mask assignments cost more than the per-row compute loop
+    # they replace at these shingle counts. Do not retry either batching.
+
+    @F.pandas_udf(ArrayType(LongType()))
+    def sig(hs: pd.Series) -> pd.Series:
+        out = []
+        for row in hs:
+            if row is None or len(row) == 0:
+                out.append(None)
+                continue
+            h = np.asarray(row, dtype=np.int64)[None, :]
+            out.append(((a * h + b) % MINHASH_PRIME).min(axis=1))
+        return pd.Series(out)
+
+    return sig(hashes)
 
 
 def _banded_explode(sig_name: str, num_perm: int, bands: int) -> Column:
@@ -362,7 +360,7 @@ def _banded_explode(sig_name: str, num_perm: int, bands: int) -> Column:
     sig[b·rows] .. )))))`` over a signature column — ONE JVM-parsed SQL
     string instead of bands × rows per-element py4j column construction
     (~1.6 s of driver time per call site at the 8×4 default; the
-    ``minhash_signature`` / ``_pq_qlut`` r15 lesson). Identical Catalyst
+    ``_pq_qlut`` r15 lesson). Identical Catalyst
     tree: Spark SQL ``sig[i]`` is 0-based extraction exactly like
     ``F.col("sig")[i]``, and named_struct ≡ F.struct with aliased
     fields."""
@@ -378,27 +376,51 @@ def _banded_explode(sig_name: str, num_perm: int, bands: int) -> Column:
     return F.expr(f"explode(array({','.join(parts)}))")
 
 
+def minhash_signatures(
+    df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text",
+    num_perm: int = NUM_PERM,
+) -> DataFrame:
+    """(id, sig array<long>): staged projections tokens → shingle md5
+    hashes → signature, the input of banding, signature storage and
+    agreement verification."""
+    # Heavy per-row map: fan the scan out to core count first — one
+    # small parquet file otherwise runs this whole stream in ONE task
+    # (util.fan_out). The token array is staged as a REAL column, not
+    # word_shingles' bind_once wrap, because the shingle hashes feed the
+    # signature pandas_udf (Spark 4.1 extraction bug, see word_shingles).
+    # Each stage's output is a named column, so the md5 array is computed
+    # once (CollapseProject does not inline non-cheap aliases).
+    toked = fan_out(df, CPU_HEAVY).select(
+        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("_toks")
+    )
+    hashed = toked.select(
+        "id",
+        F.transform(_shingles_of(F.col("_toks"), n), shingle_hash).alias("hs"),
+    )
+    return hashed.select("id", minhash_signature(F.col("hs"), num_perm).alias("sig"))
+
+
+def bands_of_signatures(
+    sigs: DataFrame, num_perm: int = NUM_PERM, bands: int = LSH_BANDS
+) -> DataFrame:
+    """(id, band, bh) from an (id, sig) frame: band b hashes signature
+    components [b·rows, (b+1)·rows) with md5."""
+    return sigs.select(
+        "id", _banded_explode("sig", num_perm, bands).alias("b")
+    ).select(
+        "id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
+    )
+
+
 def minhash_band_buckets(
     df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text",
     num_perm: int = NUM_PERM, bands: int = LSH_BANDS,
 ) -> DataFrame:
     """(id, band_idx, band_hash) — one row per band; docs sharing a
     (band_idx, band_hash) bucket are near-dup candidates."""
-    # Heavy per-row map (shingles → md5 → num_perm HOF folds): fan the
-    # scan out to core count first — one small parquet file otherwise
-    # runs this whole stream in ONE task (util.fan_out).
-    df = fan_out(df, CPU_HEAVY)
-    # Staged projections: shingles → md5 hashes → signature. Each stage's
-    # output is a named column, so the expensive md5 array is computed once
-    # (CollapseProject does not inline non-cheap aliases).
-    hashed = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(word_shingles(F.col(text_col), n), shingle_hash).alias("hs"),
+    return bands_of_signatures(
+        minhash_signatures(df, n, id_col, text_col, num_perm), num_perm, bands
     )
-    with_sig = hashed.select("id", minhash_signature(F.col("hs"), num_perm).alias("sig"))
-    return with_sig.select(
-        "id", _banded_explode("sig", num_perm, bands).alias("b")
-    ).select("id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
 
 
 # In-bucket pair expansion is quadratic in bucket size and happens inside
@@ -497,83 +519,6 @@ def minhash_lsh_pairs(
     buckets are capped out of the in-task expansion (see _bucket_pairs)."""
     return _bucket_pairs(
         minhash_band_buckets(df, n, id_col, text_col, num_perm, bands),
-        max_bucket=max_bucket,
-        oversize=oversize,
-    )
-
-
-def minhash_signature_vectorized(num_perm: int = NUM_PERM):
-    """Arrow-vectorized signature UDF: identical integer arithmetic to
-    minhash_signature (same (a,b,P) literals, int64 exact — a·h < 2^62, no
-    overflow) but computed with one NumPy matmul-style broadcast per batch.
-    ~10× the interpreted higher-order-expression path at sf0.1; the md5
-    shingle hashing stays JVM-side — only the 31-bit ints cross Arrow.
-    """
-    from pyspark.sql.types import ArrayType, LongType
-
-    a = np.asarray(_A[:num_perm], dtype=np.int64)[:, None]
-    b = np.asarray(_B[:num_perm], dtype=np.int64)[:, None]
-    # NB: the per-row broadcast-matmul loop was A/B'd against a batched
-    # concat + np.minimum.reduceat formulation (r15): reduceat's generic
-    # segment loop was >100× SLOWER than these per-row whole-matrix mins
-    # — keep the loop. r16 second negative result (VERDICT r15 #8): the
-    # padded-2D formulation (pad ragged rows into one dense batch×maxlen
-    # block, mask pads to MINHASH_PRIME, num_perm vectorized passes) was
-    # also SLOWER — 1.61 s vs 1.45 s avg over three alternating
-    # back-to-back dedup_minhash_lsh_fast A/B pairs: the per-row Python
-    # padding/mask assignments cost more than the per-row compute loop
-    # they replace at these shingle counts. Do not retry either batching.
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def sig(hs: pd.Series) -> pd.Series:
-        out = []
-        for row in hs:
-            if row is None or len(row) == 0:  # null text → null sig (parity
-                out.append(None)             # with array_min over null)
-                continue
-            h = np.asarray(row, dtype=np.int64)[None, :]
-            out.append(((a * h + b) % MINHASH_PRIME).min(axis=1))
-        return pd.Series(out)
-
-    return sig
-
-
-def minhash_band_buckets_vectorized(
-    df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text",
-    num_perm: int = NUM_PERM, bands: int = LSH_BANDS,
-) -> DataFrame:
-    """minhash_band_buckets with the NumPy signature kernel (bit-identical
-    output; the fast path for wide corpora)."""
-    df = fan_out(df, CPU_HEAVY)  # heavy map stage — see minhash_band_buckets
-    # The token array is staged as a REAL column (not word_shingles'
-    # bind_once wrap): the shingle stream feeds a pandas_udf, and a UDF
-    # argument containing get(transform(array(...))) trips a Spark 4.1
-    # extraction bug on the session's second differing-source compile
-    # (UDF left inside ProjectExec → INTERNAL_ERROR; see word_shingles).
-    # Multi-reference of the non-cheap _toks alias keeps CollapseProject
-    # from inlining it, so per-shingle references stay O(1).
-    toked = df.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("_toks")
-    )
-    hashed = toked.select(
-        "id",
-        F.transform(_shingles_of(F.col("_toks"), n), shingle_hash).alias("hs"),
-    )
-    with_sig = hashed.select("id", minhash_signature_vectorized(num_perm)(F.col("hs")).alias("sig"))
-    return with_sig.select(
-        "id", _banded_explode("sig", num_perm, bands).alias("b")
-    ).select("id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-
-
-def minhash_lsh_pairs_vectorized(
-    df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text",
-    num_perm: int = NUM_PERM, bands: int = LSH_BANDS,
-    max_bucket: int = MAX_LSH_BUCKET, oversize: str = "join",
-) -> DataFrame:
-    """minhash_lsh_pairs with the NumPy signature kernel — bit-identical
-    buckets, same oracle (see minhash_band_buckets_vectorized)."""
-    return _bucket_pairs(
-        minhash_band_buckets_vectorized(df, n, id_col, text_col, num_perm, bands),
         max_bucket=max_bucket,
         oversize=oversize,
     )
@@ -790,35 +735,15 @@ def token_hashes(text: Column, bits: int = SIMHASH_BITS) -> Column:
 
 
 def simhash(toks_h: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash over pre-hashed tokens: bit b of the signature is the sign of
-    Σ_tokens (±1 by token-hash bit b). Takes the hashed-token array column
-    so md5 evaluates once, not once per bit (see minhash_signature note)."""
-    def bit_step(b: int):
-        return lambda s, h: s + (F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1)
-
-    acc = F.lit(0).cast("long")
-    for b in range(bits):
-        bit_sum = F.aggregate(toks_h, F.lit(0).cast("long"), bit_step(b))
-        acc = acc + F.when(bit_sum > 0, F.lit(1 << b)).otherwise(F.lit(0))
-    return acc
-
-
-def simhash_table(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, simhash) per document over the token-hash stream."""
-    df = fan_out(df, CPU_HEAVY)  # heavy md5+bit-fold map — see minhash_band_buckets
-    staged = df.select(F.col(id_col).alias("id"), token_hashes(F.col(text_col)).alias("hs"))
-    return staged.select("id", simhash(F.col("hs")).alias("simhash"))
-
-
-def simhash_vectorized(bits: int = SIMHASH_BITS):
-    """NumPy pandas_udf simhash — bit-identical to the expression path
-    (same md5 token hashes cross Arrow as ints; same sign rule: bit set
-    iff Σ±1 > 0, empty/null docs → 0) but one broadcasted shift/sum per
-    batch instead of ``bits`` interpreted array folds."""
+    """SimHash over pre-hashed tokens: bit b of the signature is set iff
+    Σ_tokens (±1 by token-hash bit b) > 0; a null or empty array gives 0.
+    Takes the hashed-token array column so md5 stays JVM-side and only
+    ints cross Arrow; the sign rule is one broadcast shift/sum per row in
+    a NumPy pandas_udf (see ``minhash_signature``)."""
     from pyspark.sql.types import LongType
 
     shifts = np.arange(bits, dtype=np.int64)
-    weights = (np.int64(1) << shifts)
+    weights = np.int64(1) << shifts
 
     @F.pandas_udf(LongType())
     def sig(hs: pd.Series) -> pd.Series:
@@ -832,17 +757,14 @@ def simhash_vectorized(bits: int = SIMHASH_BITS):
             out.append(int(((s > 0) * weights).sum()))
         return pd.Series(out)
 
-    return sig
+    return sig(toks_h)
 
 
-def simhash_table_vectorized(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """simhash_table with the NumPy kernel (the fast path for wide
-    corpora; md5 token hashing stays JVM-side)."""
-    df = fan_out(df, CPU_HEAVY)  # heavy md5 map — see minhash_band_buckets
+def simhash_table(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """(id, simhash) per document over the token-hash stream."""
+    df = fan_out(df, CPU_HEAVY)  # heavy md5 map — see minhash_signatures
     staged = df.select(F.col(id_col).alias("id"), token_hashes(F.col(text_col)).alias("hs"))
-    return staged.select("id", simhash_vectorized()(F.col("hs")).alias("simhash"))
+    return staged.select("id", simhash(F.col("hs")).alias("simhash"))
 
 
 # --- embedding near-dup ---------------------------------------------------------
@@ -1201,32 +1123,6 @@ def span_source_matrix(
 MINHASH_AGREE_T = 0.5
 
 
-def minhash_signatures(
-    df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text",
-    num_perm: int = NUM_PERM,
-) -> DataFrame:
-    """(id, sig array<long>) — the staged shingle→md5→signature
-    projections of ``minhash_band_buckets``, exposed for signature
-    storage and agreement verification."""
-    hashed = fan_out(df, CPU_HEAVY).select(
-        F.col(id_col).alias("id"),
-        F.transform(word_shingles(F.col(text_col), n), shingle_hash).alias("hs"),
-    )
-    return hashed.select("id", minhash_signature(F.col("hs"), num_perm).alias("sig"))
-
-
-def bands_of_signatures(
-    sigs: DataFrame, num_perm: int = NUM_PERM, bands: int = LSH_BANDS
-) -> DataFrame:
-    """(id, band, bh) from an (id, sig) frame — the same band-hash
-    construction ``minhash_band_buckets`` fuses inline."""
-    return sigs.select(
-        "id", _banded_explode("sig", num_perm, bands).alias("b")
-    ).select(
-        "id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
-
-
 def drop_near_seen_frames(
     new: DataFrame,
     history_sigs: DataFrame,
@@ -1250,13 +1146,18 @@ def drop_near_seen_frames(
 
     thr = math.ceil(threshold * num_perm)
     sig_n = minhash_signatures(new, n, id_col, text_col, num_perm)
-    bb_n = bands_of_signatures(sig_n, num_perm, bands)
+    # ONE consumer of the new side's signatures: ``sig`` rides through the
+    # band explode into the candidate rows. A second reference (bands and
+    # agreement read separately) re-runs the signature kernel, since Arrow
+    # UDF subtrees are not deduplicated by exchange reuse.
+    bb_n = sig_n.select(
+        F.col("id").alias("_nid"),
+        F.col("sig").alias("_nsig"),
+        _banded_explode("sig", num_perm, bands).alias("b"),
+    ).select("_nid", "_nsig", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
     cand = (
-        history_bands.join(
-            F.broadcast(bb_n.select("band", "bh", F.col("id").alias("_nid"))),
-            on=["band", "bh"],
-        )
-        .select(F.col("id").alias("_oid"), "_nid")
+        history_bands.join(F.broadcast(bb_n), on=["band", "bh"])
+        .select(F.col("id").alias("_oid"), "_nid", "_nsig")
         .dropDuplicates(["_oid", "_nid"])
     )
     matches = F.size(
@@ -1267,15 +1168,28 @@ def drop_near_seen_frames(
     )
     flagged = (
         history_sigs.join(F.broadcast(cand), history_sigs["id"] == F.col("_oid"))
-        .join(
-            F.broadcast(sig_n.select(F.col("id").alias("_nid"), F.col("sig").alias("_nsig"))),
-            on="_nid",
-        )
         .filter(matches >= F.lit(thr))
         .select(F.col("_nid").alias(id_col))
         .distinct()
     )
     return new.join(F.broadcast(flagged), on=id_col, how="left_anti")
+
+
+def _write_signature_index(
+    sigs: DataFrame, path: str, num_perm: int, bands: int
+) -> None:
+    """Write (overwrite) the ``{path}/sigs`` and ``{path}/bands`` tables
+    from one (id, sig) frame. Both writes read it and the signature kernel is an
+    Arrow UDF, so the frame is persisted across the two writes and
+    released before return: the kernel runs once."""
+    sigs = sigs.persist()
+    try:
+        sigs.write.mode("overwrite").parquet(f"{path}/sigs")
+        bands_of_signatures(sigs, num_perm, bands).write.mode("overwrite").parquet(
+            f"{path}/bands"
+        )
+    finally:
+        sigs.unpersist()
 
 
 def minhash_index_build(
@@ -1286,52 +1200,32 @@ def minhash_index_build(
     bh) — fixed bytes per doc (num_perm longs + bands digests), no
     shingle sets, no raw text."""
     sigs = minhash_signatures(df, n, id_col, text_col, num_perm)
-    sigs.write.mode("overwrite").parquet(f"{path}/sigs")
-    bands_of_signatures(sigs, num_perm, bands).write.mode("overwrite").parquet(
-        f"{path}/bands"
-    )
+    _write_signature_index(sigs, path, num_perm, bands)
 
 
 def minhash_index_update(
     df: DataFrame, path: str, n: int = 3, id_col: str = "doc_id",
     text_col: str = "text", num_perm: int = NUM_PERM, bands: int = LSH_BANDS,
-    staged: bool = True,
 ) -> None:
     """Append a (screened) shard's signatures + bands to the index.
 
-    ``staged`` (default, r14): the TWO tables stage under
-    ``{path}/_append_pending`` and publish atomically
-    (:func:`..streaming.txn.staged_batch_publish` — the BM25 append
-    discipline): a crash between the sigs and bands appends can no longer
-    leave signatures without their band rows, which would silently
-    exclude those docs from every future ``drop_near_seen`` candidate
-    screen (band join finds nothing → near-dups sail through). A crashed
-    publish refuses re-append and is finished with
-    ``streaming.txn.publish_pending_batch(path)``. ``staged=False``
-    writes the live tables directly — the fuzzy ingest stream passes
-    this because it stages the whole micro-batch itself."""
-    sigs = minhash_signatures(df, n, id_col, text_col, num_perm)
-    if not staged:
-        from ..streaming.txn import writer_lock
-
-        with writer_lock(path, "minhash_index_update"):
-            sigs.write.mode("append").parquet(f"{path}/sigs")
-            bands_of_signatures(sigs, num_perm, bands).write.mode("append").parquet(
-                f"{path}/bands"
-            )
-        return
+    The TWO tables stage under ``{path}/_append_pending`` and publish
+    atomically (:func:`..streaming.txn.staged_batch_publish` — the BM25
+    append discipline): a crash between the sigs and bands appends can
+    no longer leave signatures without their band rows, which would
+    silently exclude those docs from every future ``drop_near_seen``
+    candidate screen (band join finds nothing → near-dups sail through).
+    A crashed publish refuses re-append and is finished with
+    ``streaming.txn.publish_pending_batch(path)``. The fuzzy ingest
+    stream stages its whole micro-batch itself and writes the same
+    layout with ``_write_signature_index``."""
     from ..streaming.txn import staged_batch_publish
 
-    def stage(pend: str) -> None:
-        sigs.write.mode("overwrite").parquet(f"{pend}/sigs")
-        bands_of_signatures(sigs, num_perm, bands).write.mode(
-            "overwrite"
-        ).parquet(f"{pend}/bands")
-
+    sigs = minhash_signatures(df, n, id_col, text_col, num_perm)
     staged_batch_publish(
         path,
         {"sigs": f"{path}/sigs", "bands": f"{path}/bands"},
-        stage,
+        lambda pend: _write_signature_index(sigs, pend, num_perm, bands),
         "minhash_index_update",
     )
 

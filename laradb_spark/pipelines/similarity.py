@@ -1572,79 +1572,13 @@ def semantic_dedup(
     auto-scales k ∝ N via ``auto_centroids`` (one bounded count), keeping
     expected cluster size ≈ SEM_TARGET_CLUSTER constant — a fixed k would
     silently grow the within-cluster quadratic as N²/k at 100×. The
-    per-cluster self-join is one shuffle on ``cid``, and AQE skew-split
-    handles fat clusters; centroid training is the bounded-collect Lloyd
-    loop shared with IVF (``_train_centroids``)."""
-    c = fan_out(emb, CPU_HEAVY).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cvec")
-    )
-    if n_centroids is None:
-        n_centroids = auto_centroids(c)
-    cents = _train_centroids(c, n_centroids, lloyd_iters)
-    # assigned fans out 3× (both pair sides + the final anti-join); without
-    # a persist the whole assignment pipeline recomputes per consumer
-    # (DEVNOTES gotcha #3). The norm is staged per VECTOR (one pass), not
-    # per PAIR inside cosine() — with ~m members per cluster each vector
-    # would otherwise re-norm m times, tripling the pair stage's
-    # interpreted-HOF work; that term grows with cluster size while the
-    # remaining wall-clock at small SF is the fixed-cost Lloyd loop
-    # (per-round codegen + bounded collect), which is data-independent.
-    assigned = persist_once(
-        _assign(c, cents).withColumn("_nrm", norm(F.col("cvec")))
-    )
-    a = assigned.select(
-        F.col("cid"), F.col("neighbor_id").alias("id_a"),
-        F.col("cvec").alias("_va"), F.col("_nrm").alias("_na"),
-    )
-    b = assigned.select(
-        F.col("cid"), F.col("neighbor_id").alias("id_b"),
-        F.col("cvec").alias("_vb"), F.col("_nrm").alias("_nb"),
-    )
-    dropped = (
-        a.join(b, on="cid")
-        .filter(F.col("id_a") < F.col("id_b"))
-        # zero-norm guard: under ANSI /0 throws, under non-ANSI it's NaN
-        # (ordered greatest → drops every cluster-mate). The `when` makes
-        # the division conditional PER ROW — two separate filters could be
-        # reordered/merged by Catalyst and still divide by zero. The nanvl
-        # mirrors cosine(): a NaN-norm pair passes `NaN > 0` and
-        # `NaN >= tau` is TRUE in Spark, which would drop every
-        # cluster-mate of a NaN-poisoned vector — folded to 0.0 (< tau,
-        # never similar), matching the fast twin's invalid-denom branch.
-        .filter(
-            F.when(
-                (F.col("_na") * F.col("_nb")) > 0,
-                F.nanvl(
-                    dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
-                    F.lit(0.0),
-                )
-                >= tau,
-            ).otherwise(F.lit(False))
-        )
-        .select(F.col("id_b").alias("neighbor_id"))
-        .distinct()
-    )
-    return (
-        assigned.join(dropped, on="neighbor_id", how="left_anti")
-        .select(F.col("neighbor_id").alias(id_col), "cid")
-    )
-
-
-def semantic_dedup_fast(
-    emb: DataFrame,
-    tau: float = 0.9,
-    n_centroids: int | None = None,
-    lloyd_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """``semantic_dedup`` with the pair stage as ONE NumPy similarity
-    matrix per cluster via ``applyInPandas`` — the shape the SemDeDup
-    paper computes (cluster-local V·Vᵀ), and the scale path: the
-    quadratic work runs as a vectorized matmul inside each cluster's
-    task instead of an interpreted per-pair expression. Cluster size is
-    bounded by design (k ∝ N keeps E[|cluster|] ≈ N/k constant), so the
-    per-task matrix is bounded; same keep-rule, same oracle."""
+    pair stage is ONE NumPy similarity matrix per cluster via
+    ``applyInPandas`` — the shape the SemDeDup paper computes
+    (cluster-local V·Vᵀ): one shuffle on ``cid``, then a vectorized
+    matmul inside each cluster's task, whose size that k bounds.
+    Zero-norm, NaN and NULL vectors are similar to nothing: they
+    never drop and are never dropped. Centroid training is the
+    bounded-collect Lloyd loop shared with IVF (``_train_centroids``)."""
     import numpy as np
     import pandas as pd
 
@@ -1662,22 +1596,22 @@ def semantic_dedup_fast(
 
     def dropped_in_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
-        # NULL embeddings form no valid pairs (the expression twin's null
-        # norm → `when` false): they neither drop nor get dropped — leave
-        # them out of the matrix instead of crashing np.stack on None
+        # NULL embeddings form no valid pairs: they neither drop nor get
+        # dropped — leave them out of the matrix instead of crashing
+        # np.stack on None
         pdf = pdf[pdf["cvec"].notna()].reset_index(drop=True)
         if len(pdf) < 2:
             return pdf.iloc[:0][["neighbor_id"]]
         v = np.stack(pdf["cvec"].to_numpy())            # m × d
         nrm = np.sqrt((v * v).sum(axis=1))
-        # zero-norm guard (mirrors semantic_dedup's `_na*_nb > 0` filter):
-        # pairs involving a zero vector are never similar, not NaN-similar.
+        # zero-norm guard: pairs involving a zero vector are never
+        # similar, not NaN-similar (a NaN norm fails `denom > 0` too).
         denom = np.outer(nrm, nrm)
         valid = denom > 0
         with np.errstate(divide="ignore", invalid="ignore"):
             s = np.where(valid, (v @ v.T) / np.where(valid, denom, 1.0), -np.inf)
         # drop j if ANY lower-id i in the cluster has sim ≥ tau (strictly
-        # the pairwise rule of semantic_dedup, not a greedy chain)
+        # the pairwise rule, not a greedy chain)
         mask = np.triu(s >= tau, k=1).any(axis=0)
         return pdf.loc[mask, ["neighbor_id"]]
 

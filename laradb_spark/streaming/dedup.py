@@ -314,55 +314,65 @@ def fuzzy_ingest_stream(
         import math
 
         thr = math.ceil(tau * dd.NUM_PERM)
-        sigs = dd.minhash_signatures(batch_df, id_col=id_col, text_col=text_col)
-        bb = dd.bands_of_signatures(sigs)
-        cand = (
-            bb.select("band", "bh", F.col("id").alias("_ia"))
-            .join(
-                F.broadcast(bb.select("band", "bh", F.col("id").alias("_ib"))),
-                on=["band", "bh"],
-            )
-            .filter(F.col("_ia") < F.col("_ib"))
-            .select("_ia", "_ib")
-            .dropDuplicates(["_ia", "_ib"])
-        )
-        agree_pairs = (
-            cand.join(
-                F.broadcast(sigs.select(F.col("id").alias("_ia"), F.col("sig").alias("_sa"))),
-                on="_ia",
-            )
-            .join(
-                F.broadcast(sigs.select(F.col("id").alias("_ib"), F.col("sig").alias("_sb"))),
-                on="_ib",
-            )
-            .filter(
-                F.size(
-                    F.filter(
-                        F.zip_with(F.col("_sa"), F.col("_sb"), lambda a, c: a == c),
-                        lambda x: x,
-                    )
-                )
-                >= F.lit(thr)
-            )
-            .select(F.col("_ia").alias("id_a"), F.col("_ib").alias("id_b"))
-        )
-        deduped = dd.drop_near_duplicates(batch_df, agree_pairs, id_col=id_col)
+        # The batch signatures feed the band self-join, both agreement
+        # joins and the index write. Arrow UDF subtrees are not reused
+        # across consumers, so they are persisted once and released
+        # before the micro-batch returns (a cache that outlived it would
+        # leak one entry per batch in a long-running stream).
+        sigs = dd.minhash_signatures(batch_df, id_col=id_col, text_col=text_col).persist()
+        kept = None
         try:
-            kept = dd.drop_near_seen(deduped, index_path, threshold=tau,
-                                     id_col=id_col, text_col=text_col)
-        except AnalysisException:  # first batch: no index yet
-            kept = deduped
-        kept.persist()
-        kept.write.mode("overwrite").parquet(f"{pend}/out")
-        # minhash_index_update's {path}/sigs + {path}/bands layout written
-        # DIRECTLY into the pend dir (staged=False: the txn manifest maps
-        # each to its live index subdirectory — this loop stages the whole
-        # micro-batch itself, nesting the update's own staging would stage
-        # inside a stage)
-        dd.minhash_index_update(
-            kept, pend, id_col=id_col, text_col=text_col, staged=False
-        )
-        kept.unpersist()
+            bb = dd.bands_of_signatures(sigs)
+            cand = (
+                bb.select("band", "bh", F.col("id").alias("_ia"))
+                .join(
+                    F.broadcast(bb.select("band", "bh", F.col("id").alias("_ib"))),
+                    on=["band", "bh"],
+                )
+                .filter(F.col("_ia") < F.col("_ib"))
+                .select("_ia", "_ib")
+                .dropDuplicates(["_ia", "_ib"])
+            )
+            agree_pairs = (
+                cand.join(
+                    F.broadcast(sigs.select(F.col("id").alias("_ia"), F.col("sig").alias("_sa"))),
+                    on="_ia",
+                )
+                .join(
+                    F.broadcast(sigs.select(F.col("id").alias("_ib"), F.col("sig").alias("_sb"))),
+                    on="_ib",
+                )
+                .filter(
+                    F.size(
+                        F.filter(
+                            F.zip_with(F.col("_sa"), F.col("_sb"), lambda a, c: a == c),
+                            lambda x: x,
+                        )
+                    )
+                    >= F.lit(thr)
+                )
+                .select(F.col("_ia").alias("id_a"), F.col("_ib").alias("id_b"))
+            )
+            deduped = dd.drop_near_duplicates(batch_df, agree_pairs, id_col=id_col)
+            try:
+                kept = dd.drop_near_seen(deduped, index_path, threshold=tau,
+                                         id_col=id_col, text_col=text_col)
+            except AnalysisException:  # first batch: no index yet
+                kept = deduped
+            kept = kept.persist()
+            kept.write.mode("overwrite").parquet(f"{pend}/out")
+            # the index's {path}/sigs + {path}/bands layout written
+            # DIRECTLY into the pend dir (the txn manifest maps each to
+            # its live index subdirectory), from the persisted batch
+            # signatures of the survivors — no second signature pass
+            kept_sigs = sigs.join(
+                kept.select(F.col(id_col).alias("id")), on="id", how="left_semi"
+            )
+            dd._write_signature_index(kept_sigs, pend, dd.NUM_PERM, dd.LSH_BANDS)
+        finally:
+            if kept is not None:
+                kept.unpersist()
+            sigs.unpersist()
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():

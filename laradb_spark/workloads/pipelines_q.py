@@ -557,10 +557,6 @@ WHERE doc_id NOT IN (SELECT id FROM losers)
 """
 
 
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.minhash_lsh_pairs(load(spark, sf_dir, "documents"))
-
-
 def _minhash_sql() -> str:
     rows = dd.NUM_PERM // dd.LSH_BANDS
     perm_rows = ", ".join(f"({i}, {dd._A[i]}, {dd._B[i]})" for i in range(dd.NUM_PERM))
@@ -590,9 +586,9 @@ FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.id < b.id
 
 
 def dedup_minhash_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vectorized (NumPy pandas_udf) minhash — bit-identical to
-    dedup_minhash_lsh, shares its oracle."""
-    return dd.minhash_lsh_pairs_vectorized(load(spark, sf_dir, "documents"))
+    """MinHash-LSH candidate pairs (NumPy signature kernel); the oracle
+    replays the permutations and the banding."""
+    return dd.minhash_lsh_pairs(load(spark, sf_dir, "documents"))
 
 
 def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -669,14 +665,10 @@ WHERE ROUND(i.inter / (sa.sz + sb.sz - i.inter), 6) >= 0.5
 """
 
 
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.simhash_table(load(spark, sf_dir, "documents"))
-
-
 def dedup_simhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vectorized (NumPy pandas_udf) simhash — bit-identical to
-    dedup_simhash, shares its oracle."""
-    return dd.simhash_table_vectorized(load(spark, sf_dir, "documents"))
+    """Per-document SimHash (NumPy sign-rule kernel over md5 token
+    hashes)."""
+    return dd.simhash_table(load(spark, sf_dir, "documents"))
 
 
 def _simhash_sql() -> str:
@@ -1509,20 +1501,14 @@ FROM (SELECT DISTINCT query_id FROM pq) q LEFT JOIN hits USING (query_id)
 SEM_TAU = 0.9
 
 
-def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+def semantic_dedup_fast_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup: k-means cluster the embeddings, drop
-    the higher id of any within-cluster pair with cosine ≥ τ. Same
-    deterministic Lloyd recipe as IVF, so the oracle unrolls the full
-    cluster → pair → drop flow and the result is hash-checked."""
+    the higher id of any within-cluster pair with cosine ≥ τ (per-cluster
+    NumPy similarity matrix). Same deterministic Lloyd recipe as IVF, so
+    the oracle unrolls the full cluster → pair → drop flow and the result
+    is hash-checked."""
     emb = load(spark, sf_dir, "embeddings")
     return sim.semantic_dedup(emb, tau=SEM_TAU, n_centroids=16, lloyd_iters=2)
-
-
-def semantic_dedup_fast_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """semantic_dedup with the per-cluster NumPy matmul pair stage (the
-    SemDeDup paper's actual compute shape); same keep-rule and oracle."""
-    emb = load(spark, sf_dir, "embeddings")
-    return sim.semantic_dedup_fast(emb, tau=SEM_TAU, n_centroids=16, lloyd_iters=2)
 
 
 def _semantic_dedup_sql(n_centroids: int = 16, iters: int = 2, tau: float = SEM_TAU) -> str:
@@ -1686,7 +1672,10 @@ def fuzzy_cross_batch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     hist = docs.filter(F.col("doc_id") % _FUZZY_XBATCH_MOD != 0)
     new = docs.filter(F.col("doc_id") % _FUZZY_XBATCH_MOD == 0)
-    sigs = dd.minhash_signatures(hist)
+    # the history signatures feed both the band and the agreement side;
+    # persisted so the signature kernel runs once (Arrow UDF subtrees are
+    # not reused across consumers)
+    sigs = persist_once(dd.minhash_signatures(hist))
     return dd.drop_near_seen_frames(
         new, sigs, dd.bands_of_signatures(sigs),
         threshold=_FUZZY_XBATCH_THR / dd.NUM_PERM,
@@ -5024,11 +5013,9 @@ QUERIES = {
     "cap_docs_per_source": (cap_docs_per_source, CAP_PER_SOURCE_SQL),
     "pack_sequences_q": (pack_sequences_q, PACK_SEQUENCES_SQL),
     "shuffle_shards_q": (shuffle_shards_q, SHUFFLE_SHARDS_SQL),
-    "dedup_minhash_lsh": (dedup_minhash_lsh, _minhash_sql()),
     "dedup_minhash_lsh_fast": (dedup_minhash_lsh_fast, _minhash_sql()),
     "dedup_lsh_recall": (dedup_lsh_recall, _lsh_recall_sql()),
     "dedup_lsh_jaccard": (dedup_lsh_jaccard, _lsh_jaccard_sql()),
-    "dedup_simhash": (dedup_simhash, _simhash_sql()),
     "dedup_simhash_fast": (dedup_simhash_fast, _simhash_sql()),
     "dedup_embedding": (dedup_embedding, DEDUP_EMBEDDING_SQL),
     "ann_brute_force": (ann_brute_force, ANN_BRUTE_SQL),
@@ -5047,7 +5034,6 @@ QUERIES = {
     "ann_ivfpq_res_recall": (ann_ivfpq_res_recall, _ann_ivfpq_res_recall_sql()),
     "ann_probe_sweep": (ann_probe_sweep, _ann_probe_sweep_sql()),
     "ann_hamming_topk": (ann_hamming_topk, _ann_hamming_sql()),
-    "semantic_dedup": (semantic_dedup_q, _semantic_dedup_sql()),
     "semantic_dedup_fast": (semantic_dedup_fast_q, _semantic_dedup_sql()),
     "text_normalize": (text_normalize, TEXT_NORMALIZE_SQL),
     "corpus_frequent_ngrams": (corpus_frequent_ngrams, FREQUENT_NGRAMS_SQL),

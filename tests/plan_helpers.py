@@ -52,3 +52,21 @@ def count_jobs(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def count_plan_nodes(df, simple_name: str) -> int:
+    """Number of ``simple_name`` nodes (e.g. ``ArrowEvalPythonExec``) in
+    ``df``'s physical plan, not counting cached subtrees: the plan under
+    an InMemoryTableScanExec runs once for all its readers, every other
+    node runs once per reference. Walks the pre-AQE physical plan."""
+    n = 0
+
+    def walk(node):
+        nonlocal n
+        n += node.getClass().getSimpleName() == simple_name
+        ch = node.children()
+        for i in range(ch.size()):
+            walk(ch.apply(i))
+
+    walk(df._jdf.queryExecution().sparkPlan())
+    return n

@@ -54,7 +54,7 @@ def test_whiten_then_semantic_dedup_composes(spark, small_emb):
     from pyspark.sql import functions as F
 
     from laradb_spark.pipelines.embeddings import whiten_embeddings
-    from laradb_spark.pipelines.similarity import semantic_dedup_fast
+    from laradb_spark.pipelines.similarity import semantic_dedup
 
     df, _ = small_emb
     # plant an exact twin of vec 0 with a high id
@@ -64,7 +64,7 @@ def test_whiten_then_semantic_dedup_composes(spark, small_emb):
     w = whiten_embeddings(df.unionByName(twin), dim=4).select(
         "vec_id", F.col("whitened").alias("embedding")
     )
-    kept = {r.vec_id for r in semantic_dedup_fast(
+    kept = {r.vec_id for r in semantic_dedup(
         w, tau=0.999999, n_centroids=4, lloyd_iters=1
     ).collect()}
     assert 0 in kept and 9999 not in kept   # twin dropped, original kept

@@ -67,7 +67,6 @@ def test_similarity_ops_empty(spark, empty_emb):
     # k-means init on an empty corpus degenerates to zero centroids; the
     # dedup must come back empty, not divide-by-zero
     assert sim.semantic_dedup(empty_emb).count() == 0
-    assert sim.semantic_dedup_fast(empty_emb).count() == 0
 
 
 def test_timeseries_and_graph_empty(spark):

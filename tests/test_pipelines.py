@@ -48,24 +48,72 @@ def test_minhash_lsh_finds_near_dups(spark, docs):
 
 
 def test_minhash_vectorized_survives_second_source_compile(spark, docs):
-    """Regression (r11): compiling the vectorized minhash against a SECOND
-    source in one session must keep the signature pandas_udf extracted
-    into ArrowEvalPython. A UDF argument containing the bind_once wrap
+    """Regression (r11): compiling the minhash signature pandas_udf
+    against a SECOND source in one session must keep it extracted into
+    ArrowEvalPython. A UDF argument containing the bind_once wrap
     (get(transform(array(...)))) trips a Spark 4.1 extraction skip on the
     second differing-source compile — the UDF is left inside ProjectExec
     and execution dies with INTERNAL_ERROR 'Cannot generate code'. The
-    staged _toks projection in minhash_band_buckets_vectorized is the
-    guard; this pins it."""
+    staged _toks projection in minhash_signatures is the guard, and every
+    MinHash caller goes through it; this pins both public entry points."""
     other = spark.createDataFrame(
         [(100 + i, f"alpha beta gamma delta {i} epsilon zeta") for i in range(6)],
         "doc_id long, text string",
     )
-    first = dd.minhash_lsh_pairs_vectorized(docs)
-    first.collect()
-    second = dd.minhash_lsh_pairs_vectorized(other)
-    plan = second._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan, "sig UDF was not extracted on 2nd compile"
-    second.collect()  # and it must actually execute
+    for build in (dd.minhash_signatures, dd.minhash_lsh_pairs):
+        build(docs).collect()
+        second = build(other)
+        plan = second._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" in plan, f"{build.__name__}: sig UDF not extracted"
+        second.collect()  # and it must actually execute
+
+
+# Signature, band and SimHash values of three edge documents, recorded
+# when the expression and NumPy kernels both existed and agreed. A NULL
+# text tokenizes like "" (one empty shingle), so both share one
+# signature; token_hashes gives NULL and [] there, both SimHash 0.
+EDGE_SIG = [
+    3389732057, 3691684997, 2638975488, 3688482037, 2418090112, 1032722124,
+    4016550182, 1073511248, 395762339, 820701430, 1384854681, 53709767,
+    289029894, 2402701913, 3031608769, 488550183, 3037426953, 1873876213,
+    2234989470, 2765151881, 2483232211, 1995733441, 1425116460, 1021175596,
+    3914254408, 1778715183, 3863509487, 1229913934, 2663638457, 1793125216,
+    1691372048, 4232850580,
+]
+SOLO_SIG = [
+    1450592751, 4037530212, 436028647, 2753372728, 1698654895, 2956015860,
+    1097426850, 791353732, 3471941187, 43891635, 448163546, 145607493,
+    1944113394, 249625659, 3865657327, 1001363003, 1832602220, 2341451455,
+    1574429657, 3247974165, 293549448, 2800938590, 1299552503, 1992099016,
+    1730692048, 3120327006, 1773722119, 183890832, 754050257, 2865514604,
+    1681087455, 1993300105,
+]
+EDGE_BANDS = [
+    "3e4c82fb32fb315221c1768771076692", "4ac59040a0ee4b98f23171d62ccf2ca6",
+    "a694204fb20dc88b23c114ea4d2d9eed", "0769dc89e8d4050475551fb4739bfb22",
+    "f0f245eaa90aeb95bd7c1c92e41c5c54", "9678caeffbb74b229e9f74f24b988d78",
+    "9653f8b3f8e9ae4ce100f7f89e6745e4", "218301aef80eb3d06b8139d9f56e21df",
+]
+SOLO_BANDS = [
+    "642347497419d26df800759904f69878", "76ed79a65f5684409326ae7afdc43f6e",
+    "e2cfd3713f77433185f49dded0bf5b34", "53ff23dd2a4249c52510462415ae195d",
+    "25c3c83a12f6c3b3023d8e972811ca92", "506e71509e30882bc4781f2df8244da2",
+    "56ed4120895abecb7c27926fb44ac849", "6d420456605bbd437be8ab38ee45ea94",
+]
+
+
+def test_signature_kernels_on_null_empty_and_one_token_docs(spark):
+    edge = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "solo")], "doc_id long, text string"
+    )
+    sigs = {r.id: r.sig for r in dd.minhash_signatures(edge).collect()}
+    assert sigs == {1: EDGE_SIG, 2: EDGE_SIG, 3: SOLO_SIG}
+    bands = {}
+    for r in dd.minhash_band_buckets(edge).collect():
+        bands.setdefault(r.id, [None] * dd.LSH_BANDS)[r.band] = r.bh
+    assert bands == {1: EDGE_BANDS, 2: EDGE_BANDS, 3: SOLO_BANDS}
+    sh = {r.id: r.simhash for r in dd.simhash_table(edge).collect()}
+    assert sh == {1: 0, 2: 0, 3: 22099}
 
 
 def test_simhash_similarity(spark, docs):
@@ -409,10 +457,12 @@ def test_star_components_checkpoint_truncates_lineage(spark, tmp_path):
 
 
 def test_semantic_dedup_fast_parity(spark):
-    """NumPy-matmul pair stage ≡ expression pair stage on random vectors."""
+    """The per-cluster NumPy pair stage on random vectors plus planted
+    twins keeps exactly the (vec_id, cid) set the expression pair stage
+    and the NumPy stage both produced when both existed."""
     import random
 
-    from laradb_spark.pipelines.similarity import semantic_dedup, semantic_dedup_fast
+    from laradb_spark.pipelines.similarity import semantic_dedup
 
     rng = random.Random(7)
     rows = [
@@ -420,16 +470,21 @@ def test_semantic_dedup_fast_parity(spark):
     ] + [(100 + i, [float(i % 3), 1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]) for i in range(9)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     kw = dict(tau=0.9, n_centroids=4, lloyd_iters=1)
-    slow = {(r.vec_id, r.cid) for r in semantic_dedup(df, **kw).collect()}
-    fast = {(r.vec_id, r.cid) for r in semantic_dedup_fast(df, **kw).collect()}
-    assert slow == fast
+    got = {(r.vec_id, r.cid) for r in semantic_dedup(df, **kw).collect()}
+    cids = [  # cid of vec_id 0..59; None: dropped
+        0, 1, 2, 3, 1, 3, 0, 2, 0, 0, 3, 3, 0, 3, 2, 0, 0, 3, 1, 1,
+        1, 3, 0, 2, 3, 0, 2, 3, 1, None, 3, 2, 1, 2, 2, 3, 0, 3, 2, 3,
+        1, 1, 1, 3, 3, 0, 0, 3, 3, 0, 1, 3, 2, 0, 3, 2, 0, 2, 3, 1,
+    ]
+    want = {(i, c) for i, c in enumerate(cids) if c is not None}
+    want |= {(100, 2), (101, 2)}  # 102..108: cosine ≥ 0.9 to 100 or 101
+    assert got == want
 
 
 def test_semantic_dedup_zero_norm_vectors_survive(spark):
     """Zero embeddings must never be dropped nor drop others: cosine vs a
-    zero vector is NaN, and Spark orders NaN >= tau TRUE while NumPy says
-    False — both paths guard the denominator so they agree (kept)."""
-    from laradb_spark.pipelines.similarity import semantic_dedup, semantic_dedup_fast
+    zero vector is NaN, so the pair stage guards the denominator (kept)."""
+    from laradb_spark.pipelines.similarity import semantic_dedup
 
     rows = [
         (0, [0.0, 0.0, 0.0]),   # zero vector
@@ -439,9 +494,8 @@ def test_semantic_dedup_zero_norm_vectors_survive(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     kw = dict(tau=0.9, n_centroids=2, lloyd_iters=1)
-    slow = {r.vec_id for r in semantic_dedup(df, **kw).collect()}
-    fast = {r.vec_id for r in semantic_dedup_fast(df, **kw).collect()}
-    assert slow == fast == {0, 1, 2}
+    got = {(r.vec_id, r.cid) for r in semantic_dedup(df, **kw).collect()}
+    assert got == {(0, 0), (1, 1), (2, 0)}
 
 
 def test_fill_gaps_forward_random_series(spark):
@@ -1885,6 +1939,29 @@ def test_minhash_index_cross_batch_fuzzy_dedup(spark, tmp_path):
     # history tables are scanned, never shuffled: no SortMergeJoin
     plan = dd.drop_near_seen(batch1, idx, threshold=0.5)._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
+
+
+def test_drop_near_seen_runs_new_side_signatures_once(spark, tmp_path, sf_dir):
+    """The new shard's signatures feed both the band candidates and the
+    agreement check. Arrow UDF subtrees are not deduplicated across
+    consumers, so reading them twice runs the signature kernel twice:
+    against a stored index (no kernel on the history side) the screen
+    plans exactly ONE ArrowEvalPython, and the fuzzy_cross_batch query,
+    whose in-memory history signatures are persisted, one outside its
+    cache."""
+    from plan_helpers import count_plan_nodes
+
+    from laradb_spark.workloads.pipelines_q import fuzzy_cross_batch_q
+
+    idx = str(tmp_path / "mh_idx")
+    hist = spark.createDataFrame(DOCS[:3], "doc_id long, text string")
+    dd.minhash_index_build(hist, idx)
+    batch = spark.createDataFrame(DOCS[3:], "doc_id long, text string")
+    screened = dd.drop_near_seen(batch, idx, threshold=0.5)
+    assert count_plan_nodes(screened, "ArrowEvalPythonExec") == 1
+    assert {r.doc_id for r in screened.collect()} == {5}  # 4 ≡ 1, dropped
+    q = fuzzy_cross_batch_q(spark, sf_dir)
+    assert count_plan_nodes(q, "ArrowEvalPythonExec") == 1
 
 
 def test_minhash_index_update_staged_atomic(spark, tmp_path, monkeypatch):
