@@ -54,8 +54,8 @@ HEADLINE = [
     "bm25_topk_fast",
     "embedding_gram",
     "twap_value_by_user_type",
-    # round-5 operators (SQ8 benched via its NumPy int-matmul twin — same
-    # ranks, same oracle; the ANN-family precedent)
+    # round-5 operators (the _fast name is kept for bench records and the
+    # scale probe; SQ8 has one implementation)
     "ann_sq8_fast",
     # round-6 operators
     "gopher_quality",
@@ -70,8 +70,8 @@ HEADLINE = [
     "span_source_matrix",
     "ngram_diversity",
     "split_leakage",
-    # round-7 label/embedding QA audits (decon benched via its NumPy-matmul
-    # twin — the ANN-family precedent). knn_label_noise (exact-N² by its
+    # round-7 label/embedding QA audits (the decon row keeps its _fast
+    # name; decon has one implementation). knn_label_noise (exact-N² by its
     # oracle-harness role; the r10 probe sweep measured it 32× superlinear
     # at 10×) is DEMOTED to the correctness registry per VERDICT r10 #3 —
     # its certified scale path, knn_label_noise_ivf, is the headline entry.

@@ -27,7 +27,6 @@ window is already parallel and cheaper; keep it there.
 
 from __future__ import annotations
 
-import os
 from collections import defaultdict
 from collections.abc import Sequence
 
@@ -67,7 +66,8 @@ RANK_BYTES_PER_PART = 64 * 1024 * 1024
 # formulations (r15 route gate; the _topk_per_query many-groups flip and
 # the expr-vs-Arrow twin gates are the precedent). A misestimate only
 # costs sort spill in a wide-ish window task, never correctness, and at
-# corpus scale every estimate is far above the gate.
+# corpus scale every estimate is far above the gate. Read at call time,
+# so the plan-shape tests pin the at-scale route with a negative value.
 RANK_WINDOW_MAX_BYTES = 32 * 1024 * 1024
 
 
@@ -120,16 +120,7 @@ def grouped_rank(
         # has that headroom (a miss costs sort spill in a window task,
         # never correctness).
         leaf_est = max_leaf_size_bytes(df)
-        if (
-            leaf_est is not None
-            and leaf_est <= RANK_WINDOW_MAX_BYTES
-            # test/audit override: the plan-shape tests assert the
-            # AT-SCALE route (every ranking window sharded by _pid) on
-            # gate-sized fixtures — this pins the two-phase path so the
-            # audit inspects what a real corpus would get
-            and os.environ.get("LARADB_RANK_TWO_PHASE_ONLY", "").strip().lower()
-            not in ("1", "true", "yes", "on")
-        ):
+        if leaf_est is not None and leaf_est <= RANK_WINDOW_MAX_BYTES:
             # Small-frame route (see RANK_WINDOW_MAX_BYTES): one window
             # pass, bit-identical (rank cast to long to keep the
             # two-phase schema: _off + row_number is BIGINT there).

@@ -28,8 +28,9 @@ Scale shapes (100 TB discipline):
 
 * the audit join (`knn_label_audit`) shuffles only the k*N neighbor
   frame and the (id, label) projection — never the vectors;
-* `semantic_decontaminate` broadcasts the benchmark (small by
-  definition) across a single corpus scan; no corpus shuffle at all;
+* `semantic_decontaminate` carries the benchmark matrix (small by
+  definition) in the NumPy scorer of a single corpus scan; no corpus
+  shuffle at all;
 * `label_centroid_outliers`' centroid pass partial-aggregates the
   posexploded (label, pos) stream map-side, so the shuffle carries at
   most n_labels x dim rows per map partition; centroids (n_labels x
@@ -41,8 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..util import CPU_HEAVY, fan_out, plan_size_bytes
-from .similarity import cosine
+from ..util import CPU_HEAVY, CPU_LIGHT, fan_out, literal_frame
+from .similarity import _small_side_matrix, cosine
 
 
 def knn_label_audit(
@@ -111,88 +112,37 @@ def semantic_decontaminate(
     Output: ``(id_col, n_hits)`` for every corpus vector with at least
     one benchmark neighbor at ``round(cos, 6) >= tau`` (the rounding is
     mirrored in the SQL oracle so the threshold compare is stable across
-    engines — same discipline as ``dedup.embedding_near_dups``).
+    engines — same discipline as ``dedup.embedding_near_dups``). The
+    rounding is HALF_UP (``sign * floor(abs * 1e6 + 0.5) / 1e6``), as in
+    SQL; NumPy's ``round`` is banker's and would disagree on exact .5
+    boundaries.
 
-    Shape: the benchmark set (eval suites: thousands of rows) broadcasts
-    whole; the corpus streams through one scan with a map-side count
-    aggregate — no corpus shuffle, no N x N materialization beyond the
-    broadcast nested loop each batch already evaluates.
+    Shape: the benchmark matrix (eval suites: thousands of rows) is
+    collected and L2-normalized once on the driver; each Arrow batch of
+    the corpus does one matmul against it and counts hits inside the
+    batch, so at most one (id, n_hits) row per corpus vector leaves the
+    scorer. No corpus shuffle, nothing pair-sized.
 
-    COST WARNING: the per-pair HOF cosine runs interpreted and measured
-    158x slower than the matmul twin at the 30x probe — this is the
-    oracle-shaped reference; corpus-scale callers use
-    ``semantic_decontaminate_auto`` (size-gated) or the vectorized twin
-    directly."""
-    b = benchmark.select(F.col(vec_col).cast("array<double>").alias("_bvec"))
-    c = fan_out(corpus, CPU_HEAVY).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_cvec")
-    )
-    return (
-        c.crossJoin(F.broadcast(b))
-        .filter(F.round(cosine(F.col("_cvec"), F.col("_bvec")), 6) >= tau)
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-
-
-def semantic_decontaminate_vectorized(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    tau: float = 0.30,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """NumPy-matmul twin of ``semantic_decontaminate`` — same output
-    contract and oracle, Arrow-batched for the corpus-scale path (the
-    expression twin's interpreted per-pair HOF cosine measured 158x at
-    the 30x probe; this one does each batch against the whole benchmark
-    in one matmul and counts hits INSIDE the batch, so the operator
-    emits at most one (id, n_hits) row per corpus vector — nothing
-    pair-sized ever leaves the scorer).
-
-    The benchmark matrix is collected and L2-normalized once driver-side
-    (eval suites are small by definition — same bounded collect as the
-    vectorized top-k query matrix). The threshold compare mirrors the
-    expression twin's ``ROUND(cos, 6) >= tau`` with explicit HALF_UP
-    rounding (``sign * floor(abs * 1e6 + 0.5) / 1e6``) — NumPy's
-    ``round`` is banker's and would disagree on exact .5 boundaries.
-    As with every vectorized kernel here, NULL/non-finite embeddings
-    raise the uniform actionable error (the expression twin's
-    three-valued tolerance doesn't vectorize); zero-norm vectors score
-    0.0 against everything, matching ``cosine``."""
+    A bad vector on either side (NULL, or a NULL, NaN or ±Inf component)
+    or a zero vector scores 0.0 against everything, as in ``cosine``, so
+    it never hits while ``tau > 0``. An empty benchmark gives an empty
+    frame."""
     import numpy as np
     import pandas as pd
 
-    from ..util import CPU_LIGHT, dense_matrix_fn
-
     out_schema = f"{id_col} long, n_hits long"
-    brows = benchmark.select(F.col(vec_col).cast("array<double>")).collect()
-    if not brows:
-        from ..util import literal_frame
-
+    bvecs = [
+        r[0] for r in benchmark.select(F.col(vec_col).cast("array<double>")).collect()
+    ]
+    if not bvecs:
         return literal_frame(corpus.sparkSession, [], out_schema)
-    if any(r[0] is None or any(x is None for x in r[0]) for r in brows):
-        raise ValueError(
-            "semantic_decontaminate_vectorized: benchmark embeddings must be "
-            "non-null arrays (NULL vector/components found); filter upstream"
-        )
-    if len({len(r[0]) for r in brows}) != 1:
-        raise ValueError(
-            "semantic_decontaminate_vectorized: benchmark embeddings have mixed dims"
-        )
-    B = np.array([r[0] for r in brows], dtype=np.float64)
-    if not np.isfinite(B).all():
-        raise ValueError(
-            "semantic_decontaminate_vectorized: benchmark embeddings must be "
-            "finite (NaN/Inf found); filter or impute upstream"
-        )
+    B, to_matrix = _small_side_matrix(bvecs, "semantic_decontaminate")
     bn = np.linalg.norm(B, axis=1, keepdims=True)
     Bn = np.divide(B, bn, out=np.zeros_like(B), where=bn > 0)
 
     c = fan_out(corpus, CPU_LIGHT).select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("cvec")
     )
-    to_matrix = dense_matrix_fn(B.shape[1], "semantic_decontaminate_vectorized")
 
     def score(batches):
         for pdf in batches:
@@ -210,31 +160,6 @@ def semantic_decontaminate_vectorized(
             )
 
     return c.mapInPandas(score, out_schema)
-
-
-SEMANTIC_DECON_MIN_BYTES = 2 << 20
-
-
-def semantic_decontaminate_auto(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    tau: float = 0.30,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Cost-gated decon (the ``_assign_auto`` precedent): expression HOF
-    below ``SEMANTIC_DECON_MIN_BYTES`` of corpus plan size, NumPy matmul
-    above — the interpreted per-pair cosine measured 158x slower at the
-    30x probe (DEVNOTES #17), and nothing should pay that by accident.
-    Bit-identical hit flags on finite corpora (parity tests); the one
-    deliberate asymmetry is dirty input: the vectorized route raises the
-    uniform actionable error on NULL/non-finite embeddings where the
-    expression route silently no-hits them — at gate-tripping scale a
-    dirty embedding column should fail loudly, not quietly score 0."""
-    size = plan_size_bytes(corpus)
-    if size is not None and size < SEMANTIC_DECON_MIN_BYTES:
-        return semantic_decontaminate(corpus, benchmark, tau, id_col, vec_col)
-    return semantic_decontaminate_vectorized(corpus, benchmark, tau, id_col, vec_col)
 
 
 def label_centroids(

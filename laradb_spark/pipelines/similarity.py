@@ -1,10 +1,11 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — a broadcast join of the (small) query
-set against the full corpus; 100% recall, scan-bound, embarrassingly
-parallel (no shuffle on the corpus side; ranking is the two-phase
-``grouped_rank``, so the few-queries × huge-corpus shape never funnels a
-query's whole candidate set through one task).
+Baseline: brute-force cosine top-k — the (small) query matrix rides in a
+NumPy scorer that each corpus batch streams through; 100% recall,
+scan-bound, embarrassingly parallel (no shuffle on the corpus side;
+ranking is the two-phase ``grouped_rank``, so the few-queries ×
+huge-corpus shape never funnels a query's whole candidate set through one
+task).
 
 Scale path: random-hyperplane LSH — deterministic planes, bucket the
 corpus once (map-only), then search only matching buckets. At 100 TB the
@@ -55,17 +56,16 @@ def _batch_topk_prune(
     Column-exact: passes every input column through (hard_negatives
     carries extra columns) and preserves float64 bits (Arrow). NULL
     scores sort LAST (``na_position='last'``), mirroring Spark's desc
-    NULLS-LAST — a NULL-scored row (e.g. sq8_topk over a NULL corpus
-    embedding) only survives a batch with fewer than k real scores,
-    exactly as the unpruned rank would place it. Caveat: Arrow folds
-    NULL into NaN in a float64 column, so a GENUINE NaN score would also
-    sort last here while Spark desc orders NaN greatest — so no caller
-    may feed this a NaN-able score. That contract is ENFORCED at the
-    score expressions, not assumed: ``cosine`` nanvl-folds NaN (a NaN
-    component passes ``NaN > 0``, so the zero-norm guard alone does NOT
-    stop NaN) and ``quantize_sq8`` zeroes both codes and scale for
-    non-finite inputs — every score reaching this prune is NULL or a
-    real number, never NaN (test_ann NaN-corpus parity tests pin it)."""
+    NULLS-LAST — a NULL-scored row only survives a batch with fewer than
+    k real scores, exactly as the unpruned rank would place it. Caveat:
+    Arrow folds NULL into NaN in a float64 column, so a GENUINE NaN
+    score would also sort last here while Spark desc orders NaN greatest
+    — so no caller may feed this a NaN-able score. That contract is
+    ENFORCED at the score expressions, not assumed: ``cosine``
+    nanvl-folds NaN (a NaN component passes ``NaN > 0``, so the
+    zero-norm guard alone does NOT stop NaN) — every score reaching this
+    prune is NULL or a real number, never NaN (test_ann NaN-corpus
+    tests pin it)."""
 
     def prune(batches):
         for pdf in batches:
@@ -114,12 +114,12 @@ def _topk_per_query(
     ``prebatch_prune=True`` inserts the exact batch-local top-k
     (``_batch_topk_prune``) before the ranking, shrinking that persist
     from corpus×queries to n_batches·queries·k rows — set it on paths
-    whose scored frame is CORPUS-sized (brute force, SQ8,
-    hard negatives). Candidate-pruned paths (LSH buckets, IVF lists) are
+    whose scored frame is CORPUS-sized (hard negatives, PQ ADC,
+    Hamming). Candidate-pruned paths (LSH buckets, IVF lists) are
     already candidates-sized; a second Python stage there costs more
     than it saves.
 
-    ``n_queries`` (when the caller knows it — the vectorized scorers
+    ``n_queries`` (when the caller knows it — the NumPy scorers
     collect the query matrix and do) flips MANY-query inputs to the
     plain per-group window: with groups ≥ ``MANY_GROUPS_FACTOR`` ×
     parallelism the window is already fully parallel, needs no persist
@@ -190,6 +190,10 @@ def cosine(a: Column, b: Column) -> Column:
       the zero-vector case, and identical between the pruned and
       unpruned paths by construction.
 
+    The NumPy kernels (``brute_force_topk``, ``semantic_decontaminate``,
+    ``_assign_vectorized``) give a bad vector the same 0.0 by
+    zero-filling it (``_zero_filled_matrix_fn``).
+
     The denominator is bound once (util.bind_once): it appears in both
     the guard and the division, and interpreted HOF folds get no
     subexpression elimination — an inline reference pays the two norm
@@ -202,148 +206,72 @@ def cosine(a: Column, b: Column) -> Column:
     )
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Exact cosine top-k: broadcast the query set across the corpus scan.
-    Output: (query_id, neighbor_id, rank) — rank 1 = most similar;
-    deterministic tie-break on neighbor id."""
-    q = queries.select(
-        F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("qvec")
-    )
-    c = fan_out(corpus, CPU_HEAVY).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cvec")
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col(query_id_col))
-        .select(
-            query_id_col,
-            "neighbor_id",
-            cosine(F.col("qvec"), F.col("cvec")).alias("cos"),
-        )
-    )
-    return _topk_per_query(scored, query_id_col, "cos", k, prebatch_prune=True)
+def _zero_filled_matrix_fn(dim: "int | None", who: str):
+    """Build the per-batch embedding-matrix extractor of the cosine, SQ8
+    and centroid-assignment kernels. Returned as a NESTED closure: the
+    executor closures that call it are cloudpickled BY VALUE, so library
+    users outside the repo path don't hit ModuleNotFoundError on workers
+    (DEVNOTES gotcha #16).
+
+    The extractor turns a sequence of vectors (one Arrow batch's pandas
+    Series, or a collected small side) into a dense (n × dim) float64
+    matrix. A bad vector — NULL, or with a NULL, NaN or ±Inf component —
+    becomes the zero vector: under the zero-norm guard it scores exactly
+    0.0 against everything, which is what the nanvl'd ``cosine`` gives
+    it. (Arrow hands a NULL component over as NaN; numpy folds a
+    collected ``None`` component to NaN too.) Mixed dims raise.
+    ``dim=None`` means the small side had no live vector to take a dim
+    from: the matrix has zero columns, so every score against it is 0.0.
+
+    ``util.dense_matrix_fn`` is the raising counterpart for kernels
+    whose output a bad vector would silently poison (Gram, whitening,
+    PCA)."""
+
+    def to_matrix(vecs):
+        import numpy as np
+
+        if dim is None:
+            return np.zeros((len(vecs), 0))
+        zero = [0.0] * dim
+        try:
+            M = np.asarray(
+                [zero if v is None else v for v in vecs], dtype=np.float64
+            )
+        except (TypeError, ValueError) as e:
+            raise ValueError(
+                f"{who}: embeddings have mixed dims; normalize upstream"
+            ) from e
+        if M.shape[1:] != (dim,):
+            raise ValueError(
+                f"{who}: embedding dim {M.shape[1:]} != expected dim {dim}"
+            )
+        M[~np.isfinite(M).all(axis=1)] = 0.0
+        return M
+
+    return to_matrix
 
 
-def quantize_sq8(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_id: str | None = None,
-) -> DataFrame:
-    """int8 scalar quantization (SQ8): per-vector scale = max|xᵢ|,
-    qᵢ = floor(xᵢ·127/scale) ∈ [-128, 127] — 4× less memory and integer
-    arithmetic downstream. Every step is a single IEEE double op + floor,
-    so quantized codes are bit-identical across engines (no round());
-    a zero vector quantizes to zeros.
-
-    A NON-FINITE scale (a NaN or ±Inf component makes ``array_max`` NaN/
-    Inf — Spark orders NaN greatest) also quantizes to zeros WITH
-    ``qscale = 0.0``: without the qscale reset, ``floor(NaN) = 0`` would
-    zero the codes but ``idot·qs·NaN`` would still emit a NaN score,
-    which the ranking and the batch prune order differently (see
-    ``cosine``). Zero codes × zero scale → exact 0.0 score: garbage
-    matches nothing, identically on every path."""
-    v = F.col(vec_col).cast("array<double>")
-    raw_scale = F.array_max(F.transform(v, lambda x: F.abs(x)))
-    degenerate = (
-        raw_scale.isNull()
-        | F.isnan(raw_scale)
-        | (raw_scale == F.lit(float("inf")))
-        | (raw_scale == 0.0)
-    )
-    scale = F.when(degenerate, F.lit(0.0)).otherwise(raw_scale)
-    # scale bound once (util.bind_once): the quantize lambda divides by it
-    # per component, and an inline reference re-runs the array_max scan
-    # per component — O(dim²) per vector (degenerate ⟺ bound scale == 0.0,
-    # so the branch test needs only the bound value)
-    q = bind_once(
-        scale,
-        lambda sc: F.when(
-            sc == 0.0, F.transform(v, lambda x: F.lit(0).cast("long"))
-        ).otherwise(
-            F.transform(v, lambda x: F.floor(x * F.lit(127.0) / sc).cast("long"))
-        ),
-    )
-    return df.select(
-        F.col(id_col).alias(out_id or id_col), q.alias("qvec"), scale.alias("qscale")
-    )
+def _small_side_matrix(vecs: list, who: str):
+    """Zero-filled matrix of a collected small side (queries, benchmark,
+    centroids), plus the extractor for the big side's batches at the same
+    dim. The dim is the live (non-NULL) vectors' one dim; mixed dims
+    raise."""
+    dims = {len(v) for v in vecs if v is not None}
+    if len(dims) > 1:
+        raise ValueError(f"{who}: embeddings have mixed dims {sorted(dims)}")
+    to_matrix = _zero_filled_matrix_fn(dims.pop() if dims else None, who)
+    return to_matrix(vecs), to_matrix
 
 
-def idot(a: Column, b: Column) -> Column:
-    """Integer dot product — order-independent exact sum."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda s, v: s + v
-    )
-
-
-def sq8_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Approximate max-inner-product top-k (MIPS — the retrieval/
-    recommendation objective; normalize vectors upstream if cosine
-    ranking is wanted) over SQ8 codes: same broadcast shape as
-    brute_force_topk but the score is the INTEGER dot of the quantized
-    vectors — at 100 TB the corpus-side scan reads 1/4 the bytes and the
-    scoring loop is integer ALU work, and the integer scores make the
-    ranking deterministic by construction (no float-sum ordering; the
-    max-based scale keeps quantization itself order-independent too)."""
-    q = quantize_sq8(queries, id_col=query_id_col, vec_col=vec_col).select(
-        query_id_col, F.col("qvec").alias("qq"), F.col("qscale").alias("qs")
-    )
-    c = quantize_sq8(fan_out(corpus, CPU_HEAVY), id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("qvec").alias("cq"),
-        F.col("qscale").alias("cs"),
-    )
-    # dequantized score = (idot · qs) · cs — one exact integer sum, then
-    # two IEEE multiplies in fixed association (oracle mirrors the order);
-    # the /127² constant is monotonic and dropped
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col(query_id_col))
-        .select(
-            query_id_col,
-            "neighbor_id",
-            ((idot(F.col("qq"), F.col("cq")) * F.col("qs")) * F.col("cs")).alias("iscore"),
-        )
-    )
-    return _topk_per_query(scored, query_id_col, "iscore", k, prebatch_prune=True)
-
-
-def _collect_query_matrix(queries, query_id_col, vec_col):
-    """Driver-side (ids, matrix) for the vectorized scorers — bounded by
-    the query set, the documented small side. Raises on NULL or ragged
-    vectors (the expression twins' null semantics don't vectorize; the
-    contract is non-null fixed-dim embeddings) and returns (ids, None)
-    for an empty query set so callers can short-circuit to an empty
-    result instead of crashing in NumPy."""
+def _collect_queries(queries: DataFrame, query_id_col: str, vec_col: str):
+    """Driver-side (ids, vectors) of the query set — bounded by the query
+    set, the documented small side."""
     import numpy as np
 
-    qrows = queries.select(
+    rows = queries.select(
         F.col(query_id_col), F.col(vec_col).cast("array<double>")
     ).collect()
-    if not qrows:
-        return np.array([], dtype=np.int64), None
-    if any(r[1] is None or any(x is None for x in r[1]) for r in qrows):
-        raise ValueError(
-            "vectorized top-k: query embeddings must be non-null arrays "
-            "(NULL vector/components found); filter or impute upstream"
-        )
-    if len({len(r[1]) for r in qrows}) != 1:
-        raise ValueError("vectorized top-k: query embeddings have mixed dims")
-    ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    return ids, np.array([r[1] for r in qrows], dtype=np.float64)
+    return np.array([r[0] for r in rows], dtype=np.int64), [r[1] for r in rows]
 
 
 def _empty_topk(spark, query_id_col, rank_col="rank"):
@@ -352,28 +280,10 @@ def _empty_topk(spark, query_id_col, rank_col="rank"):
     )
 
 
-def _corpus_matrix_fn(dim: int):
-    """Per-batch corpus-matrix extractor for the vectorized scorers —
-    the shared ``util.dense_matrix_fn`` validator (nested closure,
-    pickled by value; one uniform non-null fixed-dim contract across
-    every Arrow kernel). The expression twins tolerate NULLs via
-    three-valued scoring; that doesn't vectorize, so the scorers raise
-    the same actionable ValueError ``_collect_query_matrix`` gives for
-    queries."""
-    from ..util import dense_matrix_fn
-
-    to_matrix = dense_matrix_fn(dim, "vectorized top-k")
-
-    def corpus_matrix(pdf):
-        return to_matrix(pdf["cvec"])
-
-    return corpus_matrix
-
-
 def _batch_topk_fn(k: int, score_name: str):
     """Build the batch-local per-query top-k reducer for the NumPy
     scorers — nested-closure form for the same cloudpickle-by-value
-    reason as ``_corpus_matrix_fn``.
+    reason as ``_zero_filled_matrix_fn``.
 
     The reducer takes (qids, nb, S) — query ids, batch neighbor ids, and
     the (batch × queries) score matrix — excludes self-matches
@@ -382,7 +292,10 @@ def _batch_topk_fn(k: int, score_name: str):
     frame that leaves the scorer (and that grouped_rank persists) is
     k·n_batches·Q-sized, never corpus-sized. Order matches the global
     rank exactly: lexsort keys (neighbor asc under score desc) — a total
-    order, so global top-k = top-k of the per-batch top-k union."""
+    order, so global top-k = top-k of the per-batch top-k union. A NaN
+    score (SQ8's NULL vector) sorts after every real score, ties broken
+    by neighbor asc — Spark's desc NULLS LAST, since Arrow returns the
+    NaN as NULL."""
 
     def batch_topk(qids, nb, S):
         import numpy as np
@@ -407,7 +320,7 @@ def _batch_topk_fn(k: int, score_name: str):
     return batch_topk
 
 
-def sq8_topk_vectorized(
+def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
@@ -415,102 +328,39 @@ def sq8_topk_vectorized(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """``sq8_topk`` with an Arrow-batched NumPy scorer — bit-identical
-    ranks (same floor-quantization, same exact integer dot, same
-    (idot·qs)·cs association), but the integer matmul runs vectorized in
-    int64 instead of the interpreted per-pair HOF fold: the 30× scale
-    probe showed the expression twin is scan-bound on exactly that fold.
-    Queries quantize once on the driver (bounded small side); each corpus
-    batch quantizes and scores against ALL queries in one matmul; the
-    corpus never shuffles before the two-phase ranking."""
+    """Exact cosine top-k. Output: (query_id, neighbor_id, rank) — rank
+    1 = most similar; deterministic tie-break on neighbor id.
+
+    The (small) query matrix is normalized once on the driver and
+    captured in the closure; each Arrow batch of the corpus scores
+    against ALL queries with one matmul and emits its per-query top-k
+    (``_batch_topk_fn``). The corpus never shuffles before the two-phase
+    ranking. A bad vector on either side (NULL, or a NULL, NaN or ±Inf
+    component) or a zero vector scores exactly 0.0, as in ``cosine``;
+    an empty query set gives an empty frame."""
     import numpy as np
-    import pandas as pd
 
-    qids, Q = _collect_query_matrix(queries, query_id_col, vec_col)
-    if Q is None:
+    qids, qvecs = _collect_queries(queries, query_id_col, vec_col)
+    if not len(qids):
         return _empty_topk(corpus.sparkSession, query_id_col)
-
-    def _quantize(M: "np.ndarray") -> tuple["np.ndarray", "np.ndarray"]:
-        # mirrors quantize_sq8 EXACTLY on the validated domain
-        # (dense_matrix_fn raised on NULL/NaN before this runs, so the
-        # expression's non-finite-scale branch is unreachable here),
-        # association included:
-        # (x · 127.0) / s then floor — x·(127/s) can floor differently
-        s = np.abs(M).max(axis=1)
-        safe = np.where(s == 0.0, 1.0, s)
-        q = np.floor((M * 127.0) / safe[:, None]).astype(np.int64)
-        q[s == 0.0] = 0
-        return q, s
-
-    Qq, Qs = _quantize(Q)
-
-    c = fan_out(corpus, CPU_LIGHT).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cvec")
-    )
-
-    corpus_matrix = _corpus_matrix_fn(Q.shape[1])
-    batch_topk = _batch_topk_fn(k, "iscore")
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Cq, Cs = _quantize(corpus_matrix(pdf))
-            # exact int64 dot (|q| ≤ 128, so d·128² ≪ 2⁶³), then the
-            # engine's fixed float association: (idot · qs) · cs
-            S = (Cq @ Qq.T).astype(np.float64) * Qs[None, :] * Cs[:, None]
-            # batch-local top-k (self excluded IN the scorer): each batch
-            # emits ≤ k rows per query — see _batch_topk_fn
-            yield batch_topk(qids, pdf["neighbor_id"].to_numpy(), S)
-
-    scored = c.mapInPandas(score, "query_id long, neighbor_id long, iscore double")
-    return _topk_per_query(
-        scored, "query_id", "iscore", k, n_queries=len(qids)
-    ).withColumnRenamed("query_id", query_id_col)
-
-
-def brute_force_topk_vectorized(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """brute_force_topk with an Arrow-batched NumPy scorer: the (small)
-    query matrix is normalized once on the driver and captured in the
-    closure; each corpus batch scores against ALL queries with one
-    matmul. Same output contract (rank ties by neighbor id); the corpus
-    never shuffles — mapInPandas then the per-query ranking window."""
-    import numpy as np
-    import pandas as pd
-
-    qids, Q = _collect_query_matrix(queries, query_id_col, vec_col)
-    if Q is None:
-        return _empty_topk(corpus.sparkSession, query_id_col)
-    # zero-norm guard mirrors cosine(): a zero vector is similar to
-    # NOTHING (score 0.0), never NaN-similar to everything — normalizing
-    # it to the zero row makes every dot with it 0.0 exactly.
+    Q, corpus_matrix = _small_side_matrix(qvecs, "brute_force_topk")
+    # normalizing a zero row leaves the zero row: every dot with it is 0.0
     qn = np.linalg.norm(Q, axis=1, keepdims=True)
     Qn = np.divide(Q, qn, out=np.zeros_like(Q), where=qn > 0)
 
     c = fan_out(corpus, CPU_LIGHT).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cvec")
     )
-
-    corpus_matrix = _corpus_matrix_fn(Q.shape[1])
     batch_topk = _batch_topk_fn(k, "cos")
 
     def score(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            C = corpus_matrix(pdf)
+            C = corpus_matrix(pdf["cvec"])
             cn = np.linalg.norm(C, axis=1, keepdims=True)
             Cn = np.divide(C, cn, out=np.zeros_like(C), where=cn > 0)
             S = Cn @ Qn.T  # (batch × queries) cosine matrix
-            # batch-local top-k (self excluded IN the scorer): each batch
-            # emits ≤ k rows per query — see _batch_topk_fn
             yield batch_topk(qids, pdf["neighbor_id"].to_numpy(), S)
 
     scored = c.mapInPandas(score, "query_id long, neighbor_id long, cos double")
@@ -518,6 +368,72 @@ def brute_force_topk_vectorized(
     # once per consumer (DEVNOTES #3).
     return _topk_per_query(
         scored, "query_id", "cos", k, n_queries=len(qids)
+    ).withColumnRenamed("query_id", query_id_col)
+
+
+def sq8_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+) -> DataFrame:
+    """Approximate max-inner-product top-k (MIPS — the retrieval/
+    recommendation objective; normalize vectors upstream if cosine
+    ranking is wanted) over int8 scalar-quantized (SQ8) codes: per-vector
+    scale s = max|xᵢ|, qᵢ = floor(xᵢ·127/s) ∈ [-128, 127], score =
+    (Σ qᵢcᵢ · s_q) · s_c. Each step is one IEEE double op + floor and the
+    integer dot is exact, so the ranks are deterministic by construction
+    and match the SQL oracle. Same shape as brute_force_topk:
+    the queries quantize once on the driver; each corpus batch quantizes
+    and scores against ALL queries in one int64 matmul.
+
+    Bad vectors: a NULL vector on either side scores NULL, ranked after
+    every real score. A zero vector, or one with a NaN or ±Inf component,
+    quantizes to zero codes with scale 0.0 and scores 0.0. A NULL
+    component counts as NaN (Arrow hands it to the corpus batches as
+    NaN), so it scores 0.0 too. An empty query set gives an empty
+    frame."""
+    import numpy as np
+
+    qids, qvecs = _collect_queries(queries, query_id_col, vec_col)
+    if not len(qids):
+        return _empty_topk(corpus.sparkSession, query_id_col)
+    Q, corpus_matrix = _small_side_matrix(qvecs, "sq8_topk")
+    q_null = np.array([v is None for v in qvecs])
+
+    def _quantize(M: "np.ndarray") -> tuple["np.ndarray", "np.ndarray"]:
+        # (x · 127.0) / s then floor, the oracle's association —
+        # x·(127/s) can floor differently; a zero row keeps scale 0.0
+        s = np.abs(M).max(axis=1, initial=0.0)
+        safe = np.where(s == 0.0, 1.0, s)
+        q = np.floor((M * 127.0) / safe[:, None]).astype(np.int64)
+        return q, s
+
+    Qq, Qs = _quantize(Q)
+
+    c = fan_out(corpus, CPU_LIGHT).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cvec")
+    )
+    batch_topk = _batch_topk_fn(k, "iscore")
+
+    def score(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            Cq, Cs = _quantize(corpus_matrix(pdf["cvec"]))
+            # exact int64 dot (|q| ≤ 128, so d·128² ≪ 2⁶³), then the
+            # fixed float association: (idot · qs) · cs
+            S = (Cq @ Qq.T).astype(np.float64) * Qs[None, :] * Cs[:, None]
+            # NaN leaves the scorer as NULL (Arrow), ranked last
+            S[pdf["cvec"].isna().to_numpy()] = np.nan
+            S[:, q_null] = np.nan
+            yield batch_topk(qids, pdf["neighbor_id"].to_numpy(), S)
+
+    scored = c.mapInPandas(score, "query_id long, neighbor_id long, iscore double")
+    return _topk_per_query(
+        scored, "query_id", "iscore", k, n_queries=len(qids)
     ).withColumnRenamed("query_id", query_id_col)
 
 
@@ -622,24 +538,20 @@ def _assign_vectorized(c: DataFrame, cents: DataFrame) -> DataFrame:
       * centroid columns are processed in cid-ASC order and ``np.argmax``
         returns the FIRST maximum, reproducing
         ``max_by(cid, struct(_cc, -cid))``'s ties → smallest cid;
-      * NULL vectors and NULL/NaN components score 0.0 against every
-        centroid (substituted by the zero vector, whose zero norm trips
-        the same guard; ±Inf components too — the expression twin's
-        nanvl'd scores for them are 0.0) → assigned to the smallest cid
-        — exactly what the
-        expression twin's three-valued ``when`` yields for them, so the
-        ``_assign_auto`` size gate is pure cost selection, never a
-        semantics switch. The SAME substitution applies on the CENTROID
-        side: a NULL or NaN-component centroid (a NULL embedding among
-        the lowest-id init rows) becomes the zero vector, whose zero
-        norm makes every vector score 0.0 against it — matching the
-        expression twin's NULL-``cent`` (null norm → ``when`` false →
-        0.0) and nanvl'd-NaN behavior instead of crashing on
-        ``list(None)``. If EVERY centroid is degenerate all scores are
-        0.0 and every vector goes to the smallest cid, short-circuited
-        without NumPy (dim is unknowable there). Ragged dims raise (the
-        expression twin's zip_with-padding behavior there is
-        undefined-by-contract).
+      * NULL vectors and NULL/NaN/±Inf components score 0.0 against
+        every centroid (``_zero_filled_matrix_fn`` substitutes the zero
+        vector, whose zero norm trips the same guard; the expression
+        twin's nanvl'd scores for them are 0.0) → assigned to the
+        smallest cid — exactly what the expression twin's three-valued
+        ``when`` yields for them, so the ``_assign_auto`` size gate is
+        pure cost selection, never a semantics switch. The SAME
+        substitution applies on the CENTROID side: a NULL or
+        NaN-component centroid (a NULL embedding among the lowest-id
+        init rows) matches nothing, as the expression twin's
+        NULL-``cent`` (null norm → ``when`` false → 0.0) does. If EVERY
+        centroid is NULL all scores are 0.0 and every vector goes to the
+        smallest cid. Ragged dims raise (the expression twin's
+        zip_with-padding behavior there is undefined-by-contract).
     Pinned by test_ann::test_assign_vectorized_bit_identical.
 
     Centroids land driver-side (k × d, tiny by construction). Output
@@ -659,29 +571,13 @@ def _assign_vectorized(c: DataFrame, cents: DataFrame) -> DataFrame:
             [], "cid long, neighbor_id long, cvec array<double>"
         )
     cids = np.asarray([t[0] for t in rows], dtype=np.int64)
-    live_dims = {len(v) for _, v in rows if v is not None}
-    if len(live_dims) > 1:
-        raise ValueError(
-            f"_assign_vectorized: centroids have mixed dims {sorted(live_dims)}; "
-            "normalize upstream"
-        )
-    if not live_dims:
-        # every centroid NULL → every score 0.0 → smallest cid for all
-        # (the expression twin's max_by over all-0.0 ties → min cid)
-        return c.select(
-            F.lit(int(cids[0])).cast("long").alias("cid"), "neighbor_id", "cvec"
-        )
-    dim = live_dims.pop()
-    C = np.asarray(
-        [([0.0] * dim if v is None else v) for _, v in rows], dtype=np.float64
-    )
-    # non-finite-component centroids → zero vector: the nanvl'd
+    # bad centroids AND bad vectors become the zero vector: the nanvl'd
     # expression twin scores them 0.0 against everything (NaN folds; an
     # Inf norm makes every dot/d either x/Inf = 0.0 or NaN → 0.0),
-    # exactly what a zero norm yields
-    bad_cents = ~np.isfinite(C).all(axis=1)
-    if bad_cents.any():
-        C[bad_cents] = 0.0
+    # exactly what a zero norm yields. With every centroid NULL the
+    # matrices have zero columns and every vector ties at 0.0.
+    C, to_matrix = _small_side_matrix([v for _, v in rows], "_assign_vectorized")
+    dim = C.shape[1]
     nc = np.zeros(len(C))
     for j in range(dim):
         nc = nc + C[:, j] * C[:, j]
@@ -691,27 +587,7 @@ def _assign_vectorized(c: DataFrame, cents: DataFrame) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            vals = pdf["cvec"].tolist()
-            zero = [0.0] * dim
-            filled = [zero if v is None else v for v in vals]
-            try:
-                V = np.asarray(filled, dtype=np.float64)
-            except (TypeError, ValueError) as e:
-                raise ValueError(
-                    "_assign_vectorized: embeddings have mixed dims; "
-                    "normalize upstream"
-                ) from e
-            if V.shape[1] != dim:
-                raise ValueError(
-                    f"_assign_vectorized: embedding dim {V.shape[1]} != "
-                    f"centroid dim {dim}"
-                )
-            # NULL/NaN/Inf components → zero vector → 0.0 vs every
-            # centroid (zero-norm guard) → smallest cid, mirroring the
-            # nanvl'd expr twin (x/Inf = 0.0, NaN folds to 0.0)
-            bad_rows = ~np.isfinite(V).all(axis=1)
-            if bad_rows.any():
-                V[bad_rows] = 0.0
+            V = to_matrix(pdf["cvec"])
             nv = np.zeros(len(V))
             dot_m = np.zeros((len(V), len(C)))
             for j in range(dim):
@@ -1764,12 +1640,7 @@ def _pq_books(per_sub: "list[list[tuple[int, list | None]]]", sd: int):
     for ents in per_sub:
         ents = sorted(ents, key=lambda t: t[0])
         cids = np.asarray([c for c, _ in ents], dtype=np.int64)
-        C = np.asarray(
-            [([0.0] * sd if v is None else list(v)) for _, v in ents], dtype=np.float64
-        )
-        bad = ~np.isfinite(C).all(axis=1)
-        if bad.any():
-            C[bad] = 0.0
+        C = _zero_filled_matrix_fn(sd, "pq codebooks")([v for _, v in ents])
         nc = np.zeros(len(C))
         for j in range(sd):
             nc = nc + C[:, j] * C[:, j]

@@ -1381,7 +1381,7 @@ def bpe_token_count_auto(
     text: str = "text",
 ) -> DataFrame:
     """Size-gated route between the codegen expression chain and the
-    Arrow twin on ``len(merges)`` (the ``semantic_decontaminate_auto``
+    Arrow twin on ``len(merges)`` (the ``similarity._assign_auto``
     precedent): demo/oracle-sized tables stay JVM-side; production
     vocabularies take the Arrow encoder. Both sides are bit-identical
     for trained tables, so the gate changes the PLAN, never the answer

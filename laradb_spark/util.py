@@ -51,8 +51,8 @@ def md5_mod(col: "Column", hex_digits: int, mod: int) -> "Column":
 
 def dense_matrix_fn(dim: int, who: str):
     """Build the per-batch embedding-matrix extractor+validator shared by
-    every Arrow kernel with a non-null fixed-dim contract (vectorized ANN
-    scorers, integer Gram, whitening, PCA). Returned as a NESTED closure
+    every Arrow kernel with a non-null fixed-dim contract (integer Gram,
+    whitening, PCA). Returned as a NESTED closure
     on purpose: executor closures that call it are cloudpickled BY VALUE,
     so library users outside the repo path don't hit ModuleNotFoundError
     on workers (DEVNOTES gotcha #16); the factory itself only runs on the
@@ -64,11 +64,9 @@ def dense_matrix_fn(dim: int, who: str):
     vectors, mixed/ragged dims, and non-finite components (Arrow
     surfaces null components as NaN, so the finiteness pass is what
     catches them; without it floor(NaN or ±Inf).astype(int64) silently
-    injects INT64_MIN into integer kernels — an Inf slipping through
-    the SQ8 path wraps the int64 matmul and can emit a +Inf/NaN score
-    that outranks every real neighbor). One validator, one contract:
-    the per-module copies this replaces had drifted (isnan here, dim
-    check there)."""
+    injects INT64_MIN into integer kernels such as the Gram). One
+    validator, one contract. The scorers that give a bad vector a score
+    of 0.0 instead use ``similarity._zero_filled_matrix_fn``."""
 
     def to_matrix(series):
         import numpy as np

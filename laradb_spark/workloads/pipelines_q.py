@@ -723,16 +723,10 @@ def _queries_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ann_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
+def ann_brute_force_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-k (NumPy-matmul scorer)."""
     emb = load(spark, sf_dir, "embeddings")
     return sim.brute_force_topk(emb, _queries_df(spark, sf_dir), k=TOP_K)
-
-
-def ann_brute_force_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NumPy-matmul scorer — same ranks as ann_brute_force, shares its
-    oracle."""
-    emb = load(spark, sf_dir, "embeddings")
-    return sim.brute_force_topk_vectorized(emb, _queries_df(spark, sf_dir), k=TOP_K)
 
 
 ANN_BRUTE_SQL = f"""
@@ -752,12 +746,6 @@ SELECT query_id, neighbor_id,
 FROM scored
 QUALIFY rank <= {TOP_K}
 """
-
-
-def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQ8-quantized ANN: integer-dot ranking over int8 codes."""
-    emb = load(spark, sf_dir, "embeddings")
-    return sim.sq8_topk(emb, _queries_df(spark, sf_dir), k=TOP_K)
 
 
 ANN_SQ8_SQL = f"""
@@ -790,11 +778,10 @@ QUALIFY rank <= {TOP_K}
 
 
 def ann_sq8_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NumPy int-matmul SQ8 scorer — bit-identical ranks to ann_sq8_topk
-    (same quantization and score association), shares its oracle; the
-    Arrow-batched scale twin of the interpreted integer-HOF fold."""
+    """SQ8-quantized ANN: integer-dot ranking over int8 codes (NumPy
+    int-matmul scorer)."""
     emb = load(spark, sf_dir, "embeddings")
-    return sim.sq8_topk_vectorized(emb, _queries_df(spark, sf_dir), k=TOP_K)
+    return sim.sq8_topk(emb, _queries_df(spark, sf_dir), k=TOP_K)
 
 
 EMB_DIM = 64
@@ -3332,7 +3319,7 @@ def knn_label_noise_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates instead — knn_label_audit never touches the vectors."""
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.select(F.col("vec_id").alias("query_id"), "embedding")
-    neighbors = sim.brute_force_topk_vectorized(emb, queries, k=KNN_AUDIT_K)
+    neighbors = sim.brute_force_topk(emb, queries, k=KNN_AUDIT_K)
     return lb.knn_label_audit(neighbors, emb.select("vec_id", "label"))
 
 
@@ -3455,25 +3442,12 @@ FROM lab l JOIN maj ON l.vec_id = maj.qid
 """
 
 
-def semantic_decon_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+def semantic_decon_fast_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-level decontamination: corpus = labels 0-8, benchmark =
-    label 9; flag corpus vectors cosine-close to any benchmark vector."""
+    label 9; flag corpus vectors cosine-close to any benchmark vector
+    (NumPy-matmul scorer)."""
     emb = load(spark, sf_dir, "embeddings")
     return lb.semantic_decontaminate(
-        emb.filter(F.col("label") != SEMANTIC_DECON_LABEL),
-        emb.filter(F.col("label") == SEMANTIC_DECON_LABEL),
-        tau=SEMANTIC_DECON_TAU,
-    )
-
-
-def semantic_decon_fast_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NumPy-matmul decon scorer — same flags as semantic_decon (the
-    HALF_UP ROUND mirror is explicit in the kernel), shares its oracle;
-    the Arrow-batched scale twin of the interpreted HOF cosine (the
-    expression path measured 158x at the 30x probe; this one holds the
-    benchmark matrix and counts hits inside each batch)."""
-    emb = load(spark, sf_dir, "embeddings")
-    return lb.semantic_decontaminate_vectorized(
         emb.filter(F.col("label") != SEMANTIC_DECON_LABEL),
         emb.filter(F.col("label") == SEMANTIC_DECON_LABEL),
         tau=SEMANTIC_DECON_TAU,
@@ -5018,9 +4992,7 @@ QUERIES = {
     "dedup_lsh_jaccard": (dedup_lsh_jaccard, _lsh_jaccard_sql()),
     "dedup_simhash_fast": (dedup_simhash_fast, _simhash_sql()),
     "dedup_embedding": (dedup_embedding, DEDUP_EMBEDDING_SQL),
-    "ann_brute_force": (ann_brute_force, ANN_BRUTE_SQL),
     "ann_brute_force_fast": (ann_brute_force_fast, ANN_BRUTE_SQL),
-    "ann_sq8_topk": (ann_sq8_topk, ANN_SQ8_SQL),
     "ann_sq8_fast": (ann_sq8_fast, ANN_SQ8_SQL),
     "ann_lsh_topk": (ann_lsh_topk, _ann_lsh_sql()),
     "ann_lsh_multiprobe": (ann_lsh_multiprobe, _ann_multiprobe_sql()),
@@ -5050,7 +5022,6 @@ QUERIES = {
         _knn_ivf_sql(n_centroids=AUTO_CENTROIDS_SQL),
     ),
     "ivf_maintenance_cycle": (ivf_maintenance_cycle, _ivf_maintenance_cycle_sql()),
-    "semantic_decon": (semantic_decon_q, SEMANTIC_DECON_SQL),
     "semantic_decon_fast": (semantic_decon_fast_q, SEMANTIC_DECON_SQL),
     "label_centroid_outliers": (label_centroid_outliers_q, CENTROID_OUTLIER_SQL),
     "corpus_integrity": (corpus_integrity_q, CORPUS_INTEGRITY_SQL),

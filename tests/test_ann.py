@@ -41,20 +41,43 @@ def test_multiprobe_recall_improves(spark, clustered):
     assert len(multi & exact) >= len(exact) // 2  # decent recall on clustered data
 
 
+def _sq8_replay(rows, qids, k):
+    """Pure-Python SQ8 top-k: s = max|x|, q = floor(x·127/s) (zero codes
+    for s = 0), score = (Σ qᵢcᵢ · s_q) · s_c, ranked by score desc then
+    neighbor asc, self excluded — the SQL oracle's formula."""
+    import math
+
+    def quant(v):
+        s = max(abs(x) for x in v)
+        return ([0] * len(v), 0.0) if s == 0.0 else (
+            [math.floor(x * 127.0 / s) for x in v], s)
+
+    codes = {i: quant(v) for i, v in rows}
+    out = set()
+    for qid in qids:
+        qq, qs = codes[qid]
+        scored = sorted(
+            ((-(sum(a * b for a, b in zip(qq, cq)) * qs) * cs, n)
+             for n, (cq, cs) in codes.items() if n != qid)
+        )
+        out |= {(qid, n, r + 1) for r, (_, n) in enumerate(scored[:k])}
+    return out
+
+
 def test_sq8_vectorized_matches_expr(spark, clustered):
-    """sq8_topk_vectorized ≡ sq8_topk bit-for-bit: same floor
-    quantization (same float association), same exact integer dot, same
-    (idot·qs)·cs score — on clustered data PLUS a zero vector and a
+    """sq8_topk ranks exactly as the SQ8 formula does (floor
+    quantization in the oracle's float association, exact integer dot,
+    (idot·qs)·cs score) — on clustered data PLUS a zero vector and a
     negative-heavy vector (quantization edge cases)."""
-    extra = spark.createDataFrame(
-        [(500, [0.0] * 8), (501, [-3.7] * 4 + [0.0, 1e-9, -1e-9, 2.5])],
-        "vec_id long, embedding array<double>",
+    extra = [(500, [0.0] * 8), (501, [-3.7] * 4 + [0.0, 1e-9, -1e-9, 2.5])]
+    corpus = clustered.unionByName(
+        spark.createDataFrame(extra, "vec_id long, embedding array<double>")
     )
-    corpus = clustered.unionByName(extra)
     q = _queries(corpus)
-    expr = sorted(map(tuple, sim.sq8_topk(corpus, q, k=7).collect()))
-    fast = sorted(map(tuple, sim.sq8_topk_vectorized(corpus, q, k=7).collect()))
-    assert expr == fast
+    rows = [(r.vec_id, list(r.embedding)) for r in corpus.collect()]
+    assert _pairs_ranked(sim.sq8_topk(corpus, q, k=7)) == _sq8_replay(
+        rows, range(5), 7
+    )
 
 
 def test_ivf_topk_recall(spark, clustered):
@@ -182,14 +205,10 @@ def _pairs_ranked(df):
 
 
 def test_sq8_quantization_and_recall(spark, clustered):
-    """Codes stay in int8 range, zero vectors quantize to zeros, and on
-    clustered data SQ8 ranking recovers most of exact-cosine top-5."""
-    qz = sim.quantize_sq8(clustered, vec_col="embedding")
-    rows = qz.select(F.array_min("qvec").alias("lo"), F.array_max("qvec").alias("hi")).collect()
-    assert all(-128 <= r.lo and r.hi <= 127 for r in rows)
-    zero = spark.createDataFrame([(99, [0.0] * 8)], ["vec_id", "embedding"])
-    assert sim.quantize_sq8(zero).collect()[0].qvec == [0] * 8
-
+    """On clustered data SQ8 ranking recovers most of the exact MIPS
+    top-5. (The quantizer is internal to sq8_topk: its formula is pinned
+    by test_sq8_vectorized_matches_expr, the zero vector by
+    test_exact_scorers_bad_vectors.)"""
     q = _queries(clustered)
     # exact MIPS baseline (sq8 ranks by inner product, not cosine)
     scored = (
@@ -248,43 +267,44 @@ def test_batch_topk_prune_exact_and_small(spark, clustered):
 def test_vectorized_prune_batch_size_invariant(spark, clustered):
     """The fused scorer-side top-k must not depend on where Arrow batch
     boundaries fall: forcing 17-row batches gives bit-identical results
-    to the default batch size, and both still match the expression twin."""
+    to the default batch size, for both exact scorers."""
     q = _queries(clustered)
-    want = sorted(map(tuple, sim.sq8_topk(clustered, q, k=7).collect()))
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "17")
-    try:
-        tiny = sorted(map(tuple, sim.sq8_topk_vectorized(clustered, q, k=7).collect()))
-    finally:
-        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-    assert tiny == want
+    for fn in (sim.sq8_topk, sim.brute_force_topk):
+        want = sorted(map(tuple, fn(clustered, q, k=7).collect()))
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "17")
+        try:
+            tiny = sorted(map(tuple, fn(clustered, q, k=7).collect()))
+        finally:
+            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+        assert tiny == want, fn.__name__
 
 
 def test_brute_vectorized_zero_vector_matches_expr(spark, clustered):
-    """Zero-norm guard parity: a zero corpus vector scores 0.0 (similar
-    to nothing) in BOTH the expression twin (cosine's `when`) and the
-    vectorized twin (guarded normalize) — never NaN-similar."""
+    """Zero-norm guard: a zero corpus vector scores 0.0 (similar to
+    nothing, as cosine's `when` gives it) — never NaN-similar — so the
+    top-5 over the clustered corpus is unchanged by adding it."""
     extra = spark.createDataFrame(
         [(500, [0.0] * 8)], "vec_id long, embedding array<double>"
     )
     corpus = clustered.unionByName(extra)
     q = _queries(corpus)
-    expr = _pairs_ranked(sim.brute_force_topk(corpus, q, k=5))
-    fast = _pairs_ranked(sim.brute_force_topk_vectorized(corpus, q, k=5))
-    assert expr == fast
-    assert all(n != 500 for _, n, _ in expr)  # zero vector never ranks
+    got = _pairs_ranked(sim.brute_force_topk(corpus, q, k=5))
+    assert got == _pairs_ranked(sim.brute_force_topk(clustered, q, k=5))
+    assert all(n != 500 for _, n, _ in got)  # zero vector never ranks
 
 
 def test_vectorized_topk_null_corpus_raises(spark, clustered):
-    """NULL corpus vectors raise the same actionable ValueError as NULL
-    queries (contract: non-null fixed-dim embeddings) instead of an
-    opaque np.asarray/matmul crash."""
+    """A NULL corpus vector is accepted: the cosine scorer gives it 0.0
+    and SQ8 a NULL score ranked last, so with real neighbors to spare the
+    top-3 is what the clean corpus gives."""
     bad = clustered.unionByName(spark.createDataFrame(
         [(600, None)], "vec_id long, embedding array<double>"
     ))
     q = _queries(clustered)
-    for fn in (sim.sq8_topk_vectorized, sim.brute_force_topk_vectorized):
-        with pytest.raises(Exception, match="non-null"):
-            fn(bad, q, k=3).collect()
+    for fn in (sim.sq8_topk, sim.brute_force_topk):
+        assert _pairs_ranked(fn(bad, q, k=3)) == _pairs_ranked(
+            fn(clustered, q, k=3)
+        ), fn.__name__
 
 
 def test_assign_vectorized_bit_identical(spark, clustered):
@@ -368,30 +388,107 @@ def test_assign_twins_null_and_nan_parity(spark, clustered):
 
 
 def test_vectorized_topk_empty_and_null_queries(spark, clustered):
-    """Vectorized twins short-circuit an EMPTY query set to an empty
-    frame (matching the expression twins) and raise actionably on NULL
-    query vectors instead of crashing inside NumPy."""
+    """An EMPTY query set gives an empty frame, and a query set whose
+    only vector is NULL is accepted: every score ties (0.0 cosine, NULL
+    SQ8), so the ranks are the lowest neighbor ids, self excluded — the
+    literal set the expression scorers returned."""
     empty_q = clustered.filter(F.col("vec_id") < 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    assert sim.sq8_topk_vectorized(clustered, empty_q, k=3).count() == 0
-    assert sim.brute_force_topk_vectorized(clustered, empty_q, k=3).count() == 0
     null_q = spark.createDataFrame(
         [(1, None)], "query_id long, embedding array<double>"
     )
-    for fn in (sim.sq8_topk_vectorized, sim.brute_force_topk_vectorized):
-        with pytest.raises(ValueError, match="non-null"):
-            fn(clustered, null_q, k=3)
+    for fn in (sim.sq8_topk, sim.brute_force_topk):
+        assert fn(clustered, empty_q, k=3).count() == 0
+        assert _pairs_ranked(fn(clustered, null_q, k=3)) == {
+            (1, 0, 1), (1, 2, 2), (1, 3, 3)
+        }, fn.__name__
+
+
+def test_exact_scorers_bad_vectors(spark):
+    """Bad vectors through the one exact kernel per metric, with 7-row
+    Arrow batches so the batch-local top-k prunes. Corpus ids 0-5 are a
+    NULL vector, a NULL / NaN / +Inf / -Inf component and a zero vector;
+    10-39 are real, only 13, 21 and 29 with a positive first component.
+    Queries: e0 (300), real vector 17 (self excluded), NULL (301). The
+    expected sets are literals the expression scorers returned before
+    the NumPy kernels replaced them: a bad vector scores cosine 0.0 (so
+    ties rank by id and never hit a decon threshold) and SQ8 0.0, except
+    a NULL vector, whose SQ8 score is NULL and ranks last."""
+    from laradb_spark.pipelines.labels import semantic_decontaminate
+
+    real = [
+        [-0.902, -1.324, -0.248, 0.42], [-1.236, 0.11, -0.553, -0.785],
+        [-0.849, 1.635, 0.273, -1.233], [1.158, 1.6, 0.203, -1.732],
+        [-0.184, -1.163, -0.629, -0.488], [-0.813, 0.553, -0.063, -0.589],
+        [-0.51, 0.83, -1.643, -0.257], [-1.081, -0.173, -1.289, 0.021],
+        [-0.138, -0.304, -1.048, -0.396], [-1.191, -1.355, 0.225, -1.109],
+        [-1.27, 0.717, -1.998, 0.272], [1.302, 0.033, 0.044, -1.988],
+        [-0.333, -0.256, 0.962, -1.181], [-0.838, -1.099, -0.331, -0.84],
+        [-1.549, 0.568, 2.432, 0.642], [-0.945, 0.841, -0.607, -0.07],
+        [-1.45, -0.397, 0.189, -0.021], [-0.709, -0.365, -0.152, 0.242],
+        [-0.203, -0.865, 0.896, -1.298], [1.401, -1.282, 0.967, -0.361],
+        [-1.071, -1.136, 0.421, -1.055], [-1.372, 0.614, -1.197, -0.322],
+        [-0.107, -0.445, -0.054, 1.339], [-0.617, -1.259, -1.837, -0.205],
+        [-0.452, 0.265, -0.464, -0.479], [-0.821, -0.52, 0.16, -0.38],
+        [-0.2, 1.901, 0.479, -1.576], [-1.834, 0.348, -0.941, 0.907],
+        [-0.118, -0.615, -0.634, -0.993], [-0.148, 1.069, -0.325, 0.421],
+    ]
+    nan, inf = float("nan"), float("inf")
+    bad = [
+        (0, None),
+        (1, [1.0, None, 0.5, 0.2]),
+        (2, [1.0, nan, 0.5, 0.2]),
+        (3, [1.0, inf, 0.5, 0.2]),
+        (4, [1.0, -inf, 0.5, 0.2]),
+        (5, [0.0, 0.0, 0.0, 0.0]),
+    ]
+    corpus = spark.createDataFrame(
+        bad + [(10 + i, v) for i, v in enumerate(real)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(300, [1.0, 0.0, 0.0, 0.0]), (17, real[7]), (301, None)],
+        "query_id long, embedding array<double>",
+    )
+    bench = queries.select(F.col("query_id").alias("vec_id"), "embedding")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        brute = _pairs_ranked(sim.brute_force_topk(corpus, queries, k=4))
+        sq8 = _pairs_ranked(sim.sq8_topk(corpus, queries, k=4))
+        decon = {
+            (r.vec_id, r.n_hits)
+            for r in semantic_decontaminate(corpus, bench, tau=0.6).collect()
+        }
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert brute == {
+        (17, 20, 1), (17, 31, 2), (17, 33, 3), (17, 37, 4),
+        (300, 29, 1), (300, 21, 2), (300, 13, 3), (300, 0, 4),
+        (301, 0, 1), (301, 1, 2), (301, 2, 3), (301, 3, 4),
+    }
+    assert sq8 == {
+        (17, 20, 1), (17, 33, 2), (17, 37, 3), (17, 31, 4),
+        # Arrow hands vector 1's NULL component to the kernel as NaN, so
+        # it scores 0.0 and takes rank 4 (the expression scorer gave it a
+        # NULL score, ranked last, and ranked vector 2 here)
+        (300, 29, 1), (300, 21, 2), (300, 13, 3), (300, 1, 4),
+        (301, 0, 1), (301, 1, 2), (301, 2, 3), (301, 3, 4),
+    }
+    assert decon == {
+        (11, 1), (16, 1), (17, 1), (18, 1), (20, 1), (25, 1),
+        (27, 1), (29, 1), (31, 1), (33, 1), (34, 1), (37, 1),
+    }
 
 
 def test_nan_corpus_scores_fold_to_zero_through_prune(spark, clustered):
     """ADVICE r6: `NaN > 0` is TRUE in Spark, so the zero-norm `when`
     alone lets a NaN-component embedding emit a NaN cosine/SQ8 score —
     which Spark's desc rank orders FIRST while the Arrow prune sorts
-    LAST. The nanvl/quantize guards fold such scores to exactly 0.0, so
-    with tiny Arrow batches the NaN-poisoned corpus gives the SAME top-k
-    as the clean corpus on both the expression paths and their pruned
-    ranking (200 real candidates ≫ k → a 0.0-scored row never wins)."""
+    LAST. The scorers give such vectors exactly 0.0 (cosine's nanvl,
+    the NumPy kernels' zero fill), so with tiny Arrow batches the
+    NaN-poisoned corpus gives the SAME top-k as the clean corpus (200
+    real candidates ≫ k → a 0.0-scored row never wins)."""
     poison = spark.createDataFrame(
         [(900 + i, [float("nan")] * 4 + [1.0] * 4) for i in range(30)]
         + [(950, [float("inf")] + [0.5] * 7)],
@@ -479,9 +576,10 @@ def test_assign_twins_inf_parity_and_validator_rejects_inf(spark, clustered):
     """Review r7: ±Inf components must not diverge the assign twins (the
     nanvl'd expression scores an Inf-poisoned vector/centroid 0.0 via
     x/Inf or the NaN fold; the vectorized twin zero-substitutes on
-    ~isfinite, not just isnan), and the shared dense-matrix validator
-    must REJECT Inf instead of letting floor(Inf·127/Inf) wrap the SQ8
-    int64 matmul into scores that can outrank real neighbors."""
+    ~isfinite, not just isnan). SQ8 zero-fills an Inf vector too, so
+    floor(Inf·127/Inf) never wraps its int64 matmul into a score that
+    outranks real neighbors; the raising validator that the Gram,
+    whitening and PCA kernels keep still REJECTS Inf."""
     extra = spark.createDataFrame(
         [(800, [float("inf")] + [1.0] * 7), (801, [-float("inf")] * 8)],
         "vec_id long, embedding array<double>",
@@ -498,10 +596,17 @@ def test_assign_twins_inf_parity_and_validator_rejects_inf(spark, clustered):
     expr = {r.neighbor_id: r.cid for r in sim._assign(c, cents).collect()}
     fast = {r.neighbor_id: r.cid for r in sim._assign_vectorized(c, cents).collect()}
     assert expr == fast
-    # validator: vectorized scorers raise the uniform error on Inf
+    # SQ8 scores the Inf rows 0.0: the clean top-3 stands
     q = _queries(clustered)
-    with pytest.raises(Exception, match="Inf"):
-        sim.sq8_topk_vectorized(clustered.unionByName(extra), q, k=3).collect()
+    assert _pairs_ranked(
+        sim.sq8_topk(clustered.unionByName(extra), q, k=3)
+    ) == _pairs_ranked(sim.sq8_topk(clustered, q, k=3))
+    import pandas as pd
+
+    from laradb_spark.util import dense_matrix_fn
+
+    with pytest.raises(ValueError, match="Inf"):
+        dense_matrix_fn(8, "gram")(pd.Series([[float("inf")] + [1.0] * 7]))
 
 
 def test_ivf_append_index_serves_new_vectors(spark, clustered, tmp_path):

@@ -10,7 +10,6 @@ from laradb_spark.pipelines.labels import (
     label_centroid_outliers,
     label_centroids,
     semantic_decontaminate,
-    semantic_decontaminate_vectorized,
 )
 from laradb_spark.pipelines.similarity import brute_force_topk
 
@@ -159,75 +158,71 @@ def test_centroid_outliers_match_numpy(spark, emb):
 
 
 def test_semantic_decon_twins_agree(spark, emb):
+    """Bad vectors on both sides change nothing: adding a NULL vector, a
+    NaN, an Inf and a zero vector to the corpus, and a NULL and a NaN
+    vector to the benchmark, gives the same hits as the clean split (a
+    bad vector scores 0.0, as ``cosine`` gives it), with 9-row Arrow
+    batches."""
     df, _, _ = emb
-    corpus = df.filter(F.col("label") != 0)
-    bench = df.filter(F.col("label") == 0)
-    expr = {
-        r.vec_id: r.n_hits
-        for r in semantic_decontaminate(corpus, bench, tau=0.2).collect()
-    }
-    fast = {
-        r.vec_id: r.n_hits
-        for r in semantic_decontaminate_vectorized(corpus, bench, tau=0.2).collect()
-    }
-    assert expr == fast
-
-
-def test_semantic_decon_auto_gate_routes_and_agrees(spark, emb, monkeypatch):
-    """The size gate is pure cost selection: both routes emit identical
-    hit flags, and the router picks expression below the byte threshold,
-    vectorized above (forced via a monkeypatched size estimate)."""
-    import laradb_spark.pipelines.labels as lbmod
-    from laradb_spark.pipelines.labels import semantic_decontaminate_auto
-
-    df, _, _ = emb
-    corpus = df.filter(F.col("label") != 0)
-    bench = df.filter(F.col("label") == 0)
-    small = {
+    nan, inf = float("nan"), float("inf")
+    dirty = spark.createDataFrame(
+        [(900, None, 1), (901, [nan] * 8, 1), (902, [inf] + [1.0] * 7, 2),
+         (903, [0.0] * 8, 2), (904, None, 0), (905, [1.0] * 7 + [nan], 0)],
+        "vec_id long, embedding array<double>, label int",
+    )
+    both = df.unionByName(dirty)
+    clean = {
         (r.vec_id, r.n_hits)
-        for r in semantic_decontaminate_auto(corpus, bench, tau=0.2).collect()
+        for r in semantic_decontaminate(
+            df.filter(F.col("label") != 0), df.filter(F.col("label") == 0), tau=0.2
+        ).collect()
     }
-    monkeypatch.setattr(lbmod, "plan_size_bytes", lambda _df: 1 << 40)
-    big = {
-        (r.vec_id, r.n_hits)
-        for r in semantic_decontaminate_auto(corpus, bench, tau=0.2).collect()
-    }
-    assert small == big and len(small) > 0
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "9")
+    try:
+        got = {
+            (r.vec_id, r.n_hits)
+            for r in semantic_decontaminate(
+                both.filter(F.col("label") != 0),
+                both.filter(F.col("label") == 0),
+                tau=0.2,
+            ).collect()
+        }
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert got == clean and clean
 
 
 def test_semantic_decon_vectorized_empty_benchmark(spark, emb):
     df, _, _ = emb
     empty = df.filter(F.col("label") == 999)
-    out = semantic_decontaminate_vectorized(df, empty, tau=0.2)
+    out = semantic_decontaminate(df, empty, tau=0.2)
     assert out.count() == 0
     assert out.columns == ["vec_id", "n_hits"]
 
 
 def test_semantic_decon_vectorized_rejects_null_benchmark(spark):
+    """A benchmark of NULL vectors is accepted and matches nothing (a
+    NULL vector scores 0.0, as cosine gives it), so nothing hits."""
     corpus = spark.createDataFrame(
         [(0, [1.0, 0.0])], "vec_id long, embedding array<double>"
     )
     bench = spark.createDataFrame(
         [(9, None)], "vec_id long, embedding array<double>"
     )
-    with pytest.raises(ValueError, match="non-null"):
-        semantic_decontaminate_vectorized(corpus, bench, tau=0.2)
+    assert semantic_decontaminate(corpus, bench, tau=0.2).collect() == []
 
 
 def test_semantic_decon_vectorized_zero_vectors_match_expr(spark):
-    # zero-norm on either side scores 0.0 against everything in BOTH twins
+    # zero-norm on either side scores 0.0 against everything, as
+    # cosine's zero-norm guard gives it
     corpus = spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [1.0, 0.0])], "vec_id long, embedding array<double>"
     )
     bench = spark.createDataFrame(
         [(9, [1.0, 0.0]), (10, [0.0, 0.0])], "vec_id long, embedding array<double>"
     )
-    expr = {r.vec_id: r.n_hits for r in semantic_decontaminate(corpus, bench, 0.5).collect()}
-    fast = {
-        r.vec_id: r.n_hits
-        for r in semantic_decontaminate_vectorized(corpus, bench, 0.5).collect()
-    }
-    assert expr == fast == {1: 1}
+    got = {r.vec_id: r.n_hits for r in semantic_decontaminate(corpus, bench, 0.5).collect()}
+    assert got == {1: 1}
 
 
 def test_corpus_integrity_audit_counts_each_defect(spark):

@@ -8,6 +8,7 @@ DuckDB oracle and the plan invariants, in the default pass."""
 import pytest
 from pyspark.sql import functions as F
 
+from laradb_spark.operators import ranking
 from laradb_spark.operators.skew import salted_agg, salted_join_hot_keys
 from laradb_spark.workloads import all_specs
 from tools.check_correctness import (
@@ -129,11 +130,11 @@ def test_quartiles_no_global_single_partition_window(spark, sfq, monkeypatch):
     """customer_spend_quartiles must not funnel all rows through one task:
     no SinglePartition exchange, no partition-less Window sort — the
     two-phase rank (range partition + local row_number + offsets) keeps
-    every stage parallel. The env pin audits the AT-SCALE route: on a
+    every stage parallel. The gate pin audits the AT-SCALE route: on a
     gate-sized fixture grouped_rank would take its small-frame window
     (legitimately per-group-partitioned), which is not the shape this
     test exists to certify."""
-    monkeypatch.setenv("LARADB_RANK_TWO_PHASE_ONLY", "1")
+    monkeypatch.setattr(ranking, "RANK_WINDOW_MAX_BYTES", -1)
     qs, sf = sfq
     df = qs["customer_spend_quartiles"](spark, sf)
     plan = _plan(df)
@@ -148,10 +149,10 @@ def test_grouped_rank_queries_no_low_cardinality_window(spark, sfq, monkeypatch)
     """median_value_by_type and trim_length_outliers rank via the two-phase
     grouped_rank, not Window.partitionBy(<5-or-20-value key>): every
     row_number window in their plans must be sharded by _pid, so no task
-    ever sorts a whole group regardless of group cardinality. Env pin:
+    ever sorts a whole group regardless of group cardinality. Gate pin:
     audit the at-scale route, not the small-frame window the gate picks
     on a fixture-sized input."""
-    monkeypatch.setenv("LARADB_RANK_TWO_PHASE_ONLY", "1")
+    monkeypatch.setattr(ranking, "RANK_WINDOW_MAX_BYTES", -1)
     qs, sf = sfq
     for qname in ("median_value_by_type", "trim_length_outliers"):
         plan = _plan(qs[qname](spark, sf))
@@ -165,9 +166,7 @@ def test_grouped_rank_queries_no_low_cardinality_window(spark, sfq, monkeypatch)
 
 
 ANN_FAMILY = (
-    "ann_brute_force",
     "ann_brute_force_fast",
-    "ann_sq8_topk",
     "ann_sq8_fast",
     "ann_lsh_topk",
     "ann_lsh_multiprobe",
@@ -177,7 +176,6 @@ ANN_FAMILY = (
 )
 
 
-@pytest.mark.slow  # driver-verify gate (r16): long-tail; run with -m ""
 def test_ann_family_no_per_query_ranking_window(spark, sfq, monkeypatch):
     """The ANN/hard-negatives/tfidf family ranks via the two-phase
     grouped_rank: with few queries against a huge corpus, a
@@ -185,9 +183,9 @@ def test_ann_family_no_per_query_ranking_window(spark, sfq, monkeypatch):
     each query's whole candidate set in ONE task. Every row_number window
     in these plans must be sharded by _pid — except IVF's probe-selection
     window, whose input is queries × centroids (ordered by _cc), bounded
-    by the centroid count, never the corpus. Env pin: audit the at-scale
+    by the centroid count, never the corpus. Gate pin: audit the at-scale
     route (see test_grouped_rank_queries_no_low_cardinality_window)."""
-    monkeypatch.setenv("LARADB_RANK_TWO_PHASE_ONLY", "1")
+    monkeypatch.setattr(ranking, "RANK_WINDOW_MAX_BYTES", -1)
     qs, sf = sfq
     for qname in ANN_FAMILY:
         plan = _plan(qs[qname](spark, sf))
@@ -237,14 +235,13 @@ def test_grouped_rank_small_frame_route_parity(spark, monkeypatch, tmp_path):
         "overwrite"
     ).parquet(str(tmp_path / "rank_fixture"))
     df = spark.read.parquet(str(tmp_path / "rank_fixture"))
-    monkeypatch.delenv("LARADB_RANK_TWO_PHASE_ONLY", raising=False)
     small = grouped_rank(df, ["g"], [F.asc("v"), F.asc("id")])
     # a createDataFrame plan has a size estimate well under the gate —
     # prove the route actually flipped (no _pid-sharded window)
     assert "_pid" not in small.columns
     plan = small._jdf.queryExecution().executedPlan().toString()
     assert "_pid" not in plan
-    monkeypatch.setenv("LARADB_RANK_TWO_PHASE_ONLY", "1")
+    monkeypatch.setattr(ranking, "RANK_WINDOW_MAX_BYTES", -1)
     two = grouped_rank(df, ["g"], [F.asc("v"), F.asc("id")])
     assert small.columns == two.columns
     assert small.schema["_r"].dataType == two.schema["_r"].dataType

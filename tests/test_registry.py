@@ -38,12 +38,6 @@ SHARED_ORACLES = {
         "the stored-index PRF route versus the inline route over the same scoring chain",
     ("decon_hashscreen", "decontaminate_docs"):
         "the xxhash64 prescreen must not change the exact decontamination result",
-    ("ann_brute_force", "ann_brute_force_fast"):
-        "the vectorized scorer raises on NULL/NaN vectors; the expression one ranks them last",
-    ("ann_sq8_fast", "ann_sq8_topk"):
-        "the vectorized scorer raises on NULL/NaN vectors; the expression one ranks them last",
-    ("semantic_decon", "semantic_decon_fast"):
-        "the vectorized scorer raises on NULL/NaN vectors; the expression one gives them no hits",
 }
 
 
