@@ -32,7 +32,6 @@ from ..util import (
     fan_out,
     literal_frame,
     persist_once,
-    plan_size_bytes,
     read_stored,
 )
 
@@ -191,7 +190,7 @@ def cosine(a: Column, b: Column) -> Column:
       unpruned paths by construction.
 
     The NumPy kernels (``brute_force_topk``, ``semantic_decontaminate``,
-    ``_assign_vectorized``) give a bad vector the same 0.0 by
+    ``_assign``) give a bad vector the same 0.0 by
     zero-filling it (``_zero_filled_matrix_fn``).
 
     The denominator is bound once (util.bind_once): it appears in both
@@ -495,16 +494,6 @@ def lsh_topk_multiprobe(
     return _topk_per_query(scored, query_id_col, "cos", k)
 
 
-# Cut the Lloyd chain's lineage every N rounds: plan size grows linearly
-# with chained rounds (each round's aggregation nests the previous one in
-# its assignment broadcast), so short trainings run as ONE fused job while
-# long ones still rebind through a bounded collect before the plan (and
-# its codegen) get heavy. (Expression-assignment path only: the vectorized
-# path must land centroids on the driver every round anyway, and its
-# per-round job is matmul-cheap.)
-LLOYD_CUT_EVERY = 2
-
-
 def _attach_rows(df: DataFrame, rows: list) -> DataFrame:
     """Remember a driver-literal frame's rows on the DataFrame object so
     consumers that need them driver-side again skip the parallelize →
@@ -522,41 +511,36 @@ def _collect_rows(df: DataFrame) -> list:
     return rows if rows is not None else df.collect()
 
 
-def _assign_vectorized(c: DataFrame, cents: DataFrame) -> DataFrame:
-    """Arrow twin of ``_assign`` — BIT-IDENTICAL assignments by
-    construction, at NumPy speed instead of the interpreted per-(vector ×
-    centroid) HOF cosine (the corpus-scale stage of SemDeDup/IVF; the
-    expression form was the training bottleneck).
+def _assign(c: DataFrame, cents: DataFrame) -> DataFrame:
+    """Nearest-centroid assignment of a ``(neighbor_id, cvec)`` frame:
+    one ``mapInPandas`` pass scoring each Arrow batch against the
+    driver-side centroid matrix with NumPy (the corpus-scale stage of
+    IVF, IVF-PQ and SemDeDup).
 
-    Exactness argument, term by term:
+    The scores are exactly the expression ``cosine()``'s (and the SQL
+    oracles'), term by term:
       * dot and norm accumulate DIM-SEQUENTIALLY — a Python loop over
         dims of vectorized adds reproduces the HOF fold's association
         ``((0 + x₀) + x₁) + …`` element-for-element (no np.dot/matmul:
         those sum pairwise and can differ in the last ulp, which near a
         tie flips an assignment);
-      * zero-norm guard mirrors ``when(d > 0, dot/d).otherwise(0.0)``;
+      * the zero-norm guard mirrors ``when(d > 0, dot/d).otherwise(0.0)``;
       * centroid columns are processed in cid-ASC order and ``np.argmax``
-        returns the FIRST maximum, reproducing
-        ``max_by(cid, struct(_cc, -cid))``'s ties → smallest cid;
+        returns the FIRST maximum: ties → smallest cid, the oracles'
+        ``ORDER BY cos DESC, cid ASC``;
       * NULL vectors and NULL/NaN/±Inf components score 0.0 against
         every centroid (``_zero_filled_matrix_fn`` substitutes the zero
-        vector, whose zero norm trips the same guard; the expression
-        twin's nanvl'd scores for them are 0.0) → assigned to the
-        smallest cid — exactly what the expression twin's three-valued
-        ``when`` yields for them, so the ``_assign_auto`` size gate is
-        pure cost selection, never a semantics switch. The SAME
+        vector, whose zero norm trips the guard — what the nanvl'd
+        ``cosine`` gives them) → assigned to the smallest cid. The SAME
         substitution applies on the CENTROID side: a NULL or
         NaN-component centroid (a NULL embedding among the lowest-id
-        init rows) matches nothing, as the expression twin's
-        NULL-``cent`` (null norm → ``when`` false → 0.0) does. If EVERY
-        centroid is NULL all scores are 0.0 and every vector goes to the
-        smallest cid. Ragged dims raise (the expression twin's
-        zip_with-padding behavior there is undefined-by-contract).
-    Pinned by test_ann::test_assign_vectorized_bit_identical.
+        init rows) matches nothing. If EVERY centroid is NULL all scores
+        are 0.0 and every vector goes to the smallest cid. Ragged dims
+        raise.
+    Pinned by the literal assignment maps in tests/test_ann.py.
 
-    Centroids land driver-side (k × d, tiny by construction). Output
-    matches ``_assign``: (cid, neighbor_id, cvec) — NULL vectors pass
-    through as NULL."""
+    Centroids land driver-side (k × d, tiny by construction). Output is
+    (cid, neighbor_id, cvec) — NULL vectors pass through as NULL."""
     import numpy as np
     import pandas as pd
 
@@ -565,18 +549,17 @@ def _assign_vectorized(c: DataFrame, cents: DataFrame) -> DataFrame:
         key=lambda t: t[0],
     )
     if not rows:
-        # empty corpus → empty centroid set → empty assignment (the
-        # expression twin's empty join does the same)
+        # empty corpus → empty centroid set → empty assignment
         return literal_frame(c.sparkSession, 
             [], "cid long, neighbor_id long, cvec array<double>"
         )
     cids = np.asarray([t[0] for t in rows], dtype=np.int64)
     # bad centroids AND bad vectors become the zero vector: the nanvl'd
-    # expression twin scores them 0.0 against everything (NaN folds; an
-    # Inf norm makes every dot/d either x/Inf = 0.0 or NaN → 0.0),
-    # exactly what a zero norm yields. With every centroid NULL the
-    # matrices have zero columns and every vector ties at 0.0.
-    C, to_matrix = _small_side_matrix([v for _, v in rows], "_assign_vectorized")
+    # cosine scores them 0.0 against everything (NaN folds; an Inf norm
+    # makes every dot/d either x/Inf = 0.0 or NaN → 0.0), exactly what a
+    # zero norm yields. With every centroid NULL the matrices have zero
+    # columns and every vector ties at 0.0.
+    C, to_matrix = _small_side_matrix([v for _, v in rows], "_assign")
     dim = C.shape[1]
     nc = np.zeros(len(C))
     for j in range(dim):
@@ -612,39 +595,10 @@ def _assign_vectorized(c: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-# Below this input size the vectorized assignment's fixed costs (Python
-# worker spin-up + one materializing job per Lloyd round instead of one
-# fused expression job) outweigh its matmul win: measured ~neutral-to-
-# slower at 0.8 MB / 2k vectors, 6-10x faster at 24 MB / 60k vectors.
-VEC_ASSIGN_MIN_BYTES = 2 << 20
-
-#: ivf_topk pair-scorer gate: estimated (query_bytes x corpus_bytes x
-#: probe_fraction) above which the cogrouped Arrow block scorer beats the
-#: interpreted per-pair HOF cosine. Derivation: parquet plan stats run
-#: ~500 bytes/row for 64-dim doubles, so 1e11 bytes-squared corresponds to
-#: roughly 350k scored pairs - comfortably below the 6M-pair point where
-#: the expression path measured 42 s vs ~2 s (sf0.1 corpus-wide audit),
-#: and comfortably above oracle-scale inputs (sf0.01 estimates ~1.6e9, so
-#: the checker keeps exercising the expression path).
-PAIR_VEC_MIN_BYTES2 = 1e11
-
-
-def _assign_auto(c: DataFrame, cents: DataFrame) -> DataFrame:
-    """Pick the assignment twin by input size (plan stats, no job):
-    expression HOF below VEC_ASSIGN_MIN_BYTES, Arrow matmul above. The
-    twins are bit-identical (test_assign_vectorized_bit_identical), so
-    the gate is pure cost selection, never a semantics switch."""
-    size = plan_size_bytes(c)
-    if size is not None and size < VEC_ASSIGN_MIN_BYTES:
-        return _assign(c, cents)
-    return _assign_vectorized(c, cents)
-
-
 def _train_centroids(
     c: DataFrame,
     n_centroids: "int | None",
     lloyd_iters: int,
-    vectorized: "bool | None" = None,
 ) -> DataFrame:
     """k-means-lite centroid training (deterministic init = the
     ``n_centroids`` lowest ids, ``lloyd_iters`` Lloyd rounds;
@@ -654,90 +608,58 @@ def _train_centroids(
     several downstream consumers (full assignment, query probing, index
     writes) never re-execute training.
 
-    Default path assigns with ``_assign_vectorized`` (bit-identical to
-    the expression assignment — see its docstring) and materializes the
-    tiny centroid frame every round, since the next round's scorer needs
-    it driver-side anyway; the mean update stays the expression-side
-    posexplode+avg on both paths, so centroid VALUES are identical.
-    ``vectorized=False`` keeps the pure-expression Lloyd chain
-    (lazily chained, cut every ``LLOYD_CUT_EVERY`` rounds)."""
+    Each round assigns with ``_assign``, averages members per (cid, dim)
+    on the executors (posexplode + avg) and collects the tiny means to
+    the driver, where the next round's assignment needs them anyway."""
+    from pyspark.sql import Row
+
     spark = c.sparkSession
     if n_centroids is None:
         n_centroids = ivf_auto_centroids(c)
-    if vectorized is None:  # size-gated default — see _assign_auto
-        size = plan_size_bytes(c)
-        vectorized = size is None or size >= VEC_ASSIGN_MIN_BYTES
-    # Pin the training frame on the VECTORIZED path: there every Lloyd
-    # round is its own ACTION (the mean-update collect), so an unpinned
-    # ``c`` re-runs its scan + fan-out exchange once per round —
-    # lloyd_iters full corpus passes where one suffices (guide §1.2/§5:
-    # cache only what is reused). Identical rows either way. The pin is
-    # RELEASED before returning (cents is lineage-free by then): caching
-    # exactly ``c`` would otherwise substitute into every later plan that
-    # contains it as a subtree and swap plan_size_bytes gates
-    # (_assign_auto, the pair-volume gate) from file-size estimates to
-    # in-memory stats mid-session — measured as a twin-parity flip on
-    # NaN corpora. The expression path chains rounds lazily (no
-    # per-round action) and pins its own norm-augmented frame below.
+    # Pin the training frame: every Lloyd round is its own ACTION (the
+    # mean-update collect), so an unpinned ``c`` re-runs its scan +
+    # fan-out exchange once per round — lloyd_iters full corpus passes
+    # where one suffices (guide §1.2/§5: cache only what is reused). The
+    # pin is RELEASED before returning (cents is lineage-free by then):
+    # caching exactly ``c`` would otherwise substitute into every later
+    # plan that contains it as a subtree and swap the plan_size_bytes
+    # reads of ``ranking.grouped_rank`` and ``fan_out`` from file-size
+    # estimates to in-memory stats mid-session.
     own_pin = False
-    if vectorized and lloyd_iters > 0:
+    if lloyd_iters > 0:
         lvl = c.storageLevel
         if not (lvl.useMemory or lvl.useDisk):
             c = c.persist()
             own_pin = True
-    # per-vector norm computed ONCE for all rounds (each round's assignment
-    # needs it; recomputing the 128-dim HOF fold per round doubles the loop)
-    if not vectorized and lloyd_iters > 0 and "_nv" not in c.columns:
-        c = persist_once(c.withColumn("_nv", norm(F.col("cvec"))))
     # try/finally: an exception between persist() and the release would
-    # otherwise leak the pin — and a lingering cache of exactly ``c``
-    # flips downstream plan_size_bytes gates for the rest of the session.
+    # otherwise leak the pin for the rest of the session.
     try:
         cents = (
             c.orderBy("neighbor_id").limit(n_centroids)
             .select(F.col("neighbor_id").alias("cid"), F.col("cvec").alias("cent"))
         )
-        for i in range(lloyd_iters):
-            assigned = (_assign_vectorized if vectorized else _assign)(c, cents)
+        for _ in range(lloyd_iters):
             # new centroid = element-wise mean of members (posexplode + avg)
             means_frame = (
-                assigned.select("cid", F.posexplode("cvec").alias("d", "x"))
+                _assign(c, cents)
+                .select("cid", F.posexplode("cvec").alias("d", "x"))
                 .groupBy("cid", "d")
                 .agg(F.avg("x").alias("m"))
             )
-            if vectorized or i + 1 == lloyd_iters or (i + 1) % LLOYD_CUT_EVERY == 0:
-                # Collect-and-assemble rounds (the vectorized path every
-                # round — the next round's scorer needs the centroids
-                # driver-side anyway — and the expression path's cut
-                # rounds): the per-cid array assembly — previously a
-                # second groupBy + array_sort(collect_list(struct))
-                # aggregate, i.e. one more Exchange + AQE stage-job per
-                # collected round — happens HERE on the (k × dim)-bounded
-                # means rows instead: sort by d within cid replicates
-                # array_sort(struct(d, m)) exactly (d is unique per cid),
-                # values untouched (r16, guide §2.4).
-                from pyspark.sql import Row
-
-                cid_t = means_frame.schema["cid"].dataType.simpleString()
-                means = means_frame.collect()
-                agg: dict = {}
-                for r in means:
-                    agg.setdefault(r["cid"], {})[int(r["d"])] = r["m"]
-                rows = [
-                    Row(cid=cid, cent=[m for _, m in sorted(vals.items())])
-                    for cid, vals in sorted(agg.items())
-                ]
-                cents = _attach_rows(
-                    literal_frame(spark, rows, f"cid {cid_t}, cent array<double>"),
-                    rows,
-                )
-                continue
-            # lazily-chained (non-cut) expression rounds keep the frame
-            # shape — no action runs here at all
-            cents = (
-                means_frame.groupBy("cid")
-                .agg(F.array_sort(F.collect_list(F.struct("d", "m"))).alias("dm"))
-                .select("cid", F.transform(F.col("dm"), lambda s: s["m"]).alias("cent"))
+            # The per-cid arrays are assembled HERE from the (k × dim)-
+            # bounded means rows, sorted by d within cid: a second
+            # groupBy + array_sort(collect_list(struct)) aggregate would
+            # add one more Exchange + AQE stage-job per round (r16,
+            # guide §2.4).
+            agg: dict = {}
+            for r in means_frame.collect():
+                agg.setdefault(r["cid"], {})[int(r["d"])] = r["m"]
+            rows = [
+                Row(cid=cid, cent=[m for _, m in sorted(vals.items())])
+                for cid, vals in sorted(agg.items())
+            ]
+            cents = _attach_rows(
+                literal_frame(spark, rows, "cid long, cent array<double>"), rows
             )
     finally:
         if own_pin:
@@ -782,21 +704,21 @@ def ivf_auto_centroids(c: DataFrame) -> int:
 def _ivf_pair_scores_cogrouped(
     assigned: DataFrame, probes: DataFrame, query_id_col: str
 ) -> DataFrame:
-    """Arrow pair scorer for list-pruned ANN: cogroup the assigned
-    corpus with the probing queries BY LIST (cid) and score each list's
+    """Pair scorer for list-pruned ANN: cogroup the assigned corpus
+    with the probing queries BY LIST (cid) and score each list's
     (queries × members) block with dim-sequential NumPy folds —
     BIT-IDENTICAL to the expression ``cosine()`` per pair (the
-    ``_assign_vectorized`` exactness recipe: sequential dim
-    accumulation, ``denom > 0`` guard with NaN comparisons falling to
-    the same 0.0 the expression's ``nanvl`` yields, NULL vectors zero
-    via their zero norm). Per-group size = list members × probing
-    queries — bounded by list size, which real IVF keeps ~√N by scaling
-    n_centroids with the corpus.
+    ``_assign`` exactness recipe: sequential dim accumulation,
+    ``denom > 0`` guard with NaN comparisons falling to the same 0.0 the
+    expression's ``nanvl`` yields, NULL vectors zero via their zero
+    norm). Per-group size = list members × probing queries — bounded by
+    list size, which real IVF keeps ~√N by scaling n_centroids with the
+    corpus.
 
     The query-id output type is DERIVED from the probes schema (like
-    ``_pq_adc_topk``'s short-circuit) — ``ivf_topk``'s expression path
-    accepts any id type, and the size-based auto gate must not change
-    the result schema when it flips routes."""
+    ``_pq_adc_topk``'s short-circuit), so any id type serves — a STRING
+    query id is compared with the BIGINT neighbor ids in NumPy (never
+    equal), where a SQL self-pair filter would fail its ANSI cast."""
     import numpy as np
     import pandas as pd
 
@@ -855,56 +777,45 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    vectorized: "bool | None" = None,
 ) -> DataFrame:
     """IVF-flat ANN: k-means-lite centroids (see ``_train_centroids``),
     corpus partitioned by nearest centroid, queries probe the ``n_probe``
     nearest lists.
 
     Scale shape: centroids are tiny (driver-side after a distributed
-    aggregate per round); assignment is a broadcast-join map stage; at
-    100 TB the assigned corpus is written partitioned by ``cid`` so
-    probes prune partitions — that stored layout is ``ivf_build_index``
-    / ``ivf_search_index`` below.
+    aggregate per round); assignment is a map-only Arrow stage
+    (``_assign``); at 100 TB the assigned corpus is written partitioned
+    by ``cid`` so probes prune partitions — that stored layout is
+    ``ivf_build_index`` / ``ivf_search_index`` below.
 
-    Pair scoring is size-gated like ``_assign_auto``: a handful of
-    queries scores with the expression ``cosine()`` (no extra stage);
-    a LARGE query side (corpus-wide audits — every vector a query)
-    routes to the cogrouped Arrow scorer, which is bit-identical per
-    pair (same fold association and degenerate-value semantics) but
-    ~50× cheaper per pair than the interpreted HOF. Pure cost
-    selection, never semantics — pinned by test_ann."""
+    Pairs score in the cogrouped NumPy block scorer
+    (``_ivf_pair_scores_cogrouped``), bit-identical per pair to the
+    expression ``cosine()`` — pinned by test_ann."""
     if n_centroids is None:  # √N default, counted pre-fan_out (no exchange)
         n_centroids = ivf_auto_centroids(corpus)
     c = fan_out(corpus, CPU_HEAVY).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cvec")
     )
     cents = _train_centroids(c, n_centroids, lloyd_iters)
-    assigned = _assign_auto(c, cents)
     return _ivf_probe_score_rank(
-        assigned, cents, c, queries, n_centroids, n_probe, k,
-        vec_col, query_id_col, vectorized,
+        _assign(c, cents), cents, queries, n_probe, k, vec_col, query_id_col
     )
 
 
 def _ivf_probe_score_rank(
     assigned: DataFrame,
     cents: DataFrame,
-    c: DataFrame,
     queries: DataFrame,
-    n_centroids: int,
     n_probe: int,
     k: int,
     vec_col: str,
     query_id_col: str,
-    vectorized: "bool | None",
 ) -> DataFrame:
     """The shared probe → score → rank tail of the inline IVF searches
     (``ivf_topk`` and its filtered variant): queries pick their
     ``n_probe`` nearest centroids, list members score against the
-    probing queries (size-gated expression vs cogrouped-Arrow twins),
-    top-k per query via the two-phase ranking. ``c`` is the corpus frame
-    the pair-volume gate sizes against."""
+    probing queries in ``_ivf_pair_scores_cogrouped``, top-k per query
+    via the two-phase ranking."""
     q = queries.select(
         F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("qvec")
     )
@@ -918,30 +829,9 @@ def _ivf_probe_score_rank(
     # final ranking below goes through grouped_rank instead.
     wq = Window.partitionBy(query_id_col).orderBy(F.desc("_cc"), F.asc("cid"))
     probes = qc.withColumn("_r", F.row_number().over(wq)).filter(F.col("_r") <= n_probe)
-    if vectorized is None:
-        # the cost driver is PAIRS (|Q|·|C|·probe fraction), not either
-        # side's bytes: estimate it from the two plan sizes — at ~350k+
-        # estimated pairs the interpreted HOF fold loses to the Arrow
-        # block scorer (measured 42 s vs ~2 s at 6M pairs, sf0.1 audit)
-        qsize = plan_size_bytes(q)
-        csize = plan_size_bytes(c)
-        if qsize is not None and csize is not None:
-            vectorized = (
-                qsize * csize * (n_probe / max(n_centroids, 1))
-                >= PAIR_VEC_MIN_BYTES2
-            )
-        else:
-            vectorized = qsize is not None and qsize >= VEC_ASSIGN_MIN_BYTES
-    if vectorized:
-        scored = _ivf_pair_scores_cogrouped(
-            assigned, probes.select(query_id_col, "qvec", "cid"), query_id_col
-        )
-    else:
-        scored = (
-            assigned.join(F.broadcast(probes.select(query_id_col, "qvec", "cid")), on="cid")
-            .filter(F.col("neighbor_id") != F.col(query_id_col))
-            .select(query_id_col, "neighbor_id", cosine(F.col("qvec"), F.col("cvec")).alias("cos"))
-        )
+    scored = _ivf_pair_scores_cogrouped(
+        assigned, probes.select(query_id_col, "qvec", "cid"), query_id_col
+    )
     return _topk_per_query(scored, query_id_col, "cos", k)
 
 
@@ -956,7 +846,6 @@ def ivf_topk_filtered(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    vectorized: "bool | None" = None,
 ) -> DataFrame:
     """Metadata-FILTERED ANN — ``ivf_topk`` restricted to the corpus rows
     satisfying ``corpus_where`` (a SQL boolean over ``corpus``'s columns:
@@ -985,10 +874,8 @@ def ivf_topk_filtered(
     c_kept = fan_out(corpus.filter(F.expr(corpus_where)), CPU_HEAVY).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cvec")
     )
-    assigned = _assign_auto(c_kept, cents)
     return _ivf_probe_score_rank(
-        assigned, cents, c_kept, queries, n_centroids, n_probe, k,
-        vec_col, query_id_col, vectorized,
+        _assign(c_kept, cents), cents, queries, n_probe, k, vec_col, query_id_col
     )
 
 
@@ -1023,7 +910,7 @@ def ivf_list_stats(
     )
     cents = _train_centroids(c, n_centroids, lloyd_iters)
     counts = (
-        _assign_auto(c, cents)
+        _assign(c, cents)
         .groupBy("cid")
         .agg(F.count(F.lit(1)).alias("n_members"))
     )
@@ -1067,7 +954,7 @@ def ivf_build_index(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cvec")
     )
     cents = _train_centroids(c, n_centroids, lloyd_iters)
-    assigned = _assign_auto(c, cents)
+    assigned = _assign(c, cents)
     if meta_cols:
         meta = corpus.select(F.col(id_col).alias("neighbor_id"), *meta_cols)
         assigned = assigned.join(meta, on="neighbor_id")
@@ -1139,7 +1026,7 @@ def ivf_append_index(
 ) -> None:
     """Append new vectors to a stored IVF index WITHOUT retraining: read
     the frozen ``(cid, cent)`` table, assign the (shard-sized) new batch
-    with the same bit-identical twins training used, and append to the
+    with the same ``_assign`` kernel training used, and append to the
     ``cid=`` partition directories — the incremental-ingest completion
     of the IVF serving story (digest/span/decon indexes have the same
     build/append/serve triple). Searches see appended vectors on their
@@ -1159,7 +1046,7 @@ def ivf_append_index(
     c = fan_out(new_vectors, CPU_HEAVY).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cvec")
     )
-    assigned = _assign_auto(c, cents)
+    assigned = _assign(c, cents)
     meta = (
         new_vectors.select(F.col(id_col).alias("neighbor_id"), *meta_cols)
         if meta_cols
@@ -1234,7 +1121,7 @@ def ivf_recenter_index(
         c = fan_out(corpus, CPU_HEAVY)
         cents = _train_centroids(c, n_centroids, lloyd_iters)
         new_corpus, new_cents = f"{path}/corpus._new", f"{path}/centroids._new"
-        _assign_auto(c, cents).write.partitionBy("cid").mode("overwrite").parquet(
+        _assign(c, cents).write.partitionBy("cid").mode("overwrite").parquet(
             new_corpus
         )
         cents.write.mode("overwrite").parquet(new_cents)
@@ -1464,7 +1351,7 @@ def semantic_dedup(
     if n_centroids is None:
         n_centroids = auto_centroids(c)
     cents = _train_centroids(c, n_centroids, lloyd_iters)
-    assigned = persist_once(_assign_auto(c, cents))
+    assigned = persist_once(_assign(c, cents))
 
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -1497,46 +1384,6 @@ def semantic_dedup(
     return (
         assigned.join(dropped, on="neighbor_id", how="left_anti")
         .select(F.col("neighbor_id").alias(id_col), "cid")
-    )
-
-
-def _assign(c: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: broadcast join + hash-aggregate argmax.
-
-    ``max_by`` over a (score, -cid) struct replaces the former
-    row_number window — same winner (ties → smallest cid, matching the
-    oracle's ``ORDER BY cos DESC, cid ASC ... rn = 1``) but a partial+
-    final HASH aggregate instead of a full shuffle+SORT of every
-    (vector × centroid) row: at N vectors × k centroids the sort is
-    O(Nk log Nk) through one exchange, the aggregate combines map-side
-    to one row per vector before shuffling."""
-    # Norms staged ONCE per vector / per centroid, NOT inside the pair
-    # expression: HOFs run interpreted with no codegen CSE (DEVNOTES #2),
-    # so an inline cosine() would recompute the 128-dim norm fold
-    # k-centroids times per vector (and twice more under the zero-norm
-    # `when`). Measured ~2× on the Lloyd loop at k=16.
-    cn = c if "_nv" in c.columns else c.withColumn("_nv", norm(F.col("cvec")))
-    ct = cents.withColumn("_nc", norm(F.col("cent")))
-    d = F.col("_nv") * F.col("_nc")
-    scored = cn.crossJoin(F.broadcast(ct)).select(
-        "neighbor_id",
-        "cvec",
-        # nanvl mirrors cosine(): a NaN component passes `NaN > 0`, and an
-        # un-folded NaN _cc would win max_by (Spark orders NaN greatest) —
-        # the vectorized twin scores such rows/centroids 0.0 instead
-        F.nanvl(
-            F.when(d > 0, dot(F.col("cvec"), F.col("cent")) / d).otherwise(F.lit(0.0)),
-            F.lit(0.0),
-        ).alias("_cc"),
-        "cid",
-    )
-    return (
-        scored.groupBy("neighbor_id")
-        .agg(
-            F.expr("max_by(cid, struct(_cc, -cid))").alias("cid"),
-            F.first("cvec").alias("cvec"),
-        )
-        .select("cid", "neighbor_id", "cvec")
     )
 
 
@@ -1629,7 +1476,7 @@ def _pq_books(per_sub: "list[list[tuple[int, list | None]]]", sd: int):
     """Driver-side NumPy form of per-subspace codebooks: for each sub,
     (cid array sorted ASC, centroid matrix with None/non-finite rows
     zero-filled, dim-sequential norms, RAW squared-norm folds) — the same
-    substitutions and fold association as ``_assign_vectorized`` (see its
+    substitutions and fold association as ``_assign`` (see its
     exactness argument). The squared fold is carried separately because
     ``sqrt(x)**2 != x`` in doubles, while the l2-surrogate oracle states
     ``list_dot_product(cent, cent)/2`` exactly — re-squaring the sqrt'd
@@ -1652,7 +1499,7 @@ def _pq_assign_fn(
     books, dim: int, emit: str, with_vec: bool, metric: str = "cos", coarse=None
 ):
     """mapInPandas kernel assigning ALL subspaces in one corpus pass —
-    per sub, the exact ``_assign_vectorized`` math on the slice
+    per sub, the exact ``_assign`` math on the slice
     (dim-sequential dot/norm folds, zero-norm guard, per-SLICE
     non-finite → zero-vector substitution, first-argmax → smallest cid).
     ``emit='cid'`` yields centroid labels (training rounds need them for
@@ -1668,7 +1515,7 @@ def _pq_assign_fn(
 
     ``coarse`` (a ``_coarse_book``) fuses the IVFADC front half into the
     SAME pass: each batch is coarse-assigned (the exact
-    ``_assign_vectorized`` cosine math), the assigned centroid is
+    ``_assign`` cosine math), the assigned centroid is
     subtracted, and the per-sub loop quantizes the RESIDUAL — so
     residual training/encoding costs ONE corpus scan per pass, no
     assignment pass, no residual join, no corpus×corpus code zip.
@@ -1758,7 +1605,7 @@ def _coarse_book(coarse_rows: list, dim: int):
     """Driver-side NumPy form of the coarse centroid table for the fused
     IVFADC kernel: (cid array sorted ASC, centroid matrix with
     NULL/non-finite rows zero-filled, sequential-fold norms) — the exact
-    substitutions of ``_assign_vectorized``."""
+    substitutions of ``_assign``."""
     import numpy as np
 
     rows = sorted(
@@ -1779,7 +1626,7 @@ def _coarse_book(coarse_rows: list, dim: int):
 
 
 def _coarse_argmax(V, coarse):
-    """The ``_assign_vectorized`` cosine argmax over a full-dim batch:
+    """The ``_assign`` cosine argmax over a full-dim batch:
     dim-sequential folds, zero-norm guard, first-argmax → smallest cid.
     ``V`` must already be NULL-row zero-filled; non-finite rows are
     zero-substituted on a scoring COPY only (the caller subtracts from
@@ -1826,8 +1673,8 @@ def pq_train_codebooks(
 
     The m subspace trainings are FUSED into one loop: each Lloyd round
     is ONE corpus pass (an Arrow kernel assigning all m subspaces at
-    once — ``_pq_assign_fn``, per-sub math identical to the
-    ``_assign_vectorized`` twin) plus one (sub, cid, dim)-grouped mean
+    once — ``_pq_assign_fn``, per-sub math identical to
+    ``_assign``) plus one (sub, cid, dim)-grouped mean
     aggregate, instead of m independent chains — at 100 TB that is
     lloyd_iters corpus scans total, not m·lloyd_iters.
 
@@ -1848,8 +1695,8 @@ def pq_train_codebooks(
     # Pin across the init collect + lloyd_iters mean-update actions (same
     # rationale as _train_centroids' pin, and released the same way
     # before returning — the returned codebook frame is lineage-free, and
-    # leaving exactly-``c`` cached would flip downstream plan-size gates
-    # from file estimates to in-memory stats).
+    # leaving exactly-``c`` cached would flip the plan_size_bytes reads
+    # of grouped_rank and fan_out from file estimates to in-memory stats).
     own_pin = False
     if lloyd_iters > 0:
         lvl = c.storageLevel
@@ -1857,8 +1704,7 @@ def pq_train_codebooks(
             c = c.persist()
             own_pin = True
     # try/finally from here on: an exception mid-training would leak the
-    # pin, and a lingering cache of exactly ``c`` flips downstream
-    # plan_size_bytes gates for the rest of the session.
+    # pin for the rest of the session.
     try:
         return _pq_train_codebooks_pinned(
             spark, c, dim, m, sd, k_sub, lloyd_iters, metric, coarse
@@ -2300,7 +2146,7 @@ def ivfpq_topk(
         F.col(vec_col).cast("array<double>").alias("cvec"),
     )
     coarse = _train_centroids(c, n_centroids, lloyd_iters)
-    assigned = _assign_auto(c, coarse).select("cid", "neighbor_id")
+    assigned = _assign(c, coarse).select("cid", "neighbor_id")
     cb_df = pq_train_codebooks(
         corpus, dim, m=m, k_sub=k_sub, lloyd_iters=lloyd_iters,
         id_col=id_col, vec_col=vec_col,
@@ -2357,7 +2203,7 @@ def ivfpq_build_index(
         F.col(vec_col).cast("array<double>").alias("cvec"),
     )
     coarse = _train_centroids(c, n_centroids, lloyd_iters)
-    assigned = _assign_auto(c, coarse).select("cid", "neighbor_id")
+    assigned = _assign(c, coarse).select("cid", "neighbor_id")
     cb_df = pq_train_codebooks(
         corpus, dim, m=m, k_sub=k_sub, lloyd_iters=lloyd_iters,
         id_col=id_col, vec_col=vec_col,
@@ -2398,7 +2244,7 @@ def ivfpq_append_index(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cvec"),
     )
-    assigned = _assign_auto(c, coarse).select("cid", "neighbor_id")
+    assigned = _assign(c, coarse).select("cid", "neighbor_id")
     enc = pq_encode(new_vectors, cb_df, dim, id_col=id_col, vec_col=vec_col)
     meta = (
         new_vectors.select(F.col(id_col).alias("neighbor_id"), *meta_cols)

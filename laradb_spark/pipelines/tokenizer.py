@@ -1282,7 +1282,7 @@ def bpe_byte_token_count(
     (map-only codegen projection: regex findall, hex byte map, literal
     merge chain), one docs-sized count aggregate with map-side combine.
     Expression path: demo/oracle-sized merge tables; real ~50k vocabs
-    take :func:`bpe_byte_token_count_arrow` (or the auto route)."""
+    take :func:`bpe_byte_token_count_arrow`."""
     bpe_validate_merges(merges)
     p = fan_out(df, BPE_COUNT_BYTES_PER_TASK).select(
         "doc_id", F.explode(pretokens(F.col(text))).alias("_p")
@@ -1366,42 +1366,6 @@ def bpe_train_bytes(
         )
     )
     return _bpe_train_loop(vocab, n_merges, batch, driver_vocab_max)
-
-
-#: Expression-path ceiling for the auto routes: each merge is one literal
-#: ``replace`` node in the plan, so past a few hundred merges the chain
-#: stops being a plan and starts being a codegen/stack liability; the
-#: Arrow twin's per-task LRU wins well before 50k-merge production vocabs.
-BPE_EXPR_MAX_MERGES = 256
-
-
-def bpe_token_count_auto(
-    df: DataFrame,
-    merges: list[tuple[str, str]] | None = None,
-    text: str = "text",
-) -> DataFrame:
-    """Size-gated route between the codegen expression chain and the
-    Arrow twin on ``len(merges)`` (the ``similarity._assign_auto``
-    precedent): demo/oracle-sized tables stay JVM-side; production
-    vocabularies take the Arrow encoder. Both sides are bit-identical
-    for trained tables, so the gate changes the PLAN, never the answer
-    (route-parity-tested)."""
-    merges = DEMO_BPE_MERGES if merges is None else merges
-    if len(merges) <= BPE_EXPR_MAX_MERGES:
-        return bpe_token_count(df, merges, text=text)
-    return bpe_token_count_arrow(df, merges, text=text)
-
-
-def bpe_byte_token_count_auto(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text: str = "text",
-) -> DataFrame:
-    """Byte-level twin of :func:`bpe_token_count_auto`: same
-    ``BPE_EXPR_MAX_MERGES`` gate, same bit-identical contract."""
-    if len(merges) <= BPE_EXPR_MAX_MERGES:
-        return bpe_byte_token_count(df, merges, text=text)
-    return bpe_byte_token_count_arrow(df, merges, text=text)
 
 
 def bpe_fertility(

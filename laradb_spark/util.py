@@ -101,10 +101,10 @@ def dense_matrix_fn(dim: int, who: str):
 def plan_size_bytes(df: DataFrame) -> "int | None":
     """Catalyst's size estimate for ``df`` (file bytes for a bare scan),
     read from the optimized plan's stats — NO job runs. None when stats
-    are unavailable (e.g. Spark Connect). Used by fan_out and by the
-    expr-vs-vectorized twin gates: fixed costs (Python worker spin-up,
-    extra job boundaries) only amortize above a data size, and this
-    estimate is the cheapest honest signal of it."""
+    are unavailable (e.g. Spark Connect). Used by fan_out and by
+    ranking.grouped_rank: fixed costs (Python worker spin-up, extra job
+    boundaries) only amortize above a data size, and this estimate is
+    the cheapest honest signal of it."""
     try:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
@@ -315,8 +315,9 @@ def literal_frame(spark, rows, schema) -> DataFrame:
 
     Values are rendered as type-exact SQL literals (ints, repr-exact
     doubles, hex-round-tripped strings, arrays thereof, typed NULLs) and
-    every cell is CAST to the schema's type, so the resulting frame is
-    value- and schema-identical to the createDataFrame twin. Any row
+    every cell is CAST to the schema's type and every column keeps the
+    schema's nullability, so the resulting frame is value- and
+    schema-identical (``schema.json()``) to the createDataFrame twin. Any row
     content outside the covered types, any oversized frame
     (LITERAL_FRAME_MAX_CELLS), or any parse surprise falls back to plain
     ``createDataFrame`` — this helper is a dispatch optimization, never
@@ -331,8 +332,13 @@ def literal_frame(spark, rows, schema) -> DataFrame:
             return spark.createDataFrame(rows, schema)
         if any("`" in f.name for f in st.fields):
             return spark.createDataFrame(rows, schema)
+        # a VALUES column is nullable only if some row holds a NULL; the
+        # IF keeps each value while typing the column as nullable as the
+        # schema says (folded away by the optimizer, so still no job)
         names = ", ".join(
-            f"c{i} AS `{f.name}`" for i, f in enumerate(st.fields)
+            (f"IF(c{i} IS NULL, NULL, c{i})" if f.nullable else f"c{i}")
+            + f" AS `{f.name}`"
+            for i, f in enumerate(st.fields)
         )
         if not rows:
             sel = ", ".join(

@@ -4351,12 +4351,6 @@ def bpe_byte_token_count_fast_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def bpe_token_count_auto_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The size-gated auto route (demo table → expression side); the
-    word-level BPE oracle certifies the route returns the same answer."""
-    return tk.bpe_token_count_auto(load(spark, sf_dir, "documents"))
-
-
 BPE_BYTE_TOKEN_COUNT_SQL = _bpe_byte_count_sql(tk.DEMO_BYTE_BPE_MERGES)
 
 
@@ -4918,7 +4912,6 @@ QUERIES = {
         QUALITY_CLASSIFIER_EVAL_SQL.format(qc_sql=QUALITY_CLASSIFIER_SQL),
     ),
     "bpe_token_count": (bpe_token_count_q, BPE_TOKEN_COUNT_SQL),
-    "bpe_token_count_auto": (bpe_token_count_auto_q, BPE_TOKEN_COUNT_SQL),
     "bpe_byte_token_count": (bpe_byte_token_count_q, BPE_BYTE_TOKEN_COUNT_SQL),
     "bpe_contraction_parity": (bpe_contraction_parity_q, BPE_CONTRACTION_PARITY_SQL),
     "bpe_fertility": (bpe_fertility_q, BPE_FERTILITY_SQL),

@@ -307,14 +307,21 @@ def test_vectorized_topk_null_corpus_raises(spark, clustered):
         ), fn.__name__
 
 
-def test_assign_vectorized_bit_identical(spark, clustered):
-    """_assign_vectorized ≡ _assign exactly — same cid for every vector —
-    on clustered data PLUS a zero vector (zero-norm guard) and vectors
-    crafted to have equal cosine to two centroids (tie → smallest cid).
-    The dim-sequential accumulation must reproduce the HOF fold's float
-    association; np.dot's pairwise summation would not."""
-    from pyspark.sql import functions as F
+def _cid_map(digits: str, extra: dict) -> dict:
+    """neighbor_id → cid from one digit per id 0..199, plus the extra
+    rows. Every literal map below was recorded when the expression
+    broadcast-join assignment and the NumPy one both existed and agreed."""
+    digits = "".join(digits.split())
+    assert len(digits) == 200
+    return {i: int(ch) for i, ch in enumerate(digits)} | extra
 
+
+def test_assign_vectorized_bit_identical(spark, clustered):
+    """_assign gives the recorded cid for every vector — on clustered
+    data PLUS a zero vector (zero-norm guard) and vectors crafted to
+    have equal cosine to two centroids (tie → smallest cid). The
+    dim-sequential accumulation must reproduce the HOF fold's float
+    association; np.dot's pairwise summation would not."""
     extra = spark.createDataFrame(
         [(700, [0.0] * 8), (701, [1e-9] * 8), (702, [-2.5] * 8)],
         "vec_id long, embedding array<double>",
@@ -327,20 +334,36 @@ def test_assign_vectorized_bit_identical(spark, clustered):
         c.orderBy("neighbor_id").limit(6)
         .select(F.col("neighbor_id").alias("cid"), F.col("cvec").alias("cent"))
     )
-    expr = {r.neighbor_id: r.cid for r in sim._assign(c, cents).collect()}
-    fast = {r.neighbor_id: r.cid for r in sim._assign_vectorized(c, cents).collect()}
-    assert expr == fast
-    # Training with the vectorized assignment yields the same cluster
-    # STRUCTURE; centroid floats may differ in the last ulp because
-    # F.avg's partial-sum order follows the partitioning — true of the
-    # expression path across partition layouts too (the pipeline
-    # tolerates this by design: assignments are far from cosine ties and
-    # oracles compare rounded outputs).
-    e_cents = {r.cid: list(r.cent) for r in sim._train_centroids(c, 6, 2, vectorized=False).collect()}
-    v_cents = {r.cid: list(r.cent) for r in sim._train_centroids(c, 6, 2, vectorized=True).collect()}
-    assert set(e_cents) == set(v_cents)
-    for cid in e_cents:
-        assert np.allclose(e_cents[cid], v_cents[cid], rtol=1e-12), cid
+    got = {r.neighbor_id: r.cid for r in sim._assign(c, cents).collect()}
+    assert got == _cid_map(
+        "01234512340123401234012340123401234012340123401234"
+        "01234512345123401234012345123451234012340123451234"
+        "01234012340123401234012345123401234012340123451234"
+        "01234512345123401234012340123451234012345123451234",
+        {700: 0, 701: 5, 702: 3},
+    )
+    # Training lands on the recorded centroid table. Centroid floats may
+    # move in the last ulp because F.avg's partial-sum order follows the
+    # partitioning (the pipeline tolerates this by design: assignments
+    # are far from cosine ties and oracles compare rounded outputs).
+    want = {
+        0: [0.042501682533366766, 4.931783583662376, 4.638804071673365, -1.7982367364008731,
+            -1.2311766057978268, -1.9693900933911803, 2.162285845237473, -0.07183002900969958],
+        1: [2.78376855882878, -7.477148286335128, 6.379977854195788, -0.35004237949167705,
+            2.733644151397048, -0.40020384076314536, -1.4202819125582677, 1.8864048667341364],
+        2: [3.2874505407522348, -0.8698576523055447, -0.5457643984408926, 2.7527591876390862,
+            -3.508804328524563, -6.011018580685227, 1.675101255144569, -2.7385877477834777],
+        3: [-7.626942817126906, -3.368201158239899, -1.9557854080507988, -4.813786401962264,
+            -5.869991706439517, -0.014337620894320117, 3.5090657945456534, -1.018977324158214],
+        4: [-2.8881786487977417, 1.569694261838936, 2.9104823110049924, -1.1980892189387506,
+            2.270915488090422, 4.305706975494743, -0.831968692341178, -3.2525701241520375],
+        5: [0.217571443226077, 5.582098750240522, 4.797291457472867, -1.8524553116580205,
+            -0.7194805776510126, -2.3771968584570047, 2.190327272760877, -0.7125159680486152],
+    }
+    cents = {r.cid: list(r.cent) for r in sim._train_centroids(c, 6, 2).collect()}
+    assert set(cents) == set(want)
+    for cid in want:
+        assert np.allclose(cents[cid], want[cid], rtol=1e-12), cid
 
 
 def test_sq8_null_corpus_rows_rank_last_through_prune(spark, clustered):
@@ -362,12 +385,9 @@ def test_sq8_null_corpus_rows_rank_last_through_prune(spark, clustered):
 
 
 def test_assign_twins_null_and_nan_parity(spark, clustered):
-    """NULL vectors and NaN-component vectors assign identically on both
-    twins: 0.0 score vs every centroid → smallest cid (the expression
-    twin's three-valued `when`; the vectorized twin's zero-substitution).
-    The _assign_auto size gate must never be a semantics switch."""
-    from pyspark.sql import functions as F
-
+    """NULL vectors and NaN-component vectors score 0.0 against every
+    centroid → smallest cid (the nanvl'd expression cosine's answer,
+    recorded in the map)."""
     extra = spark.createDataFrame(
         [(800, None), (801, [float("nan")] + [1.0] * 7), (802, [0.0] * 8)],
         "vec_id long, embedding array<double>",
@@ -380,11 +400,14 @@ def test_assign_twins_null_and_nan_parity(spark, clustered):
         c.filter("neighbor_id < 700").orderBy("neighbor_id").limit(4)
         .select(F.col("neighbor_id").alias("cid"), F.col("cvec").alias("cent"))
     )
-    expr = {r.neighbor_id: r.cid for r in sim._assign(c, cents).collect()}
-    fast = {r.neighbor_id: r.cid for r in sim._assign_vectorized(c, cents).collect()}
-    assert expr == fast
-    smallest = min(r.cid for r in cents.collect())
-    assert fast[800] == fast[801] == fast[802] == smallest
+    got = {r.neighbor_id: r.cid for r in sim._assign(c, cents).collect()}
+    assert got == _cid_map(
+        "01230012300123001230012300123001230012310123001230"
+        "01230012300123001230012300123001230012300123001230"
+        "01230012300123001233012300123001230012300123001230"
+        "01230012300123001230012310123001230012300123001230",
+        {800: 0, 801: 0, 802: 0},
+    )
 
 
 def test_vectorized_topk_empty_and_null_queries(spark, clustered):
@@ -518,10 +541,10 @@ def test_nan_corpus_scores_fold_to_zero_through_prune(spark, clustered):
 
 def test_assign_twins_null_and_nan_centroid_parity(spark, clustered):
     """ADVICE r6: a NULL embedding among the lowest-id init rows becomes
-    a NULL CENTROID — the expression twin scores it 0.0 against every
-    vector while the vectorized twin used to crash on `list(None)`. Both
-    twins must agree: NULL/NaN-component centroids match nothing, and an
-    all-degenerate centroid set sends every vector to the smallest cid."""
+    a NULL CENTROID, which must not crash the assignment
+    (`list(None)`): NULL/NaN-component centroids match nothing, and an
+    all-degenerate centroid set sends every vector to the smallest
+    cid."""
     extra = spark.createDataFrame(
         [(0, None), (1, [float("nan")] + [2.0] * 7)],
         "vec_id long, embedding array<double>",
@@ -535,17 +558,20 @@ def test_assign_twins_null_and_nan_centroid_parity(spark, clustered):
         c.orderBy("neighbor_id").limit(4)
         .select(F.col("neighbor_id").alias("cid"), F.col("cvec").alias("cent"))
     )
-    expr = {r.neighbor_id: r.cid for r in sim._assign(c, cents).collect()}
-    fast = {r.neighbor_id: r.cid for r in sim._assign_vectorized(c, cents).collect()}
-    assert expr == fast
-    # all-degenerate centroid set: every score 0.0 → smallest cid, both twins
+    got = {r.neighbor_id: r.cid for r in sim._assign(c, cents).collect()}
+    assert got == _cid_map(
+        "00233202302023320233202332023320230002330023320233"
+        "30230302332023320233202332023320233202332023020230"
+        "20230202332023020233202332023320233202333023300233"
+        "20233202302023300233202300023020233202332023320233",
+        {},
+    )
+    # all-degenerate centroid set: every score 0.0 → smallest cid
     bad_cents = spark.createDataFrame(
         [(7, None), (9, None)], "cid long, cent array<double>"
     )
-    expr2 = {r.neighbor_id: r.cid for r in sim._assign(c, bad_cents).collect()}
-    fast2 = {r.neighbor_id: r.cid for r in sim._assign_vectorized(c, bad_cents).collect()}
-    assert expr2 == fast2
-    assert set(fast2.values()) == {7}
+    got = {r.neighbor_id: r.cid for r in sim._assign(c, bad_cents).collect()}
+    assert got == dict.fromkeys(range(200), 7)
 
 
 def test_semantic_dedup_twins_nan_null_parity(spark):
@@ -573,12 +599,12 @@ def test_semantic_dedup_twins_nan_null_parity(spark):
 
 
 def test_assign_twins_inf_parity_and_validator_rejects_inf(spark, clustered):
-    """Review r7: ±Inf components must not diverge the assign twins (the
-    nanvl'd expression scores an Inf-poisoned vector/centroid 0.0 via
-    x/Inf or the NaN fold; the vectorized twin zero-substitutes on
-    ~isfinite, not just isnan). SQ8 zero-fills an Inf vector too, so
-    floor(Inf·127/Inf) never wraps its int64 matmul into a score that
-    outranks real neighbors; the raising validator that the Gram,
+    """Review r7: ±Inf components score 0.0 (the nanvl'd expression
+    cosine's x/Inf or NaN fold; ``_assign`` zero-substitutes on
+    ~isfinite, not just isnan): with both centroids Inf-poisoned every
+    vector ties at 0.0 → the smallest cid. SQ8 zero-fills an Inf vector
+    too, so floor(Inf·127/Inf) never wraps its int64 matmul into a score
+    that outranks real neighbors; the raising validator that the Gram,
     whitening and PCA kernels keep still REJECTS Inf."""
     extra = spark.createDataFrame(
         [(800, [float("inf")] + [1.0] * 7), (801, [-float("inf")] * 8)],
@@ -588,14 +614,13 @@ def test_assign_twins_inf_parity_and_validator_rejects_inf(spark, clustered):
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").cast("array<double>").alias("cvec"),
     )
-    # Inf row among the init centroids AND among the assigned vectors
+    # the two Inf rows are the init centroids AND among the assigned vectors
     cents = (
         c.filter("neighbor_id >= 798").orderBy(F.desc("neighbor_id")).limit(3)
         .select(F.col("neighbor_id").alias("cid"), F.col("cvec").alias("cent"))
     )
-    expr = {r.neighbor_id: r.cid for r in sim._assign(c, cents).collect()}
-    fast = {r.neighbor_id: r.cid for r in sim._assign_vectorized(c, cents).collect()}
-    assert expr == fast
+    got = {r.neighbor_id: r.cid for r in sim._assign(c, cents).collect()}
+    assert got == dict.fromkeys([*range(200), 800, 801], 800)
     # SQ8 scores the Inf rows 0.0: the clean top-3 stands
     q = _queries(clustered)
     assert _pairs_ranked(
@@ -962,45 +987,115 @@ def test_probe_curve_matches_per_level_topk(spark, clustered):
             assert curve[(p, qid)] == hits[qid], (p, qid)
 
 
+# ivf_topk(emb, q, n_centroids=8, n_probe=3, k=4) over the clustered
+# fixture plus a zero and a NaN vector, every vector a query: the four
+# ranked neighbor ids of queries 0..199, 500, 501 in that order, as the
+# expression and the cogrouped pair scorers both returned them before
+# the expression scorer was deleted.
+_IVF_TOP4 = (
+    "45 15 65 140 / 46 66 111 16 / 72 102 17 52 / 148 78 103 198 / "
+    "154 59 149 34 / 160 60 195 190 / 196 151 41 106 / 62 132 182 87 / "
+    "28 3 133 113 / 104 44 19 64 / 135 45 120 180 / 91 141 21 176 / "
+    "62 37 22 147 / 153 88 133 33 / 39 119 114 44 / 130 0 45 160 / "
+    "46 111 41 96 / 72 117 177 172 / 83 188 138 98 / 59 164 139 129 / "
+    "120 85 130 180 / 61 91 176 41 / 37 62 12 2 / 13 113 148 3 / "
+    "64 194 124 49 / 30 135 90 10 / 41 81 196 16 / 82 192 137 127 / "
+    "198 58 133 8 / 184 74 154 69 / 120 20 150 45 / 156 96 21 126 / "
+    "162 182 117 172 / 153 133 13 88 / 159 179 4 154 / 15 80 100 175 / "
+    "46 16 111 66 / 12 22 147 47 / 28 58 108 198 / 14 119 44 104 / "
+    "175 140 60 125 / 81 16 176 91 / 192 27 62 177 / 178 98 103 68 / "
+    "104 99 139 129 / 150 10 135 120 / 36 16 1 111 / 57 127 37 147 / "
+    "188 128 73 123 / 129 24 184 74 / 125 135 10 140 / 131 41 196 56 / "
+    "2 102 7 157 / 143 133 8 113 / 74 169 64 114 / 125 140 135 170 / "
+    "171 166 51 161 / 47 192 37 12 / 198 108 133 28 / 154 139 144 129 / "
+    "40 125 15 130 / 21 111 116 91 / 7 12 87 22 / 33 133 103 58 / "
+    "24 74 124 129 / 190 0 150 45 / 1 46 36 186 / 177 117 42 17 / "
+    "178 148 138 43 / 169 134 29 74 / 170 30 20 180 / 151 41 26 16 / "
+    "17 2 87 172 / 83 188 108 133 / 169 189 64 184 / 195 160 190 170 / "
+    "66 36 186 46 / 112 147 127 47 / 3 103 148 183 / 109 199 74 189 / "
+    "100 95 130 15 / 41 196 16 186 / 27 142 132 112 / 188 18 108 73 / "
+    "184 54 74 64 / 20 120 180 10 / 1 171 56 51 / 7 62 157 17 / "
+    "13 168 153 133 / 74 184 169 79 / 105 175 125 120 / 176 41 16 21 / "
+    "187 87 7 72 / 28 168 18 138 / 189 49 159 89 / 80 190 100 195 / "
+    "16 156 186 81 / 157 52 87 47 / 103 183 18 43 / 139 44 104 64 / "
+    "80 130 180 185 / 21 61 91 41 / 2 52 7 112 / 183 148 78 3 / "
+    "44 99 114 9 / 90 125 155 175 / 126 151 81 31 / 142 82 27 137 / "
+    "58 133 28 83 / 189 79 199 169 / 105 60 65 150 / 186 16 46 41 / "
+    "147 127 182 132 / 133 13 168 8 / 64 74 99 104 / 160 15 40 125 / "
+    "46 61 91 111 / 17 182 67 7 / 188 23 163 83 / 184 39 29 14 / "
+    "20 135 195 180 / 186 96 111 146 / 127 192 112 132 / "
+    "88 183 103 78 / 64 24 194 74 / 120 90 135 140 / 106 31 171 56 / "
+    "192 7 182 112 / 13 48 123 113 / 139 49 64 144 / 20 120 15 185 / "
+    "51 196 81 41 / 182 7 172 162 / 153 33 58 108 / 139 69 49 129 / "
+    "10 120 170 180 / 131 36 81 51 / 27 62 182 132 / 18 148 178 78 / "
+    "129 59 164 99 / 125 40 0 50 / 91 191 11 16 / 82 27 107 22 / "
+    "18 53 168 133 / 59 129 154 139 / 140 55 120 60 / 186 191 156 126 / "
+    "182 112 162 37 / 3 103 78 153 / 69 4 29 154 / 45 30 120 20 / "
+    "106 196 126 41 / 62 137 42 177 / 33 13 133 88 / 189 59 4 74 / "
+    "90 105 175 40 / 96 31 186 16 / 87 97 7 137 / 108 63 83 58 / "
+    "154 189 34 179 / 190 115 15 170 / 56 171 1 21 / 182 132 147 112 / "
+    "178 118 98 43 / 139 129 19 194 / 140 10 130 45 / 56 21 31 126 / "
+    "62 12 152 142 / 88 133 113 153 / 74 189 69 54 / 135 180 190 160 / "
+    "56 161 126 1 / 132 17 182 7 / 58 38 113 108 / 134 9 104 139 / "
+    "90 40 125 15 / 91 41 16 21 / 17 67 182 42 / 43 98 103 138 / "
+    "159 34 189 94 / 120 20 135 10 / 191 56 171 51 / 132 162 147 7 / "
+    "103 98 78 148 / 74 84 49 119 / 130 100 20 180 / 111 191 81 96 / "
+    "117 92 87 182 / 83 18 133 108 / 74 199 169 154 / 195 160 95 120 / "
+    "186 111 181 16 / 42 127 27 62 / 183 103 18 98 / 24 64 124 139 / "
+    "120 190 180 20 / 81 41 131 51 / 22 62 12 87 / 58 28 133 108 / "
+    "189 154 129 109 / 1 2 10 11 / 1 2 10 11"
+)
+
+
 def test_ivf_pair_scorer_twins_bit_identical(spark, clustered):
-    """The cogrouped Arrow pair scorer IS the expression cosine, pair for
-    pair — including a zero vector and a NaN-component vector (both
-    score 0.0 against everything on both paths). The auto gate is
-    therefore pure cost selection, never a semantics switch."""
+    """The cogrouped pair scorer gives the recorded ranked triples —
+    including a zero vector and a NaN-component vector (both score 0.0
+    against everything, so their ranks are the lowest ids)."""
     degen = spark.createDataFrame(
         [(500, [0.0] * 8), (501, [float("nan")] + [1.0] * 7)],
         "vec_id long, embedding array<double>",
     )
     emb = clustered.unionByName(degen)
     q = emb.select(F.col("vec_id").alias("query_id"), "embedding")
-    expr = sorted(map(tuple, sim.ivf_topk(
-        emb, q, n_centroids=8, n_probe=3, k=4, vectorized=False
+    got = sorted(map(tuple, sim.ivf_topk(
+        emb, q, n_centroids=8, n_probe=3, k=4
     ).collect()))
-    arrow = sorted(map(tuple, sim.ivf_topk(
-        emb, q, n_centroids=8, n_probe=3, k=4, vectorized=True
-    ).collect()))
-    assert expr == arrow
-    assert len(expr) > 0
-
-
-def test_ivf_pair_scorer_nonlong_query_ids(spark, clustered):
-    """ADVICE r10: the cogrouped scorer derives the query-id output type
-    from the probes schema instead of hardcoding long, so the size-based
-    auto gate can never crash a non-long-keyed audit at runtime. INT ids
-    must agree pair for pair across both routes; STRING ids (which the
-    expression path's self-pair filter cannot compare against a BIGINT
-    neighbor under ANSI) must at least serve the Arrow route end-to-end
-    with the string type preserved."""
-    qi = _queries(clustered).select(
-        F.col("query_id").cast("int").alias("query_id"), "embedding"
+    groups = [g.split() for g in _IVF_TOP4.split("/")]
+    want = sorted(
+        (qid, int(n), rank)
+        for qid, ns in zip([*range(200), 500, 501], groups, strict=True)
+        for rank, n in enumerate(ns, 1)
     )
-    expr = sorted(map(tuple, sim.ivf_topk(
-        clustered, qi, n_centroids=8, n_probe=3, k=4, vectorized=False
-    ).collect()))
-    arrow = sorted(map(tuple, sim.ivf_topk(
-        clustered, qi, n_centroids=8, n_probe=3, k=4, vectorized=True
-    ).collect()))
-    assert expr == arrow and len(expr) > 0
+    assert got == want
+
+
+def test_ivf_pair_scorer_nonlong_query_ids(spark, clustered, tmp_path):
+    """ADVICE r10: the cogrouped scorer derives the query-id output type
+    from the probes schema instead of hardcoding long. INT ids rank
+    exactly as BIGINT ids do; STRING ids (which a SQL self-pair filter
+    cannot compare against a BIGINT neighbor under ANSI) serve
+    ``ivf_topk`` end to end over a small parquet corpus: k rows per
+    query, the string type kept."""
+    clustered.write.parquet(str(tmp_path / "emb"))
+    corpus = spark.read.parquet(str(tmp_path / "emb"))
+    kw = dict(n_centroids=8, n_probe=3, k=4)
+    q = _queries(corpus)
+    qi = q.select(F.col("query_id").cast("int").alias("query_id"), "embedding")
+    as_int = sorted(map(tuple, sim.ivf_topk(corpus, qi, **kw).collect()))
+    as_long = sorted(map(tuple, sim.ivf_topk(corpus, q, **kw).collect()))
+    assert as_int == as_long and len(as_int) == 20
+
+    qs = q.select(
+        F.concat(F.lit("q-"), F.col("query_id")).alias("query_id"), "embedding"
+    )
+    top = sim.ivf_topk(corpus, qs, **kw)
+    assert top.schema["query_id"].dataType.simpleString() == "string"
+    per_query = {}
+    for r in top.collect():
+        per_query.setdefault(r.query_id, []).append(r.rank)
+    assert {k: sorted(v) for k, v in per_query.items()} == {
+        f"q-{i}": [1, 2, 3, 4] for i in range(5)
+    }
 
     probes = spark.createDataFrame(
         [("q-1", [1.0] * 8, 0)], "query_id string, qvec array<double>, cid long"
@@ -1073,7 +1168,7 @@ def test_ivf_list_stats_matches_assignment(spark, clustered):
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec")
     )
     cents = sim._train_centroids(c, 8, 2)
-    direct = {r.cid: r.n for r in sim._assign_auto(c, cents)
+    direct = {r.cid: r.n for r in sim._assign(c, cents)
               .groupBy("cid").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert {k: v for k, (v, _) in stats.items()} == direct
 

@@ -25,6 +25,7 @@ CASES = [
     ([], "q int, vec array<double>"),
     ([(1, None), (2, [])], "i int, v array<double>"),
     ([(0, "t0", 1000), (1, "t1", 500)], "query_id int, term string, w_milli int"),
+    ([(0, [1.0, 2.0]), (1, [3.0, 4.0])], "cid long, cent array<double>"),
 ]
 
 
@@ -32,7 +33,7 @@ CASES = [
 def test_literal_frame_matches_createdataframe(spark, rows, schema):
     a = literal_frame(spark, rows, schema)
     b = spark.createDataFrame(rows, schema)
-    assert a.schema.simpleString() == b.schema.simpleString()
+    assert a.schema.json() == b.schema.json()  # nullability included
     assert _norm(a.collect()) == _norm(b.collect())
 
 
@@ -108,9 +109,11 @@ def test_literal_frame_falls_back_on_unsupported(spark):
 
 
 def test_train_centroids_vectorized_matches_expression(spark):
-    """The r16 driver-side mean assembly (vectorized path) must emit the
-    same centroid table as the expression-path aggregate, including NULL
-    vectors and NULL components."""
+    """The driver-side mean assembly emits the centroid table the
+    expression-path aggregate emitted (recorded from both before that
+    path was deleted), including NULL vectors and NULL components."""
+    import numpy as np
+
     from laradb_spark.pipelines.similarity import _train_centroids
 
     rows = [
@@ -122,11 +125,11 @@ def test_train_centroids_vectorized_matches_expression(spark):
         (5, [-1.0, -2.0, -3.0, -4.0]),
     ]
     c = spark.createDataFrame(rows, "neighbor_id long, cvec array<double>")
-    a = _train_centroids(c, 2, 2, vectorized=True).collect()
-    b = _train_centroids(c, 2, 2, vectorized=False).collect()
-    ka = sorted((r["cid"], tuple(r["cent"])) for r in a)
-    kb = sorted((r["cid"], tuple(r["cent"])) for r in b)
-    assert ka == kb
+    got = {r["cid"]: list(r["cent"]) for r in _train_centroids(c, 2, 2).collect()}
+    want = {0: [1.37525, 1.2505, 2.37575, 2.001], 1: [-1.0, -2.0, -3.0, -4.0]}
+    assert set(got) == set(want)
+    for cid in want:
+        assert np.allclose(got[cid], want[cid], rtol=1e-12), cid
 
 
 def test_trainer_literal_frames_collect_without_jobs(spark, monkeypatch):
@@ -146,7 +149,7 @@ def test_trainer_literal_frames_collect_without_jobs(spark, monkeypatch):
     c = spark.createDataFrame(rows, "neighbor_id long, cvec array<double>")
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     for frame in (
-        _train_centroids(c, 3, 2, vectorized=True),
+        _train_centroids(c, 3, 2),
         pq_train_codebooks(emb, dim=4, m=2, k_sub=2),
     ):
         got, n_jobs = count_jobs(spark, lambda: _collect_rows(frame))

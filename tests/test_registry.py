@@ -26,8 +26,6 @@ def test_rows_only_queries_are_the_documented_ones():
 SHARED_ORACLES = {
     ("lara_wordcount", "lara_wordcount_py"):
         "Lara Ext through a JVM expression versus the general mapInPandas ExtFun path",
-    ("bpe_token_count", "bpe_token_count_auto"):
-        "the size-gated router; certifies the route it picks for the demo merge table",
     ("bpe_byte_token_count", "bpe_byte_token_count_fast"):
         "the Arrow encoder serves real 50k-merge vocabularies the expression chain cannot plan",
     ("dedup_ngram_jaccard", "dedup_prefix_jaccard"):

@@ -552,30 +552,23 @@ def test_bpe_train_bytes_matches_python_trainer(spark):
 
 
 def test_auto_route_gates_on_merge_count(spark):
-    """<=BPE_EXPR_MAX_MERGES stays JVM-side (no MapInPandas);
-    above it routes to the Arrow twin; both sides return identical
-    counts for the same trained table straddled across the gate."""
-    from laradb_spark.pipelines.tokenizer import (
-        BPE_EXPR_MAX_MERGES,
-        bpe_token_count_auto,
-    )
+    """The expression chain and the Arrow encoder return identical
+    counts for the demo table AND for a trained-shaped table of 257
+    merges — past the size at which the deleted router switched to
+    the Arrow encoder."""
+    from laradb_spark.pipelines.tokenizer import bpe_token_count_arrow
 
     df = spark.createDataFrame(
         [(1, "a" * 300 + " aa aaa"), (2, "aa a")], "doc_id long, text string"
     )
     # a synthetic TRAINED-shaped chain: ('a','a'), ('aa','a'), ('aaa','a') …
     # every product is a prefix of the previous + 'a', so validation holds
-    big = [("a", "a")] + [("a" * k, "a") for k in range(2, BPE_EXPR_MAX_MERGES + 2)]
-    assert len(big) > BPE_EXPR_MAX_MERGES
-    small = DEMO_BPE_MERGES
-    plan_small = bpe_token_count_auto(df, small)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan_small
-    plan_big = bpe_token_count_auto(df, big)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan_big
-    # parity across the gate: force both paths on the big table
-    a = sorted(map(tuple, bpe_token_count(df, big).collect()))
-    b = sorted(map(tuple, bpe_token_count_auto(df, big).collect()))
-    assert a == b
+    big = [("a", "a")] + [("a" * k, "a") for k in range(2, 258)]
+    assert len(big) == 257
+    for merges in (DEMO_BPE_MERGES, big):
+        a = sorted(map(tuple, bpe_token_count(df, merges).collect()))
+        b = sorted(map(tuple, bpe_token_count_arrow(df, merges).collect()))
+        assert a == b and len(a) == 2
 
 
 def test_byte_auto_route_parity(spark):
@@ -583,16 +576,14 @@ def test_byte_auto_route_parity(spark):
         DEMO_BYTE_BPE_MERGES,
         bpe_byte_token_count,
         bpe_byte_token_count_arrow,
-        bpe_byte_token_count_auto,
     )
 
     df = spark.createDataFrame(
         list(enumerate(NASTY_TEXTS)), "doc_id long, text string"
     )
-    via_auto = sorted(map(tuple, bpe_byte_token_count_auto(df, DEMO_BYTE_BPE_MERGES).collect()))
     expr = sorted(map(tuple, bpe_byte_token_count(df, DEMO_BYTE_BPE_MERGES).collect()))
     arrow = sorted(map(tuple, bpe_byte_token_count_arrow(df, DEMO_BYTE_BPE_MERGES).collect()))
-    assert via_auto == expr == arrow
+    assert expr == arrow and len(expr) > 0
 
 
 def test_bpe_fertility_matches_python_replay(spark):

@@ -36,7 +36,6 @@ HEAVY_REGISTRY = [
     "fuzzy_cross_batch",
     "wordpiece_stats",
     "unigram_stats",
-    "bpe_token_count_auto",
 ]
 
 
@@ -92,6 +91,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from bench import HEADLINE, _serve_entries
+    from check_correctness import SHJ_ALLOWED
     from laradb_spark.session import get_spark
     import __spark_entry__ as entry_mod
 
@@ -125,8 +125,9 @@ def main() -> None:
         # preferSortMergeJoin=false (session.py) lets the planner pick
         # shuffled-hash joins, whose build side CANNOT spill — at 100 TB a
         # skewed/misestimated build partition OOMs where SMJ would have
-        # spilled. Guard: every SHJ in any audited plan is surfaced here
-        # (currently zero across the registry); a regen that flips one on
+        # spilled. Guard: every SHJ in any audited plan is surfaced here,
+        # next to check_correctness.SHJ_ALLOWED (the bounded build sides
+        # the correctness gate accepts), so a regen that flips one on
         # makes the risk visible for review instead of silent.
         n_shj = plan.count("ShuffledHashJoin")
         n_cache = plan.count("InMemoryTableScan")
@@ -173,12 +174,15 @@ def main() -> None:
             "session.py): SHJ build sides cannot spill — review each hit for "
             "a bounded build side before shipping at scale: "
             + ", ".join(shj_hits)
+            + "."
             if shj_hits
             else "\n\n**ShuffledHashJoin guard** (preferSortMergeJoin=false, "
             "session.py): zero SHJ across every audited plan — the conf is "
             "currently inert on these shapes; any future regen that flips "
             "one on flags ⚠️ in the column above."
         )
+        + " `check_correctness.SHJ_ALLOWED` names the bounded build sides "
+        "the correctness gate accepts: " + ", ".join(sorted(SHJ_ALLOWED)) + "."
         + "\n\n*Exchange counts marked `*` are inflated by display: plans with "
         "`InMemoryTableScan` (persisted shared subtrees, e.g. the covariance "
         "pipeline's X) print the cached subtree's definition at every reuse "
