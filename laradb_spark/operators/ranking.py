@@ -124,12 +124,12 @@ def grouped_rank(
             # Small-frame route (see RANK_WINDOW_MAX_BYTES): one window
             # pass, bit-identical (rank cast to long to keep the
             # two-phase schema: _off + row_number is BIGINT there).
-            # A Python-eval child still gets pinned: the two-phase path's
-            # persist doubled as the DEVNOTES #3 recompute guard (Arrow
-            # subplans execute once PER CONSUMER), and a gate-sized frame
-            # makes the pin near-free.
-            if plan_has_python_eval(df):
-                df = persist_once(df)
+            # No pin: the window plan reads its input once, and a pin
+            # nothing releases would stay in the CacheManager for the
+            # rest of the session, changing the size estimates (and so
+            # the join strategies) of every later plan that shares the
+            # subplan. A caller that reads the ranked frame twice pins it
+            # itself (DEVNOTES #3).
             wc = Window.partitionBy(*group_cols)
             w = wc.orderBy(*order_exprs_gate)
             return df.withColumn(count_col, F.count(F.lit(1)).over(wc)).withColumn(

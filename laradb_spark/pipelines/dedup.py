@@ -1282,19 +1282,23 @@ def lsh_recall_report(
     pairs / no candidates — undefined, not perfect).
 
     Scale shape: both pair generators are the module's production scale
-    paths; the eval adds ONE full-outer join on the pair key plus a
-    1-row aggregate. On a 100 TB corpus you run this on a sampled slice
+    paths; the eval adds ONE aggregate on the pair key plus a 1-row
+    aggregate. On a 100 TB corpus you run this on a sampled slice
     (cap_per_group / hash_split give deterministic samples) — the
     report's point is choosing banding parameters BEFORE the full-corpus
     run, not auditing it after."""
     truth = prefix_filter_jaccard_pairs(df, threshold, n, id_col, text_col).select(
-        "id_a", "id_b", F.lit(1).alias("_t")
+        "id_a", "id_b", F.lit(1).alias("_t"), F.lit(0).alias("_c")
     )
     cand = minhash_lsh_pairs(
         df, n, id_col, text_col, num_perm, bands, max_bucket, oversize
-    ).select("id_a", "id_b", F.lit(1).alias("_c"))
-    j = truth.join(cand, on=["id_a", "id_b"], how="full_outer")
-    return j.agg(
+    ).select("id_a", "id_b", F.lit(0).alias("_t"), F.lit(1).alias("_c"))
+    # per-pair membership counts: an aggregate on the pair key (map-side
+    # combine), where a full-outer join would hash-join two pair sets
+    per_pair = truth.unionByName(cand).groupBy("id_a", "id_b").agg(
+        F.sum("_t").alias("_t"), F.sum("_c").alias("_c")
+    )
+    return per_pair.agg(
         F.coalesce(F.sum("_t"), F.lit(0)).cast("long").alias("n_truth"),
         F.coalesce(F.sum("_c"), F.lit(0)).cast("long").alias("n_candidates"),
         F.coalesce(F.sum(F.col("_t") * F.col("_c")), F.lit(0))

@@ -36,7 +36,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ranking import grouped_rank
-from ..util import fan_out, literal_frame, persist_once, read_stored
+from ..util import (
+    _sql_cell,
+    fan_out,
+    literal_frame,
+    persist_once,
+    read_stored,
+    stored_memo,
+)
 from .text import tokenize_str, tokens
 
 K1_MILLI = 1200  # k1 = 1.2
@@ -309,15 +316,20 @@ def bm25_build_index(
     # small pruned hits against the corpus-sized doclens table — a
     # per-query-batch corpus shuffle, the opposite of what a stored
     # index is for. doclens stays on disk for corpus-level reporting.
+    # Both partitioned writes rebalance on their partition column first:
+    # one file per bucket directory, where each input partition would
+    # otherwise write its own file into every bucket it holds.
     (
         tf.join(dl, on="id")
         .withColumn("bucket", F.crc32(F.col("term")) % 256)
+        .hint("rebalance", "bucket")
         .write.partitionBy("bucket")
         .mode("overwrite")
         .parquet(f"{path}/postings")
     )
     (
         tf.withColumn("dbucket", _dbucket_col("id"))
+        .hint("rebalance", "dbucket")
         .write.partitionBy("dbucket")
         .mode("overwrite")
         .parquet(f"{path}/doc_tf")
@@ -638,26 +650,54 @@ def bm25_search_index(
     """Search a stored ``bm25_build_index`` layout: identical scores and
     ranking to the inline ``bm25_topk`` (same floor-div chain), but the
     posting scan prunes to the query terms' crc32 buckets (partition
-    pruning on the stored layout) and df/stats join from the tiny stored
-    tables instead of recomputing."""
+    pruning on the stored layout), df joins from the tiny stored
+    termstats table instead of recomputing, and the one-row corpus stats
+    are inlined as literals (``_stored_stats``)."""
+    agg = _bm25_scored(spark, path, queries, id_col, inlist_max_terms)
+    ranked = grouped_rank(agg, ["query_id"], [F.desc("score_ppm"), F.asc(id_col)])
+    return ranked.filter(F.col("_r") <= k).select(
+        "query_id", id_col, F.col("_r").cast("int").alias("rank"), "score_ppm"
+    )
+
+
+def _stored_stats(spark: SparkSession, path: str) -> tuple:
+    """``(n_docs, n_toks)`` of a stored layout's one-row ``stats`` table,
+    memoized per directory identity (``util.stored_memo``): the append's
+    rename-aside swap and every rebuild give the table a new identity.
+    The read passes the table's schema, so it runs no inference job."""
+    sp = f"{path}/stats"
+    return stored_memo(
+        sp,
+        "bm25_stats",
+        lambda: tuple(spark.read.schema("n_docs long, n_toks long").parquet(sp).collect()[0]),
+    )
+
+
+def _bm25_scored(
+    spark: SparkSession,
+    path: str,
+    queries: Sequence[tuple[int, str]],
+    id_col: str,
+    inlist_max_terms: int,
+) -> DataFrame:
+    """The unranked ``(query_id, id_col, score_ppm)`` of
+    :func:`bm25_search_index`, summed with a map-side partial aggregate."""
     import zlib
 
+    from pyspark.sql.types import LongType
+
     q = _query_terms_df(spark, queries)
+    qterms = sorted({w for _, t in queries for w in tokenize_str(str(t))})
     # bucket pruning from the SAME tokenization as the stored postings —
     # a probe derived from a different split would prune to the wrong
     # buckets and return silently-empty matches. The bucket set saturates
     # at 256 values, so THIS isin never bloats whatever the query count.
-    buckets = sorted(
-        {zlib.crc32(w.encode()) % 256 for _, t in queries for w in tokenize_str(str(t))}
-    )
-    postings = read_stored(spark, f"{path}/postings").filter(
-        F.col("bucket").isin(buckets)
-    )
-    hits = postings
-    if "dl" not in postings.columns:
+    buckets = sorted({zlib.crc32(w.encode()) % 256 for w in qterms})
+    hits = read_stored(spark, f"{path}/postings").filter(F.col("bucket").isin(buckets))
+    if "dl" not in hits.columns:
         # pre-r12 layout without denormalized dl: fall back to the
         # doclens join (corpus-sized shuffle — rebuild the index to fix)
-        hits = postings.join(read_stored(spark, f"{path}/doclens"), on="id")
+        hits = hits.join(read_stored(spark, f"{path}/doclens"), on="id")
     # prune termstats to the query terms. Interactive-sized term sets use
     # a driver-side IN list (no shuffle, and the predicate reaches the
     # parquet scan); past ``inlist_max_terms`` distinct terms — a 10⁵-query
@@ -666,24 +706,21 @@ def bm25_search_index(
     # against a driver-built term frame (VERDICT r12 #6). Same rows either
     # way (both routes keep exactly the stored (term, df) rows whose term
     # appears in the query set).
-    qterms = sorted({w for _, t in queries for w in tokenize_str(str(t))})
     termstats = read_stored(spark, f"{path}/termstats")
     if len(qterms) <= inlist_max_terms:
         dfreq = termstats.filter(F.col("term").isin(qterms))
     else:
         qt = literal_frame(spark, [(t,) for t in qterms], "term string")
         dfreq = termstats.join(F.broadcast(qt), on="term")
-    stats = read_stored(spark, f"{path}/stats")
+    n_docs, n_toks = _stored_stats(spark, path)
     scored = (
-        hits.join(F.broadcast(q), on="term")
-        .join(F.broadcast(dfreq), on="term")
-        .crossJoin(F.broadcast(stats))
+        hits.join(F.broadcast(q), on="term").join(F.broadcast(dfreq), on="term")
+    ).selectExpr(
+        "*",
+        f"{_sql_cell(n_docs, LongType())} AS n_docs",
+        f"{_sql_cell(n_toks, LongType())} AS n_toks",
     )
-    agg = _score_terms(scored, id_col)
-    ranked = grouped_rank(agg, ["query_id"], [F.desc("score_ppm"), F.asc(id_col)])
-    return ranked.filter(F.col("_r") <= k).select(
-        "query_id", id_col, F.col("_r").cast("int").alias("rank"), "score_ppm"
-    )
+    return _score_terms(scored, id_col)
 
 
 def bm25_prf_topk(
@@ -1018,26 +1055,79 @@ def hybrid_search_index(
     ids must align across the two modalities, which is the caller's
     contract (an embedding service keyed by the same query ids).
 
+    One plan: the BM25 sums (map-side partial aggregate) and the scored
+    IVF list rows are unioned and ranked per (query, list) by one window
+    — its partial group limit keeps at most ``k_cand`` rows per query
+    and list in every task before the exchange — then the RRF aggregate
+    and the final rank share one ``query_id`` partitioning, bounded by
+    queries × 2 × ``k_cand`` rows. The driver's part is one collect of
+    the query vectors (the IVF probes, ``similarity._driver_probes``),
+    and the centroid and stats tables are memoized per build, so a warm
+    call over unchanged indexes runs 8 Spark jobs in all: that collect,
+    the broadcasts of the query terms, the probes and the pruned
+    termstats, and four for the plan's three exchanges and its result.
+    Ranks equal
+    :func:`bm25_search_index`'s and ``ivf_search_index``'s, whose
+    orders are total.
+
     Steady-state cost = two pruned index probes + a (queries × k)-
     bounded fusion; neither corpus is re-scanned or re-hashed. With
     ``n_probe`` ≥ the index's centroid count the dense side is
     exhaustive and the result equals the inline hybrid exactly
     (test-pinned); at production probe counts it is the standard
-    recall/cost trade the IVF family documents."""
-    from .similarity import ivf_search_index
+    recall/cost trade the IVF family documents.
 
-    lex = bm25_search_index(spark, bm25_path, queries, k=k_cand, id_col=id_col)
-    dense = ivf_search_index(
-        spark, ivf_path, query_vectors, n_probe=n_probe, k=k_cand
-    ).select(
-        "query_id", F.col("neighbor_id").alias(id_col), "rank"
+    Spark plans that partial group limit only for ``k_cand`` up to
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by default).
+    Past it the one window would sort each query's whole candidate list
+    in one task, so each list is ranked by its own search instead
+    (``grouped_rank``'s parallel route) and the two are fused as before:
+    same ranks, more jobs."""
+    from pyspark.sql import Window
+
+    from .similarity import _ivf_scored, ivf_search_index
+
+    limit = spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold", "1000")
+    if k_cand > int(limit):
+        lists = [
+            bm25_search_index(spark, bm25_path, queries, k=k_cand, id_col=id_col),
+            ivf_search_index(
+                spark, ivf_path, query_vectors, n_probe=n_probe, k=k_cand
+            ).withColumnRenamed("neighbor_id", id_col),
+        ]
+        return rrf_fuse(
+            [r.select(F.col("query_id").cast("long").alias("query_id"), id_col, "rank") for r in lists],
+            k=k,
+            rrf_k=rrf_k,
+            id_col=id_col,
+        )
+    lex = _bm25_scored(spark, bm25_path, queries, id_col, BM25_INLIST_MAX_TERMS)
+    dense = _ivf_scored(
+        spark, ivf_path, query_vectors, n_probe, "embedding", "query_id", None
+    )
+    cands = lex.selectExpr(
+        "CAST(query_id AS BIGINT) AS query_id",
+        "0 AS _list",
+        f"`{id_col}`",
+        "score_ppm AS _lex",
+        "CAST(NULL AS DOUBLE) AS _cos",
+    ).unionByName(
+        dense.selectExpr(
+            "CAST(query_id AS BIGINT) AS query_id",
+            "1 AS _list",
+            f"neighbor_id AS `{id_col}`",
+            "CAST(NULL AS BIGINT) AS _lex",
+            "cos AS _cos",
+        )
+    )
+    # one score column per list, NULL in the other: each list ranks by
+    # its own score (desc, NULL last) then id, as its own search does
+    w = Window.partitionBy("query_id", "_list").orderBy(
+        F.desc("_lex"), F.desc("_cos"), F.asc(id_col)
+    )
+    ranked = cands.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k_cand
     )
     return rrf_fuse(
-        [
-            lex.select(F.col("query_id").cast("long").alias("query_id"), id_col, "rank"),
-            dense.select(F.col("query_id").cast("long").alias("query_id"), id_col, "rank"),
-        ],
-        k=k,
-        rrf_k=rrf_k,
-        id_col=id_col,
+        [ranked.repartition("query_id")], k=k, rrf_k=rrf_k, id_col=id_col
     )

@@ -22,6 +22,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..operators.ranking import grouped_rank
@@ -33,6 +34,7 @@ from ..util import (
     literal_frame,
     persist_once,
     read_stored,
+    stored_memo,
 )
 
 
@@ -189,9 +191,14 @@ def cosine(a: Column, b: Column) -> Column:
       the zero-vector case, and identical between the pruned and
       unpruned paths by construction.
 
+    A NULL vector or a NULL component makes a norm NULL, so the guard
+    fails and the score is 0.0 too. Vectors of different dims score
+    NULL (``zip_with`` pads with NULL) unless a norm is zero or NULL.
+
     The NumPy kernels (``brute_force_topk``, ``semantic_decontaminate``,
-    ``_assign``) give a bad vector the same 0.0 by
-    zero-filling it (``_zero_filled_matrix_fn``).
+    ``_assign``) give a bad vector the same 0.0 by zero-filling it
+    (``_zero_filled_matrix_fn``); ``_centroid_cosines`` replays this
+    expression exactly, NULL included, for the stored-index probes.
 
     The denominator is bound once (util.bind_once): it appears in both
     the guard and the division, and interpreted HOF folds get no
@@ -271,6 +278,102 @@ def _collect_queries(queries: DataFrame, query_id_col: str, vec_col: str):
         F.col(query_id_col), F.col(vec_col).cast("array<double>")
     ).collect()
     return np.array([r[0] for r in rows], dtype=np.int64), [r[1] for r in rows]
+
+
+def _fold(P):
+    """Σ over the last axis as the sequential left fold from 0.0 that
+    ``aggregate(xs, 0.0D, (s, v) -> s + v)`` runs. The trailing + 0.0
+    turns a -0.0 sum into the fold's 0.0; every other sum is unchanged."""
+    import numpy as np
+
+    if P.shape[-1] == 0:
+        return np.zeros(P.shape[:-1])
+    return np.add.accumulate(P, axis=-1)[..., -1] + 0.0
+
+
+def _stored_centroids(spark, path: str):
+    """A stored ``(cid, cent)`` table (IVF ``centroids``, IVF-PQ
+    ``coarse``) as ``(rows, cids, C, bad, norms)``: the collected rows,
+    the cid vector, the centroid matrix, which centroids are NULL or
+    hold a NULL component, and each centroid's ``norm()``. Memoized per
+    directory identity (``util.stored_memo``), so a serving loop collects
+    it once per build, recenter or swap; the read passes the schema every
+    centroid table is written with, so it runs no inference job."""
+    import numpy as np
+
+    def build():
+        rows = [
+            (r[0], r[1])
+            for r in spark.read.schema("cid long, cent array<double>").parquet(path).collect()
+        ]
+        dims = {len(c) for _, c in rows if c is not None}
+        if len(dims) > 1:
+            raise ValueError(f"{path}: centroids have mixed dims {sorted(dims)}")
+        dim = dims.pop() if dims else 0
+        nan = float("nan")
+        C = np.array(
+            [[nan] * dim if c is None else [nan if x is None else x for x in c] for _, c in rows],
+            dtype=np.float64,
+        ).reshape(len(rows), dim)
+        bad = np.array([c is None or None in c for _, c in rows], dtype=bool)
+        with np.errstate(all="ignore"):
+            norms = np.sqrt(_fold(C * C))
+        return rows, np.array([cid for cid, _ in rows], dtype=np.int64), C, bad, norms
+
+    return stored_memo(path, "centroids", build)
+
+
+def _centroid_cosines(book, q):
+    """``cosine(q, cent)`` against every centroid of ``book``
+    (``_stored_centroids``), replayed in NumPy bit for bit: the same
+    sequential folds, products and division. Returns ``(scores, null)``;
+    ``null`` marks the pairs the expression scores NULL (dims differ and
+    the denominator passes the guard), whose ``scores`` entry is 0."""
+    import numpy as np
+
+    _, cids, C, bad, norms = book
+    n = len(cids)
+    if q is None or None in q:
+        return np.zeros(n), np.zeros(n, dtype=bool)  # NULL norm → 0.0
+    qv = np.asarray(q, dtype=np.float64)
+    with np.errstate(all="ignore"):
+        d = np.sqrt(_fold(qv * qv)) * norms
+        if len(qv) != C.shape[1]:
+            # dot is NULL; NaN > 0 holds in Spark, so NaN d passes too
+            return np.zeros(n), ((d > 0) | np.isnan(d)) & ~bad
+        s = np.where(d > 0, _fold(C * qv) / d, 0.0)
+    s[np.isnan(s) | bad] = 0.0
+    return s, np.zeros(n, dtype=bool)
+
+
+def _driver_probes(spark, cent_path: str, q: DataFrame, n_probe: int, query_id_col: str):
+    """Each query's ``n_probe`` nearest lists of a stored index, picked on
+    the driver: one collect of the ``(query_id_col, qvec)`` frame ``q``,
+    NumPy scores against the memoized centroids (``_centroid_cosines``),
+    and the rank the probe window gave — score desc with NULL last, cid
+    asc, over all rows of one query id. Returns the probe rows
+    ``(query_id, qvec, cid)`` and their schema."""
+    import numpy as np
+    from pyspark.sql.types import LongType, StructField
+
+    book = _stored_centroids(spark, cent_path)
+    cids = book[1]
+    groups: dict = {}
+    for qid, qvec in q.collect():
+        groups.setdefault(_nan_safe_key(qid), []).append((qid, qvec))
+    out = []
+    for members in groups.values():
+        scored = [_centroid_cosines(book, qvec) for _, qvec in members]
+        s = np.concatenate([sc for sc, _ in scored])
+        null = np.concatenate([nl for _, nl in scored])
+        cid = np.tile(cids, len(members))
+        for i in np.lexsort((cid, -s, null))[: max(n_probe, 0)]:
+            qid, qvec = members[i // len(cids)]
+            out.append((qid, qvec, int(cid[i])))
+    schema = StructType(
+        [q.schema[query_id_col], q.schema["qvec"], StructField("cid", LongType())]
+    )
+    return out, schema
 
 
 def _empty_topk(spark, query_id_col, rank_col="rank"):
@@ -958,7 +1061,11 @@ def ivf_build_index(
     if meta_cols:
         meta = corpus.select(F.col(id_col).alias("neighbor_id"), *meta_cols)
         assigned = assigned.join(meta, on="neighbor_id")
-    assigned.write.partitionBy("cid").mode("overwrite").parquet(f"{path}/corpus")
+    # rebalance on the partition column: one file per cid= directory
+    # (without it every input partition writes its own file per list)
+    assigned.hint("rebalance", "cid").write.partitionBy("cid").mode(
+        "overwrite"
+    ).parquet(f"{path}/corpus")
     cents.write.mode("overwrite").parquet(f"{path}/centroids")
 
 
@@ -1121,9 +1228,9 @@ def ivf_recenter_index(
         c = fan_out(corpus, CPU_HEAVY)
         cents = _train_centroids(c, n_centroids, lloyd_iters)
         new_corpus, new_cents = f"{path}/corpus._new", f"{path}/centroids._new"
-        _assign(c, cents).write.partitionBy("cid").mode("overwrite").parquet(
-            new_corpus
-        )
+        _assign(c, cents).hint("rebalance", "cid").write.partitionBy("cid").mode(
+            "overwrite"
+        ).parquet(new_corpus)
         cents.write.mode("overwrite").parquet(new_cents)
         got = spark.read.parquet(new_corpus).count()
         if got != n_rows:  # pragma: no cover - defense against a writer bug
@@ -1202,13 +1309,16 @@ def ivf_search_index(
 ) -> DataFrame:
     """Probe a stored IVF index (``ivf_build_index`` layout).
 
-    The union of probed centroid ids across the query batch is collected
-    driver-side (bounded by n_centroids — centroids are by construction
-    a tiny table) and pushed as a LITERAL ``cid IN (...)`` predicate on
-    the partition column, so the parquet scan reads only the probed
-    ``cid=`` directories (PartitionFilters — asserted in test_ann). The
-    per-query restriction to its own n_probe lists then happens in the
-    broadcast equi-join on ``cid``.
+    Each query's ``n_probe`` lists are picked on the driver
+    (``_driver_probes``: one collect of the query vectors, scored against
+    the memoized centroid table in NumPy with ``cosine()``'s exact
+    folds). The union of probed centroid ids is pushed as a LITERAL
+    ``cid IN (...)`` predicate on the partition column, so the parquet
+    scan reads only the probed ``cid=`` directories (PartitionFilters —
+    asserted in test_ann). The per-query restriction to its own lists
+    then happens in the broadcast equi-join on ``cid`` against the probe
+    rows rebuilt as a literal frame: no cache entry, no lineage to
+    recompute in a serving loop.
 
     ``where`` (a SQL boolean over the stored list rows' columns —
     requires the index to have been built with matching ``meta_cols``)
@@ -1218,38 +1328,31 @@ def ivf_search_index(
     semantics: the predicate restricts candidates BEFORE ranking —
     identical member sets to ``ivf_topk_filtered`` under the same
     centroids."""
-    cents = read_stored(spark, f"{path}/centroids")
+    scored = _ivf_scored(spark, path, queries, n_probe, vec_col, query_id_col, where)
+    return _topk_per_query(scored, query_id_col, "cos", k)
+
+
+def _ivf_scored(spark, path, queries, n_probe, vec_col, query_id_col, where):
+    """The unranked ``(query_id_col, neighbor_id, cos)`` candidates of
+    :func:`ivf_search_index`: every non-self row of each query's probed
+    lists, scored by ``cosine()``."""
     q = queries.select(
         F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("qvec")
     )
-    qc = q.crossJoin(F.broadcast(cents)).select(
-        query_id_col, "qvec", "cid", cosine(F.col("qvec"), F.col("cent")).alias("_cc")
+    probe_rows, schema = _driver_probes(
+        spark, f"{path}/centroids", q, n_probe, query_id_col
     )
-    # Centroid-bounded probe-selection window (see ivf_topk).
-    wq = Window.partitionBy(query_id_col).orderBy(F.desc("_cc"), F.asc("cid"))
-    probes_plan = (
-        qc.withColumn("_r", F.row_number().over(wq))
-        .filter(F.col("_r") <= n_probe)
-        .select(query_id_col, "qvec", "cid")
+    idx = read_stored(spark, f"{path}/corpus").filter(
+        F.col("cid").isin(sorted({cid for _, _, cid in probe_rows}))
     )
-    # Land the (query-batch × n_probe)-sized probe set on the driver and
-    # rebuild it as a literal frame: probe_cids needs a collect anyway,
-    # and a persist here is never released — a serving loop calling this
-    # per query batch would accumulate one CacheManager entry per call
-    # (each batch is a new plan; the merge_upsert lesson). A literal
-    # local relation has no cache entry and no lineage to recompute.
-    probe_rows = probes_plan.collect()
-    probes = literal_frame(spark, probe_rows, probes_plan.schema)
-    probe_cids = sorted({r.cid for r in probe_rows})
-    idx = read_stored(spark, f"{path}/corpus").filter(F.col("cid").isin(probe_cids))
     if where is not None:
         idx = idx.filter(F.expr(where))
-    scored = (
+    probes = literal_frame(spark, probe_rows, schema)
+    return (
         idx.join(F.broadcast(probes), on="cid")
         .filter(F.col("neighbor_id") != F.col(query_id_col))
         .select(query_id_col, "neighbor_id", cosine(F.col("qvec"), F.col("cvec")).alias("cos"))
     )
-    return _topk_per_query(scored, query_id_col, "cos", k)
 
 
 def lsh_build_index(
@@ -2281,29 +2384,28 @@ def ivfpq_search_index(
     """Probe a stored IVF-PQ index: the probed cid set lands as a literal
     ``cid IN (...)`` on the partition column (partition-pruned scan, as
     ivf_search_index), then ADC-score just those lists' codes. The
-    probe set is collected and rebuilt as a literal frame — same
-    serving-loop cache rationale as ivf_search_index.
+    probes are picked on the driver against the memoized coarse
+    centroids (``_driver_probes``, as ivf_search_index) and rebuilt as a
+    literal frame, which keeps no cache entry in a serving loop.
 
     ``where`` = filtered serving over an index built with matching
     ``meta_cols`` (see ivf_search_index — same pre-filter semantics,
     same pushed-row-filter composition with the partition pruning)."""
-    coarse = read_stored(spark, f"{path}/coarse")
     cb = _pq_codebook_rows(read_stored(spark, f"{path}/codebooks"))
     q = queries.select(
         F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("qvec")
     )
-    probes_plan = _ivfpq_probes(q, coarse, n_probe, query_id_col)
-    probe_rows = probes_plan.collect()
-    probes = literal_frame(spark, probe_rows, probes_plan.schema)
-    probe_cids = sorted({r.cid for r in probe_rows})
+    probe_rows, schema = _driver_probes(spark, f"{path}/coarse", q, n_probe, query_id_col)
+    probes = literal_frame(spark, probe_rows, schema)
+    probe_cids = sorted({cid for _, _, cid in probe_rows})
     # Dedup the per-query vectors DRIVER-side: the rows are already
     # collected, so a dropDuplicates here would spend a whole exchange +
     # sort-aggregate pair on a (queries × n_probe)-sized frame (r15 plan
     # diet; same rows — one (query_id, qvec) per query either way).
-    uniq = list({_nan_safe_key(r[query_id_col]): r for r in probe_rows}.values())
+    uniq = list({_nan_safe_key(r[0]): r for r in probe_rows}.values())
     qframe = literal_frame(spark, 
-        [(r[query_id_col], r["qvec"]) for r in uniq],
-        probes_plan.select(query_id_col, "qvec").schema,
+        [(r[0], r[1]) for r in uniq],
+        StructType([schema[query_id_col], schema["qvec"]]),
     )
     qlut = _pq_qlut(qframe, cb, dim, query_id_col)
     idx = read_stored(spark, f"{path}/codes").filter(F.col("cid").isin(probe_cids))
@@ -2693,12 +2795,14 @@ def ivfpq_res_search_index(
     scan of the residual code lists, scored by the residual-ADC cosine
     (q·c per probe + residual LUT + the driver-derived reconstructed-
     norm lookup). Mirrors ``ivfpq_search_index``'s serving-loop
-    mechanics (probe rows collected and rebuilt as a literal frame) and
+    mechanics (probes picked on the driver, rebuilt as a literal frame) and
     its ``where`` filtered serving (meta_cols-built index; pre-filter
     semantics, pushed row filter composed with partition pruning)."""
     coarse = read_stored(spark, f"{path}/coarse")
     cb = _pq_codebook_rows(read_stored(spark, f"{path}/codebooks"))
-    coarse_rows = [(r["cid"], list(r["cent"])) for r in coarse.collect()]
+    coarse_rows = [
+        (cid, list(cent)) for cid, cent in _stored_centroids(spark, f"{path}/coarse")[0]
+    ]
     if not cb or not coarse_rows:
         # an index built from an empty corpus stores empty tables;
         # serve the same typed empty frame the inline path returns
@@ -2709,19 +2813,18 @@ def ivfpq_res_search_index(
     q = queries.select(
         F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("qvec")
     )
-    probes_plan = _ivfpq_probes(q, coarse, n_probe, query_id_col)
-    probe_rows = probes_plan.collect()
-    probes = literal_frame(spark, probe_rows, probes_plan.schema)
-    probe_cids = sorted({r.cid for r in probe_rows})
+    probe_rows, schema = _driver_probes(spark, f"{path}/coarse", q, n_probe, query_id_col)
+    probes = literal_frame(spark, probe_rows, schema)
+    probe_cids = sorted({cid for _, _, cid in probe_rows})
     probes_qc = probes.join(F.broadcast(coarse), on="cid").select(
         query_id_col, "cid", dot(F.col("qvec"), F.col("cent")).alias("_qc")
     )
     # Driver-side dedup of the per-query vectors — the rows are already
     # collected; see ivfpq_search_index (same exchange-free shape).
-    uniq = list({_nan_safe_key(r[query_id_col]): r for r in probe_rows}.values())
+    uniq = list({_nan_safe_key(r[0]): r for r in probe_rows}.values())
     qframe = literal_frame(spark, 
-        [(r[query_id_col], r["qvec"]) for r in uniq],
-        probes_plan.select(query_id_col, "qvec").schema,
+        [(r[0], r[1]) for r in uniq],
+        StructType([schema[query_id_col], schema["qvec"]]),
     )
     qlut = _pq_qlut(qframe, cb, dim, query_id_col)
     densq, subs = _res_densq_frame(spark, coarse_rows, cb, dim)

@@ -309,9 +309,10 @@ def literal_frame(spark, rows, schema) -> DataFrame:
     with ``defaultParallelism`` slices, so every downstream job over it
     — every broadcast-exchange build, every collect — dispatches that
     many near-empty tasks THROUGH PYTHON WORKERS (measured: ~0.3 s per
-    broadcast future at local[32], ~0.015 s as a LocalRelation, which
-    broadcasts driver-side with no job at all). At cluster scale the
-    waste is worse: N empty tasks over the network per bounded literal.
+    broadcast future at local[32], ~0.015 s as a LocalRelation). A
+    LocalRelation is not free either: on Spark 4.1 ``F.broadcast`` of
+    one still launches a ``ParallelCollectionRDD`` job of
+    min(rows, cores) JVM-only tasks to build the broadcast.
 
     Values are rendered as type-exact SQL literals (ints, repr-exact
     doubles, hex-round-tripped strings, arrays thereof, typed NULLs) and
@@ -356,10 +357,12 @@ def literal_frame(spark, rows, schema) -> DataFrame:
         return spark.createDataFrame(rows, schema)
 
 
-#: path → (directory identity, StructType) for ``read_stored``. Holds
-#: schemas only: never a DataFrame, never a file listing. Entries are
-#: replaced whole, so two threads racing on one path at worst both infer.
-_STORED_SCHEMAS: dict = {}
+#: (path, kind) → (directory identity, value) for ``stored_memo``. Holds
+#: small driver-side values derived from a stored table (its schema, a
+#: centroid matrix, a one-row stats table): never a DataFrame, never a
+#: file listing. Entries are replaced whole, so two threads racing on
+#: one path at worst both build.
+_STORED_MEMO: dict = {}
 
 
 def _dir_identity(path: str):
@@ -383,6 +386,30 @@ def _dir_identity(path: str):
     return (st.st_dev, st.st_ino, st.st_mtime_ns)
 
 
+def stored_memo(path: str, kind: str, build):
+    """``build()``, memoized per ``(path, kind)`` while the stored table
+    directory at ``path`` keeps its identity (device, inode, mtime from
+    one ``os.stat``).
+
+    Every rewrite the library does to a stored table — an overwrite
+    rebuild, a rename-aside swap (recenter, the BM25 append's stats
+    swap), a compaction — changes that identity, so the next call builds
+    again. A path ``os.stat`` cannot see (missing, or a non-``file:``
+    URI) is never memoized: ``build()`` runs on every call and raises
+    whatever it raises. The identity is read BEFORE ``build()``, so a
+    rewrite racing the build at worst stores fresh data under the old
+    identity, which the next call then rebuilds."""
+    ident = _dir_identity(path)
+    if ident is None:
+        return build()
+    hit = _STORED_MEMO.get((path, kind))
+    if hit is not None and hit[0] == ident:
+        return hit[1]
+    val = build()
+    _STORED_MEMO[(path, kind)] = (ident, val)
+    return val
+
+
 def read_stored(spark, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` for a table of a stored index layout,
     without the per-call schema-inference job.
@@ -393,23 +420,13 @@ def read_stored(spark, path: str) -> DataFrame:
     read of ``path`` infers the schema; later reads hand it to
     ``spark.read.schema(...)``, which skips inference. Spark still lists
     the files on every call, so files appended since the last read show
-    up in the next one.
-
-    The memoized schema is tied to the directory's identity (device,
-    inode, mtime from one ``os.stat``). Every rewrite the library does —
-    an overwrite rebuild, a rename-aside swap, a compaction — changes
-    that identity, and the next read infers the schema again. A path
-    ``os.stat`` cannot see is read exactly as before, so a missing or
+    up in the next one. The schema is memoized with :func:`stored_memo`,
+    so every rewrite of the table infers it again, and a missing or
     non-local path raises or resolves as ``spark.read.parquet`` does."""
-    ident = _dir_identity(path)
-    if ident is None:
+    if _dir_identity(path) is None:
         return spark.read.parquet(path)
-    hit = _STORED_SCHEMAS.get(path)
-    if hit is not None and hit[0] == ident:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _STORED_SCHEMAS[path] = (ident, df.schema)
-    return df
+    schema = stored_memo(path, "schema", lambda: spark.read.parquet(path).schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 # NEGATIVE RESULT (r16), recorded so it is not retried: eagerly

@@ -1323,20 +1323,21 @@ def ann_ivfpq_res_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         m=PQ_M, k_sub=PQ_KSUB, k=TOP_K,
     )
     bf = sim.brute_force_topk(emb, q, k=TOP_K)
+    # one pass over the ranked list (its Python scorer runs once): a
+    # left join counts each query's exact hits, 0 when it has none
     hits = (
-        res.join(bf, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("_h"))
-    )
-    return (
-        res.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("_h"), F.lit(0)).cast("int").alias("hits"),
-            (F.coalesce(F.col("_h"), F.lit(0)) / F.lit(TOP_K)).alias("recall"),
+        res.join(
+            bf.select("query_id", "neighbor_id", F.lit(1).alias("_b")),
+            ["query_id", "neighbor_id"],
+            "left",
         )
+        .groupBy("query_id")
+        .agg(F.count("_b").alias("_h"))
+    )
+    return hits.select(
+        "query_id",
+        F.col("_h").cast("int").alias("hits"),
+        (F.col("_h") / F.lit(TOP_K)).alias("recall"),
     )
 
 
@@ -1453,20 +1454,21 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _queries_df(spark, sf_dir)
     pq = sim.pq_topk(emb, q, dim=EMB_DIM, m=PQ_M, k_sub=PQ_KSUB, k=TOP_K)
     bf = sim.brute_force_topk(emb, q, k=TOP_K)
+    # one pass over the ranked list (its Python scorer runs once): a
+    # left join counts each query's exact hits, 0 when it has none
     hits = (
-        pq.join(bf, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("_h"))
-    )
-    return (
-        pq.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("_h"), F.lit(0)).cast("int").alias("hits"),
-            (F.coalesce(F.col("_h"), F.lit(0)) / F.lit(TOP_K)).alias("recall"),
+        pq.join(
+            bf.select("query_id", "neighbor_id", F.lit(1).alias("_b")),
+            ["query_id", "neighbor_id"],
+            "left",
         )
+        .groupBy("query_id")
+        .agg(F.count("_b").alias("_h"))
+    )
+    return hits.select(
+        "query_id",
+        F.col("_h").cast("int").alias("hits"),
+        (F.col("_h") / F.lit(TOP_K)).alias("recall"),
     )
 
 

@@ -354,6 +354,22 @@ def test_registered_query(spark, sfq, edited_sf_dir, oracle_cons, name):
     assert not problems, f"{name}: {problems}"
 
 
+def test_registered_query_gate_is_order_independent(spark, sfq, oracle_cons):
+    """A query's plan gate does not depend on what ran before it in the
+    session: ``ann_ivfpq_res_recall`` built right after
+    ``ann_ivfpq_res_topk`` planned a ShuffledHashJoin while
+    ``grouped_rank`` left the first query's ranked input pinned in the
+    CacheManager. Nothing of the first query stays cached."""
+    qs, sf = sfq
+    spark.catalog.clearCache()
+    for name in ("ann_ivfpq_res_topk", "ann_ivfpq_res_recall"):
+        sdf = qs[name](spark, sf)
+        assert check_query(oracle_cons[sf], name, sdf, SPECS[name][1]) == [], name
+        del sdf
+        cached = spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        assert cached, f"{name} left a frame in the CacheManager"
+
+
 def test_check_query_reports_each_fault(spark):
     """The gate itself: check_query passes a matching frame and reports a
     wrong oracle value, a cartesian plan, a decimal column and an empty
