@@ -349,7 +349,6 @@ def bm25_append_index(
     path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    stream_marker: str | None = None,
 ) -> None:
     """Append a shard of NEW documents to a stored ``bm25_build_index``
     layout without re-tokenizing the existing corpus — the incremental-
@@ -361,219 +360,109 @@ def bm25_append_index(
     quantity. The corpus-level stats BM25 scores against (per-term df;
     the one-row n_docs/n_toks) do change with every append, so those two
     small tables — term-vocabulary-sized and 1-row respectively — are
-    merged and atomically swapped via the rename-aside discipline
-    (``ivf_compact_index`` precedent). Scores after an append are
-    therefore EXACTLY a fresh build over the union corpus (test-pinned):
-    BM25 stats are sums, and sums merge.
+    merged and swapped whole. Scores after an append are therefore
+    EXACTLY a fresh build over the union corpus (test-pinned): BM25
+    stats are sums, and sums merge.
 
     Caller contract (same as the other index appends): the batch's doc
     ids are NEW — re-appending an already-indexed id double-counts it;
     exact-dedup gates handle that upstream. Single-writer offline
     maintenance window assumed, like every rewrite op in this package.
 
-    Crash safety (ADVICE r12): the whole batch — postings, doclens, and
-    the two MERGED stats tables — is staged under ``{path}/_append_pending``
-    first; none of the four live tables is touched until staging completes
-    and a ``_STAGED_OK`` marker lands. A crash anywhere in the heavy
-    tokenize/count/merge/write phase is therefore a NO-OP on read, and the
-    append can simply be re-run (the discarded pending dir is cleaned up).
-    Publish itself (:func:`bm25_publish_pending_append`) is a short
-    sequence of file moves and is idempotent-resumable: a crash mid-publish
-    is recovered by calling ``bm25_publish_pending_append(path)`` — never
-    by re-running the append, which would double-count the already-
-    published part of the batch (this function refuses, with that
-    instruction, when it finds a completed stage).
+    Crash safety: the whole batch commits through
+    :func:`..streaming.txn.staged_batch_publish` — postings, doc_tf and
+    doclens stage as appends, termstats and stats as replace targets. A
+    crash while staging is a no-op on read and the append can simply be
+    re-run; a crash mid-publish is recovered by
+    ``txn.publish_pending_batch(path)`` — never by re-running the append,
+    which refuses with that instruction (it would double-count the
+    already-published part)."""
+    from ..streaming.txn import staged_batch_publish
 
-    ``stream_marker`` (ADVICE r13): the streaming maintainer's fused
-    commit point. When set (``bm25_index_stream`` passes ``batch_<id>``),
-    the marker file is STAGED under ``{pend}/_markers/`` before
-    ``_STAGED_OK`` lands, and publish moves it into
-    ``{path}/_stream_applied/`` before dropping the pending dir — so the
-    applied-marker and the append publish atomically together: after ANY
-    completed publish the marker is guaranteed present (no crash window
-    between publish and marker write that a redelivery could double-count
-    through), and a stage found on disk carries its owning batch id (a
-    foreign stage is distinguishable from this batch's crashed publish)."""
+    stage, targets = _bm25_append_stage(docs, path, id_col, text_col)
+    staged_batch_publish(path, targets, stage, "bm25_append_index")
+
+
+def _bm25_append_stage(docs, path, id_col, text_col):
+    """The stage callback and ``targets`` of one BM25 append, shared by
+    :func:`bm25_append_index` and ``streaming.ingest.bm25_index_stream``."""
     import os
-    import shutil
+
+    from ..streaming.txn import Replace
 
     spark = docs.sparkSession
-    # Schema guard (ADVICE r12): a pre-r12 layout stores postings WITHOUT
-    # the denormalized dl column. Appending dl-bearing rows to it would mix
-    # parquet schemas inside {path}/postings, making bm25_search_index's
-    # '"dl" not in postings.columns' probe depend on which file wins schema
-    # resolution — and when dl wins, every legacy row reads NULL dl and
-    # scores NULL silently. Refuse up front (the _check_append_meta
-    # discipline of the vector indexes).
-    if "dl" not in spark.read.parquet(f"{path}/postings").columns:
-        raise ValueError(
-            "bm25_append_index: stored postings lack the denormalized 'dl' "
-            "column (pre-dl layout); appending would mix parquet schemas "
-            "and silently NULL-score legacy rows. Rebuild the index with "
-            "bm25_build_index first."
-        )
 
-    from ..streaming.txn import writer_lock
-
-    with writer_lock(path, "bm25_append_index"):
-        _bm25_append_locked(docs, path, id_col, text_col, stream_marker)
-
-
-def _bm25_append_locked(docs, path, id_col, text_col, stream_marker):
-    import os
-    import shutil
-
-    spark = docs.sparkSession
-    pend = f"{path}/_append_pending"
-    if os.path.isdir(pend):
-        if os.path.exists(f"{pend}/_STAGED_OK"):
-            raise RuntimeError(
-                "bm25_append_index: found a fully-staged pending append at "
-                f"{pend} — a previous append crashed DURING publish. Run "
-                "bm25_publish_pending_append(path) to finish it; re-running "
-                "the append would double-count the published part."
+    def stage(pend: str) -> None:
+        # Schema guard (ADVICE r12): a pre-r12 layout stores postings
+        # WITHOUT the denormalized dl column. Appending dl-bearing rows to
+        # it would mix parquet schemas inside {path}/postings, making
+        # bm25_search_index's '"dl" not in postings.columns' probe depend
+        # on which file wins schema resolution — and when dl wins, every
+        # legacy row reads NULL dl and scores NULL silently. Refuse up
+        # front (the _check_append_meta discipline of the vector indexes).
+        if "dl" not in spark.read.parquet(f"{path}/postings").columns:
+            raise ValueError(
+                "bm25_append_index: stored postings lack the denormalized "
+                "'dl' column (pre-dl layout); appending would mix parquet "
+                "schemas and silently NULL-score legacy rows. Rebuild the "
+                "index with bm25_build_index first."
             )
-        # previous append crashed while staging: nothing was published,
-        # the live tables never saw it — discard and restage.
-        shutil.rmtree(pend)
-
-    toks = fan_out(docs).select(
-        F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("term")
-    )
-    tf = persist_once(toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf")))
-    dl = tf.groupBy("id").agg(F.sum("tf").alias("dl"))
-    (
-        tf.join(dl, on="id")
-        .withColumn("bucket", F.crc32(F.col("term")) % 256)
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(f"{pend}/postings")
-    )
-    # maintain the doc-major mirror iff the layout has one (r15 — older
-    # layouts stay mirror-less and PRF serving takes its full-scan
-    # fallback; a half-mirrored layout would silently truncate feedback
-    # term vectors, so the mirror is all-or-nothing per layout)
-    if os.path.isdir(f"{path}/doc_tf"):
+        toks = fan_out(docs).select(
+            F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("term")
+        )
+        tf = persist_once(toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf")))
+        dl = tf.groupBy("id").agg(F.sum("tf").alias("dl"))
         (
-            tf.withColumn("dbucket", _dbucket_col("id"))
-            .write.partitionBy("dbucket")
+            tf.join(dl, on="id")
+            .withColumn("bucket", F.crc32(F.col("term")) % 256)
+            .write.partitionBy("bucket")
             .mode("overwrite")
-            .parquet(f"{pend}/doc_tf")
+            .parquet(f"{pend}/postings")
         )
-    dl.write.mode("overwrite").parquet(f"{pend}/doclens")
-    new_df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    (
-        spark.read.parquet(f"{path}/termstats")
-        .unionByName(new_df)
-        .groupBy("term")
-        .agg(F.sum("df").cast("long").alias("df"))
-        .write.mode("overwrite")
-        .parquet(f"{pend}/termstats")
-    )
-    new_stats = tf.agg(
-        F.count_distinct("id").alias("n_docs"), F.sum("tf").alias("n_toks")
-    )
-    (
-        spark.read.parquet(f"{path}/stats")
-        .unionByName(new_stats)
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_toks").cast("long").alias("n_toks"),
+        # maintain the doc-major mirror iff the layout has one (r15 — older
+        # layouts stay mirror-less and PRF serving takes its full-scan
+        # fallback; a half-mirrored layout would silently truncate feedback
+        # term vectors, so the mirror is all-or-nothing per layout)
+        if os.path.isdir(f"{path}/doc_tf"):
+            (
+                tf.withColumn("dbucket", _dbucket_col("id"))
+                .write.partitionBy("dbucket")
+                .mode("overwrite")
+                .parquet(f"{pend}/doc_tf")
+            )
+        dl.write.mode("overwrite").parquet(f"{pend}/doclens")
+        new_df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+        (
+            spark.read.parquet(f"{path}/termstats")
+            .unionByName(new_df)
+            .groupBy("term")
+            .agg(F.sum("df").cast("long").alias("df"))
+            .write.mode("overwrite")
+            .parquet(f"{pend}/termstats")
         )
-        .write.mode("overwrite")
-        .parquet(f"{pend}/stats")
-    )
-    tf.unpersist()
-    if stream_marker is not None:
-        # stage the applied-marker BEFORE _STAGED_OK: a stage is never
-        # "complete" without its ownership marker, so publish-after-crash
-        # always lands the marker too (fused commit point, ADVICE r13)
-        os.makedirs(f"{pend}/_markers", exist_ok=True)
-        open(f"{pend}/_markers/{stream_marker}", "w").close()
-    open(f"{pend}/_STAGED_OK", "w").close()
-    bm25_publish_pending_append(path)
-
-
-def bm25_publish_pending_append(path: str) -> None:
-    """Publish a fully-staged pending append (see ``bm25_append_index``):
-    move the staged postings/doclens parquet files into the live
-    directories (Spark part-file names carry task UUIDs, so moves never
-    collide), then rename-aside-swap the two merged stats tables (sweeping
-    any ``._old`` leftover a crashed retry left behind), then land any
-    staged streaming applied-markers into ``{path}/_stream_applied``, then
-    drop the pending dir. Every step is a move/rename/create of something
-    whose absence or presence it tolerates, so the function is idempotent —
-    after ANY crash mid-publish, calling it again completes the append
-    exactly once, markers included.
-
-    Teardown order (ADVICE r14, same fix as ``txn.publish_pending_batch``):
-    ``_STAGED_OK`` is unlinked — one atomic remove — BEFORE the pending
-    dir is rmtree'd, because rmtree's removal order is unspecified and a
-    crash mid-rmtree could otherwise leave ``_STAGED_OK`` without the
-    staged subdirs it vouches for. After the unlink everything is live,
-    so a retry's "no completed stage" error means the publish COMPLETED."""
-    import os
-    import shutil
-
-    pend = f"{path}/_append_pending"
-    if not os.path.exists(f"{pend}/_STAGED_OK"):
-        raise RuntimeError(
-            "bm25_publish_pending_append: no completed stage at "
-            f"{pend}; nothing to publish (an un-marked pending dir is "
-            "either an aborted stage — re-run bm25_append_index — or the "
-            "husk of a publish that already completed)."
+        new_stats = tf.agg(
+            F.count_distinct("id").alias("n_docs"), F.sum("tf").alias("n_toks")
         )
-    for sub, prefix in (("postings", "bucket="), ("doc_tf", "dbucket=")):
-        staged_part = f"{pend}/{sub}"
-        if not os.path.isdir(staged_part):
-            continue  # layout without the doc-major mirror, or already moved
-        for d in sorted(os.listdir(staged_part)):
-            src_dir = os.path.join(staged_part, d)
-            if not (d.startswith(prefix) and os.path.isdir(src_dir)):
-                continue
-            live = os.path.join(path, sub, d)
-            os.makedirs(live, exist_ok=True)
-            for fname in sorted(os.listdir(src_dir)):
-                if fname.endswith(".parquet"):
-                    shutil.move(os.path.join(src_dir, fname), os.path.join(live, fname))
-            shutil.rmtree(src_dir)
-        shutil.rmtree(staged_part)
-    staged_doclens = f"{pend}/doclens"
-    if os.path.isdir(staged_doclens):
-        for fname in sorted(os.listdir(staged_doclens)):
-            if fname.endswith(".parquet"):
-                shutil.move(
-                    os.path.join(staged_doclens, fname),
-                    os.path.join(path, "doclens", fname),
-                )
-        shutil.rmtree(staged_doclens)
-    for name in ("termstats", "stats"):
-        staged = f"{pend}/{name}"
-        cur, aside = f"{path}/{name}", f"{path}/{name}._old"
-        if os.path.isdir(staged):
-            if os.path.isdir(cur):
-                shutil.rmtree(aside, ignore_errors=True)
-                os.rename(cur, aside)
-            # cur is now absent — either renamed just above, or a previous
-            # publish crashed between its rename and move (the retry lands
-            # here with `staged` still present and completes the swap)
-            shutil.move(staged, cur)
-        # sweep the aside copy UNCONDITIONALLY (ADVICE r13): a crash
-        # between move(staged, cur) and this rmtree leaves {name}._old
-        # behind with `staged` absent — the retry must still delete it, so
-        # a completed publish always leaves a clean layout.
-        shutil.rmtree(aside, ignore_errors=True)
-    markers = f"{pend}/_markers"
-    if os.path.isdir(markers):
-        # land the streaming applied-markers BEFORE the pending dir drops:
-        # once the stage is gone, the batch is provably marked applied
-        # (fused commit point — see bm25_append_index stream_marker)
-        applied = f"{path}/_stream_applied"
-        os.makedirs(applied, exist_ok=True)
-        for fname in sorted(os.listdir(markers)):
-            open(os.path.join(applied, fname), "w").close()
-    os.remove(f"{pend}/_STAGED_OK")  # atomic: data + markers are live
-    shutil.rmtree(pend)
+        (
+            spark.read.parquet(f"{path}/stats")
+            .unionByName(new_stats)
+            .agg(
+                F.sum("n_docs").cast("long").alias("n_docs"),
+                F.sum("n_toks").cast("long").alias("n_toks"),
+            )
+            .write.mode("overwrite")
+            .parquet(f"{pend}/stats")
+        )
+        tf.unpersist()
+
+    targets = {
+        "postings": f"{path}/postings",
+        "doc_tf": f"{path}/doc_tf",  # staged only when the layout has it
+        "doclens": f"{path}/doclens",
+        "termstats": Replace(f"{path}/termstats"),
+        "stats": Replace(f"{path}/stats"),
+    }
+    return stage, targets
 
 
 def bm25_compact_index(
@@ -588,10 +477,10 @@ def bm25_compact_index(
     each touched ``bucket=`` directory of ``{path}/postings``, and after
     thousands of shard appends a probe pays a per-bucket metadata storm.
     Delegates to the same row-identity-verified compaction the vector
-    indexes use (``similarity.compact_partitioned_layout`` — scratch
+    indexes use (``similarity.compact_partitioned_layout`` — staged
     write, per-bucket row-count + order-insensitive xxhash64 fingerprint
-    verification BEFORE any source directory is touched, rename-aside
-    swap), just partitioned by ``bucket`` instead of ``cid``. The
+    verification BEFORE any source directory is touched, swap through
+    ``streaming.txn``), just partitioned by ``bucket`` instead of ``cid``. The
     ``doclens`` table also accretes append files; it sits off the serving
     path (corpus-level reporting only), so compacting it is opt-in via
     ``include_doclens=True`` (VERDICT r13 #6 / r14 #3 — the default stays
@@ -663,7 +552,7 @@ def bm25_search_index(
 def _stored_stats(spark: SparkSession, path: str) -> tuple:
     """``(n_docs, n_toks)`` of a stored layout's one-row ``stats`` table,
     memoized per directory identity (``util.stored_memo``): the append's
-    rename-aside swap and every rebuild give the table a new identity.
+    replace swap and every rebuild give the table a new identity.
     The read passes the table's schema, so it runs no inference job."""
     sp = f"{path}/stats"
     return stored_memo(

@@ -1190,111 +1190,56 @@ def ivf_recenter_index(
     Lloyd rounds) makes the result identical to ``ivf_build_index`` over
     the same rows, regardless of how they arrived — pinned by test_ann.
 
-    Safety: the re-assigned corpus and new centroid table are written to
-    sibling ``._new`` directories and VERIFIED (row count equality)
-    before the swap; the swap itself is the rename-aside discipline
-    (r14 — the old ``rmtree(cur); rename(new, cur)`` had a crash window
-    that LOST the live table, and a crash between the corpus and
-    centroid swaps left a new corpus paired with old centroids:
-    inconsistent assignments). A ``{path}/_RECENTER_OK`` marker lands
-    only AFTER both ``._new`` tables verify (ADVICE r14): the marker is
-    what licenses the swap, so :func:`ivf_finish_recenter` after a crash
-    DURING the heavy ``._new`` writes — when the staged tables are
-    partial and unverified — discards them instead of installing them
-    over the good live corpus; after a crash mid-swap (marker present)
-    it completes the swap idempotently. The whole op holds the index
-    root's ``_WRITER_LOCK`` (``txn.writer_lock``, VERDICT r14 #5).
-    Local-filesystem moves via ``os``/``shutil`` — 1:1 with the Hadoop
-    FileSystem API on a cluster.
+    Safety: the re-assigned corpus and new centroid table stage through
+    :func:`..streaming.txn.staged_batch_publish` as REPLACE targets and
+    are VERIFIED (row count equality) inside the stage, so an unverified
+    table never gets a completed stage. A crash while staging leaves the
+    live layout untouched (the next write discards the half-stage); a
+    crash mid-swap is finished by ``txn.publish_pending_batch(path)``,
+    which completes both swaps. A recenter that finds a completed stage refuses with
+    that instruction, as every other writer does. The whole op holds the
+    index root's ``_WRITER_LOCK``. Local-filesystem moves via
+    ``os``/``shutil`` — 1:1 with the Hadoop FileSystem API on a cluster.
     Returns ``{rows, n_centroids_before, n_centroids_after}``."""
-    import os
-    import shutil
+    from ..streaming.txn import Replace, staged_batch_publish
 
-    from ..streaming.txn import writer_lock
+    report = {}
 
-    with writer_lock(path, "ivf_recenter_index"):
-        # a crashed previous recenter leaves either unverified ._new husks
-        # (no marker — discard) or a verified half-swap (marker — finish);
-        # settle it before reading the corpus so we read a consistent live
-        # layout
-        ivf_finish_recenter(path)
+    def stage(pend: str) -> None:
         corpus = spark.read.parquet(f"{path}/corpus").select("neighbor_id", "cvec")
         k_before = spark.read.parquet(f"{path}/centroids").count()
         n_rows = corpus.count()
-        if n_centroids is None:
+        k = n_centroids
+        if k is None:
             import math
 
-            n_centroids = max(16, math.isqrt(max(n_rows - 1, 0)) + 1)
+            k = max(16, math.isqrt(max(n_rows - 1, 0)) + 1)
         c = fan_out(corpus, CPU_HEAVY)
-        cents = _train_centroids(c, n_centroids, lloyd_iters)
-        new_corpus, new_cents = f"{path}/corpus._new", f"{path}/centroids._new"
+        cents = _train_centroids(c, k, lloyd_iters)
         _assign(c, cents).hint("rebalance", "cid").write.partitionBy("cid").mode(
             "overwrite"
-        ).parquet(new_corpus)
-        cents.write.mode("overwrite").parquet(new_cents)
-        got = spark.read.parquet(new_corpus).count()
+        ).parquet(f"{pend}/corpus")
+        cents.write.mode("overwrite").parquet(f"{pend}/centroids")
+        got = spark.read.parquet(f"{pend}/corpus").count()
         if got != n_rows:  # pragma: no cover - defense against a writer bug
-            shutil.rmtree(new_corpus, ignore_errors=True)
-            shutil.rmtree(new_cents, ignore_errors=True)
             raise RuntimeError(
                 f"recenter verification failed: {got} rows written != {n_rows} "
                 "read; index left untouched"
             )
-        # verified → license the swap. From here ivf_finish_recenter
-        # completes it after ANY crash.
-        open(f"{path}/_RECENTER_OK", "w").close()
-        ivf_finish_recenter(path)
-    return {
-        "rows": int(n_rows),
-        "n_centroids_before": int(k_before),
-        "n_centroids_after": int(n_centroids),
-    }
+        report.update(
+            rows=int(n_rows), n_centroids_before=int(k_before), n_centroids_after=int(k)
+        )
 
-
-def ivf_finish_recenter(path: str) -> bool:
-    """Settle a crashed :func:`ivf_recenter_index` — and run the swap
-    recenter itself performs (one definition). Marker-gated (ADVICE
-    r14): ``{path}/_RECENTER_OK`` lands only after BOTH ``._new`` tables
-    verified, so
-
-    - marker present → the staged tables are verified-complete: for each
-      of corpus/centroids, if a ``._new`` sibling exists, rename the
-      live table aside, swap the new one in, and sweep the aside (a
-      table whose ``._new`` is already gone was swapped before the
-      crash and only needs its aside swept); the marker is removed LAST,
-      after the layout is clean. Returns True.
-    - marker absent → the crash happened DURING the ``._new`` writes:
-      the staged tables are partial/unverified (or one of the pair never
-      landed), and installing them would lose the good live corpus or
-      pair a new corpus with old centroids. Discard the ``._new`` husks,
-      leave the live layout untouched, return False — re-run
-      ``ivf_recenter_index`` to retrain.
-
-    Idempotent — re-running after a crash inside THIS function lands the
-    same end state (a crash after the aside sweeps but before the marker
-    unlink re-enters the marker-present path with nothing left to do)."""
-    import os
-    import shutil
-
-    marker = f"{path}/_RECENTER_OK"
-    if not os.path.exists(marker):
-        for name in ("corpus", "centroids"):
-            shutil.rmtree(f"{path}/{name}._new", ignore_errors=True)
-        return False
-    for name in ("corpus", "centroids"):
-        cur = f"{path}/{name}"
-        new = f"{cur}._new"
-        aside = f"{cur}._old"
-        if os.path.isdir(new):
-            if os.path.isdir(cur):
-                shutil.rmtree(aside, ignore_errors=True)
-                os.rename(cur, aside)
-            # cur absent here = a previous attempt crashed between its
-            # rename-aside and this swap; the new table still lands
-            os.rename(new, cur)
-        shutil.rmtree(aside, ignore_errors=True)
-    os.remove(marker)
-    return True
+    staged_batch_publish(
+        path,
+        {
+            "corpus": Replace(f"{path}/corpus"),
+            "centroids": Replace(f"{path}/centroids"),
+        },
+        stage,
+        "ivf_recenter_index",
+    )
+    return report
 
 
 def ivf_search_index(
@@ -2685,7 +2630,7 @@ def ivfpq_res_probe_curve(
         .groupBy("n_probe", query_id_col)
         .agg(F.count("*").alias("_h"))
     )
-    grid = levels.crossJoin(q.select(query_id_col).distinct())
+    grid = F.broadcast(levels).crossJoin(q.select(query_id_col).distinct())
     return grid.join(hits, ["n_probe", query_id_col], "left").select(
         "n_probe",
         query_id_col,
@@ -2928,13 +2873,12 @@ def ivf_compact_index(
     ``subdir="codes"`` (IVF-PQ / IVFADC — their list rows are just
     different columns; the compaction is column-agnostic).
 
-    Safety (the compact_token_shards discipline): compacted lists are
-    written to a scratch root and VERIFIED per cid — row count plus an
-    order-insensitive xxhash64 column checksum — against the source
-    BEFORE any source directory is touched; on any mismatch the scratch
-    is deleted and the layout is left exactly as found. The per-cid dir
-    swap assumes the offline single-writer maintenance window every
-    rewrite op here assumes (``ivf_recenter_index`` likewise). Returns
+    Safety: compacted lists are staged and VERIFIED per cid — row count
+    plus an order-insensitive xxhash64 column checksum — against the
+    source BEFORE any source directory is touched; on any mismatch the
+    layout is left exactly as found. The per-cid swaps publish through
+    the shared stored-index commit (``streaming.txn``), resumable by
+    ``txn.publish_pending_batch(path)`` after a crash. Returns
     ``{lists_compacted, files_before, files_after, rows}``."""
     import os
 
@@ -2958,64 +2902,76 @@ def compact_partitioned_layout(
     """The partition-column-agnostic compaction body behind
     ``ivf_compact_index`` (and ``retrieval.bm25_compact_index``, whose
     postings partition by ``bucket=`` instead of ``cid=``): same
-    scratch-write → per-partition row-count + order-insensitive xxhash64
+    staged write → per-partition row-count + order-insensitive xxhash64
     fingerprint verification → per-directory swap discipline; the
     ``lists_compacted`` key counts partition directories whatever the
     column is named.
 
-    ``lock_root`` is where the single-writer ``_WRITER_LOCK`` is taken
-    (VERDICT r14 #5) — the INDEX root, default ``dirname(root)``, so a
-    compaction of ``{index}/corpus`` or ``{index}/postings`` excludes
-    the appenders/recenterers that lock ``{index}`` itself."""
-    import math
+    The verified copy stages under the INDEX root's pending dir and each
+    rewritten list publishes as a replace target of
+    :func:`..streaming.txn.staged_batch_publish`, so a crash mid-swap
+    never leaves a half-renamed list inside the table: it is finished by
+    ``txn.publish_pending_batch(index root)``. ``lock_root`` is that
+    index root (default ``dirname(root)``), where the single-writer
+    ``_WRITER_LOCK`` is taken, so a compaction of ``{index}/corpus`` or
+    ``{index}/postings`` excludes the appenders/recenterers that lock
+    ``{index}`` itself."""
     import os
-    import shutil
 
-    from pyspark.sql import DataFrame
+    from ..streaming.txn import staged_batch_publish
 
-    from ..streaming.txn import writer_lock
-
-    with writer_lock(
+    report = {"lists_compacted": 0, "files_before": 0, "files_after": 0, "rows": 0}
+    staged_batch_publish(
         lock_root or os.path.dirname(os.path.abspath(root)),
+        None,
+        lambda pend: _stage_compacted_lists(
+            spark, root, part_col, target_bytes, min_files, pend, report
+        ),
         "compact_partitioned_layout",
-    ):
-        return _compact_partitioned_locked(
-            spark, root, part_col, target_bytes, min_files
-        )
+    )
+    return report
 
 
-def _compact_partitioned_locked(
+def _pq_files(d: str) -> list[str]:
+    import os
+
+    return [
+        os.path.join(dp, f)
+        for dp, _dn, fns in os.walk(d)
+        for f in fns
+        if f.endswith(".parquet")
+    ]
+
+
+def _stage_compacted_lists(
     spark,
     root: str,
     part_col: str,
     target_bytes: int,
     min_files: int,
+    pend: str,
+    report: dict,
 ) -> dict:
+    """Write the verified compacted copy of every eligible list of
+    ``root`` under ``{pend}/<table>``, fill ``report`` and return the
+    replace targets (``{}``: nothing to compact)."""
     import math
     import os
-    import shutil
 
     from pyspark.sql import DataFrame
 
+    from ..streaming.txn import Replace
+
     prefix = f"{part_col}="
-
-    def pq_files(d: str) -> list[str]:
-        return [
-            os.path.join(dp, f)
-            for dp, _dn, fns in os.walk(d)
-            for f in fns
-            if f.endswith(".parquet")
-        ]
-
     eligible = []
     for d in os.listdir(root):
         full = os.path.join(root, d)
         if d.startswith(prefix) and os.path.isdir(full):
-            files = pq_files(full)
+            files = _pq_files(full)
             if len(files) >= min_files:
                 eligible.append((int(d.split("=", 1)[1]), full, files))
     if not eligible:
-        return {"lists_compacted": 0, "files_before": 0, "files_after": 0, "rows": 0}
+        return {}
 
     def per_cid_fingerprint(df: DataFrame):
         cols = sorted(c for c in df.columns if c != part_col)
@@ -3035,11 +2991,11 @@ def _compact_partitioned_locked(
     src = spark.read.option("basePath", root).parquet(*[p for _c, p, _f in eligible])
     want = per_cid_fingerprint(src)
     # Lists whose files hold zero rows have nothing to rewrite (they are
-    # absent from both fingerprints AND from the scratch output — swapping
+    # absent from both fingerprints AND from the staged output — swapping
     # them would delete the list directory); drop them up front.
     eligible = [e for e in eligible if e[0] in want]
     if not eligible:
-        return {"lists_compacted": 0, "files_before": 0, "files_after": 0, "rows": 0}
+        return {}
     # Per-LIST split counts, not a global repartition(part_col): hashing by
     # the partition column alone sends every row of a list to ONE partition,
     # so each partition dir is rewritten as exactly one file and a multi-GB
@@ -3064,49 +3020,30 @@ def _compact_partitioned_locked(
         src.join(F.broadcast(splits), on=part_col)
         .withColumn("_salt", F.pmod(F.xxhash64(*[F.col(c) for c in data_cols]), F.col("_nsplit")))
     )
-    scratch = os.path.join(os.path.dirname(root), f"_{os.path.basename(root)}_compact_tmp")
-    shutil.rmtree(scratch, ignore_errors=True)
+    table = os.path.basename(os.path.abspath(root))
+    staged = os.path.join(pend, table)
     (
         salted.repartition(n_out, part_col, "_salt")
         .drop("_nsplit", "_salt")
         .write.option("maxRecordsPerFile", records_per_file)
         .partitionBy(part_col)
         .mode("overwrite")
-        .parquet(scratch)
+        .parquet(staged)
     )
-    got = per_cid_fingerprint(spark.read.parquet(scratch))
-    if got != want:
-        shutil.rmtree(scratch, ignore_errors=True)
+    if per_cid_fingerprint(spark.read.parquet(staged)) != want:
         raise RuntimeError(
             "compact_partitioned_layout: compacted lists failed row-identity "
             "verification; layout left untouched"
         )
-    files_before = sum(len(fs) for _c, _p, fs in eligible)
-    files_after = 0
-    for cid, old_dir, _fs in eligible:
-        new_dir = os.path.join(scratch, f"{part_col}={cid}")
-        if not os.path.isdir(new_dir):  # pragma: no cover - defense in depth
-            raise RuntimeError(
-                f"compact_partitioned_layout: scratch dir for {part_col}={cid} "
-                "missing after verification; aborting swap (source lists "
-                "untouched so far)"
-            )
-        # Rename the source aside and delete it only AFTER the move lands,
-        # so a failed move never loses the list directory.
-        aside = old_dir + "._old"
-        shutil.rmtree(aside, ignore_errors=True)
-        os.rename(old_dir, aside)
-        shutil.move(new_dir, old_dir)
-        shutil.rmtree(aside)
-        files_after += len(pq_files(old_dir))
-    shutil.rmtree(scratch, ignore_errors=True)
-    rows = int(sum(n for n, _s in want.values()))
-    return {
-        "lists_compacted": len(eligible),
-        "files_before": files_before,
-        "files_after": files_after,
-        "rows": rows,
-    }
+    targets = {}
+    for cid, old_dir, fs in eligible:
+        sub = f"{part_col}={cid}"
+        targets[f"{table}/{sub}"] = Replace(old_dir)
+        report["files_before"] += len(fs)
+        report["files_after"] += len(_pq_files(os.path.join(staged, sub)))
+    report["lists_compacted"] = len(eligible)
+    report["rows"] = int(total_rows)
+    return targets
 
 
 def compact_flat_layout(
@@ -3122,36 +3059,46 @@ def compact_flat_layout(
     ``bm25_build_index`` ``doclens`` table is the motivating case
     (thousands of streamed appends each add a file; it sits off the
     serving path but corpus reporting pays the listing storm). Same
-    safety discipline: the compacted copy is written to a scratch dir
-    and VERIFIED (row count + order-insensitive xxhash64 over every
-    column) against the source BEFORE the source is touched; the swap is
-    rename-aside (source survives any failed move); the writer lock is
-    taken at ``lock_root`` (default ``dirname(root)`` — the index root)
-    so it excludes the appenders. Returns ``{files_before, files_after,
-    rows}`` (``files_after == files_before`` means nothing to do)."""
+    safety discipline: the compacted copy is staged and VERIFIED (row count + order-insensitive xxhash64 over every
+    column) against the source BEFORE the source is touched; the copy
+    stages under the index root's pending dir and replaces ``root`` as a
+    :func:`..streaming.txn.staged_batch_publish` replace target, so a
+    crash mid-swap is finished by ``txn.publish_pending_batch``; the
+    writer lock is taken at ``lock_root`` (default ``dirname(root)`` —
+    the index root) so it excludes the appenders. Returns
+    ``{files_before, files_after, rows}`` (``files_after ==
+    files_before`` means nothing to do)."""
     import os
 
-    from ..streaming.txn import writer_lock
+    from ..streaming.txn import staged_batch_publish
 
-    with writer_lock(
-        lock_root or os.path.dirname(os.path.abspath(root)), "compact_flat_layout"
-    ):
-        return _compact_flat_locked(spark, root, target_bytes, min_files)
+    report = {}
+    staged_batch_publish(
+        lock_root or os.path.dirname(os.path.abspath(root)),
+        None,
+        lambda pend: _stage_compacted_flat(
+            spark, root, target_bytes, min_files, pend, report
+        ),
+        "compact_flat_layout",
+    )
+    return report
 
 
-def _compact_flat_locked(spark, root: str, target_bytes: int, min_files: int) -> dict:
+def _stage_compacted_flat(
+    spark, root: str, target_bytes: int, min_files: int, pend: str, report: dict
+) -> dict:
+    """Write the verified compacted copy of ``root`` under
+    ``{pend}/<table>``, fill ``report`` and return its replace target
+    (``{}``: fewer than ``min_files`` files, nothing to do)."""
     import math
     import os
-    import shutil
 
-    files = [
-        os.path.join(dp, f)
-        for dp, _dn, fns in os.walk(root)
-        for f in fns
-        if f.endswith(".parquet")
-    ]
+    from ..streaming.txn import Replace
+
+    files = _pq_files(root)
     if len(files) < min_files:
-        return {"files_before": len(files), "files_after": len(files), "rows": 0}
+        report.update(files_before=len(files), files_after=len(files), rows=0)
+        return {}
     src = spark.read.parquet(root)
     cols = sorted(src.columns)
 
@@ -3165,31 +3112,18 @@ def _compact_flat_locked(spark, root: str, target_bytes: int, min_files: int) ->
     want = fingerprint(src)
     total_bytes = sum(os.path.getsize(f) for f in files)
     n_out = max(1, math.ceil(total_bytes / max(1, target_bytes)))
-    scratch = os.path.join(
-        os.path.dirname(os.path.abspath(root)),
-        f"_{os.path.basename(root)}_compact_tmp",
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
+    table = os.path.basename(os.path.abspath(root))
+    staged = os.path.join(pend, table)
     # full-shuffle repartition, not coalesce: even-sized output files at
     # any scale (coalesce concatenates input partitions and inherits
     # their skew), and the table being compacted is the job's whole input
-    src.repartition(n_out).write.mode("overwrite").parquet(scratch)
-    if fingerprint(spark.read.parquet(scratch)) != want:
-        shutil.rmtree(scratch, ignore_errors=True)
+    src.repartition(n_out).write.mode("overwrite").parquet(staged)
+    if fingerprint(spark.read.parquet(staged)) != want:
         raise RuntimeError(
             "compact_flat_layout: compacted copy failed row-identity "
             "verification; layout left untouched"
         )
-    aside = root + "._old"
-    shutil.rmtree(aside, ignore_errors=True)
-    os.rename(root, aside)
-    os.rename(scratch, root)
-    shutil.rmtree(aside)
-    files_after = sum(
-        1 for _dp, _dn, fns in os.walk(root) for f in fns if f.endswith(".parquet")
+    report.update(
+        files_before=len(files), files_after=len(_pq_files(staged)), rows=int(want[0])
     )
-    return {
-        "files_before": len(files),
-        "files_after": files_after,
-        "rows": int(want[0]),
-    }
+    return {table: Replace(root)}

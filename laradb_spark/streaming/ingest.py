@@ -26,12 +26,12 @@ broadcast weights, the ledger aggregate is sources-sized. State lives in
 parquet indexes, not executor memory, so a month-long ingest holds no
 stream state at all.
 
-EXACTLY-once (r14): every loop in this module and ``streaming.dedup``
-commits each micro-batch through the shared staged-publish transaction
-(:mod:`.txn` — the ``bm25_index_stream`` fused-commit-point discipline,
-ADVICE r13, factored for the family): outputs stage under the index's
-``_append_pending`` with the batch's ownership marker, publish moves data
-and marker together, crashed publishes resume, foreign stages refuse.
+EXACTLY-once: every loop in this module and ``streaming.dedup``
+commits each micro-batch through :func:`.txn.exactly_once_apply`, the
+one commit protocol every stored-index write shares: outputs stage
+beside the index with the batch's ownership marker, publish moves data
+and marker together, crashed publishes resume through
+``txn.publish_pending_batch``, and foreign stages refuse.
 The dedup/score DECISIONS were already idempotent (hash + deterministic
 model); the txn removes the remaining partial-write duplication window.
 """
@@ -477,33 +477,21 @@ def bm25_index_stream(
     text_col: str = "text",
 ):
     """Continuous BM25 index maintenance: each micro-batch of NEW
-    documents lands in a stored ``bm25_build_index`` layout through the
-    staged crash-safe ``bm25_append_index`` — the streaming completion of
-    the build/append/compact/serve lifecycle (``bm25_maintenance_cycle``
-    is the batch twin; the digest / minhash / vector indexes all have the
+    documents lands in a stored ``bm25_build_index`` layout exactly as a
+    ``bm25_append_index`` call would — the streaming completion of the
+    build/append/compact/serve lifecycle (``bm25_maintenance_cycle`` is
+    the batch twin; the digest / minhash / vector indexes all have the
     same ingest-stream counterpart).
 
-    EXACTLY-once per micro-batch, with a FUSED commit point (ADVICE r13):
-    the marker file ``{index_path}/_stream_applied/batch_<id>`` is staged
-    INSIDE the pending dir during the append (before ``_STAGED_OK``) and
-    landed by ``bm25_publish_pending_append`` itself, just before the
-    pending dir drops — publish and marker commit together, so
-
-    - a replay AFTER a completed publish ALWAYS sees its marker and no-ops
-      (foreachBatch's at-least-once redelivery) — there is no crash window
-      between publish and marker write through which a redelivery could
-      re-append the batch and double-count;
-    - a replay after a crash DURING STAGING finds no marker and no
-      ``_STAGED_OK``: the append discards the half-stage and re-runs —
-      nothing was published, so no double-count;
-    - a replay after a crash DURING PUBLISH finds the completed stage
-      CARRYING ITS OWN batch marker under ``_markers/`` and FINISHES it
-      via ``bm25_publish_pending_append`` instead of re-staging;
-    - a completed stage WITHOUT this batch's marker is a foreign append's
-      crashed publish (e.g. a manual ``bm25_append_index`` that died
-      before the stream started): publishing it and marking this batch
-      applied would silently drop this batch's data, so the stream FAILS
-      LOUDLY and directs the operator to ``bm25_publish_pending_append``.
+    EXACTLY-once per micro-batch through :func:`.txn.exactly_once_apply`,
+    with the append's own stage and targets: the batch's applied-marker
+    is staged inside the pending dir and lands with the data (the fused
+    commit point), so a redelivery after a completed publish no-ops, a
+    redelivery after a crash mid-publish finishes that publish instead of
+    re-staging, and a completed stage that is not this batch's (a manual
+    ``bm25_append_index`` that crashed mid-publish before the stream
+    started) fails the stream and directs the operator to
+    ``txn.publish_pending_batch(index_path)``.
 
     Single-writer contract: don't run manual ``bm25_append_index`` calls
     against the same layout while the stream is live (every rewrite op in
@@ -514,63 +502,14 @@ def bm25_index_stream(
 
     Returns the started StreamingQuery (availableNow trigger — drain the
     queued batches, then stop; rerun to ingest new arrivals)."""
-    import os
-
-    from ..pipelines.retrieval import (
-        bm25_append_index,
-        bm25_publish_pending_append,
-    )
-
-    applied_dir = os.path.join(index_path, "_stream_applied")
+    from ..pipelines.retrieval import _bm25_append_stage
+    from .txn import exactly_once_apply
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        from .txn import (
-            _is_published_leftover,
-            sweep_applied_markers,
-            writer_lock,
-        )
-
         if batch_df.isEmpty():
             return
-        name = f"batch_{int(batch_id)}"
-        if os.path.exists(os.path.join(applied_dir, name)):
-            return  # redelivery of a fully-applied batch
-        pend = f"{index_path}/_append_pending"
-        if os.path.exists(f"{pend}/_STAGED_OK"):
-            if not os.path.exists(f"{pend}/_markers/{name}"):
-                if _is_published_leftover(index_path, pend):
-                    # an earlier batch's data AND markers are already live;
-                    # only the pending-dir teardown crashed (ADVICE r14) —
-                    # finish it and continue with THIS batch's append
-                    with writer_lock(index_path, "bm25_index_stream"):
-                        bm25_publish_pending_append(index_path)
-                else:
-                    raise RuntimeError(
-                        "bm25_index_stream: found a completed pending stage "
-                        f"at {pend} that does NOT belong to this micro-batch "
-                        f"({name}) — a manual bm25_append_index crashed "
-                        "mid-publish before the stream ran. Publishing it "
-                        "here would mark this batch applied without "
-                        "appending its data. Run "
-                        "bm25_publish_pending_append(index_path) first, "
-                        "then restart the stream."
-                    )
-            else:
-                # this batch's previous attempt crashed mid-publish: finish
-                # it (the publish lands the staged marker with the data —
-                # fused commit point, so no separate marker write is lost)
-                with writer_lock(index_path, "bm25_index_stream"):
-                    bm25_publish_pending_append(index_path)
-                sweep_applied_markers(index_path, batch_id)
-                return
-        bm25_append_index(
-            batch_df,
-            index_path,
-            id_col=id_col,
-            text_col=text_col,
-            stream_marker=name,
-        )
-        sweep_applied_markers(index_path, batch_id)
+        stage, targets = _bm25_append_stage(batch_df, index_path, id_col, text_col)
+        exactly_once_apply(index_path, batch_id, "bm25_index_stream", stage, targets)
 
     return (
         stream.writeStream.foreachBatch(_apply)

@@ -1,23 +1,34 @@
-"""Exactly-once micro-batch commit for the foreachBatch ingest loops.
+"""The one commit protocol for stored-index writes.
 
-The staged-append discipline the BM25 index maintainer proved out
-(``pipelines/retrieval.bm25_append_index`` + ``bm25_index_stream``,
-ADVICE r12/r13), factored so every stateful ingest loop shares ONE
-implementation instead of one honest at-least-once caveat each:
+Every write that changes a stored index — the foreachBatch ingest loops,
+``bm25_append_index`` and ``bm25_index_stream``, ``minhash_index_update``,
+``ivf_recenter_index`` and the layout compactions — stages and publishes
+through this module, and this module is the only code that knows the
+on-disk stage layout:
 
-- the batch's outputs are all written under ``{root}/_append_pending/...``
+- the write's outputs all land under ``{root}/_append_pending/<key>``
   first; none of the live tables is touched until staging completes;
-- the stream's applied-marker is staged INSIDE the pending dir (under
+- the ``_targets`` manifest records, per staged key, its live directory
+  and whether it APPENDS (part-files move in, hive partition
+  subdirectories such as ``bucket=N/`` kept) or REPLACES (the staged
+  directory is swapped in rename-aside; the aside copy goes under
+  ``_append_pending/_aside`` and is swept on every publish, a retry
+  included). A two-field manifest line is an append;
+- a stream's applied-marker is staged INSIDE the pending dir (under
   ``_markers/``) BEFORE the ``_STAGED_OK`` flag lands, so a stage is never
   "complete" without its ownership record — publish then lands data and
   marker together (the FUSED commit point: there is no crash window between
   publish and marker write through which a redelivery could re-append);
 - publish is a short sequence of file moves, each tolerant of the thing it
-  moves being already gone, so it is idempotent-resumable after ANY crash;
-- a completed stage that does NOT carry the current batch's marker is a
-  foreign writer's crashed publish — publishing it and marking the batch
-  applied would silently drop the batch's own data, so the loop fails
-  loudly and directs the operator to :func:`publish_pending_batch`.
+  moves being already gone, so it is idempotent-resumable after ANY crash,
+  and ``publish_pending_batch(root)`` is the one recovery call for every
+  index;
+- a completed stage found by a new write is a crashed publish: offline
+  writes refuse (re-staging would double-count the published part), and a
+  stream refuses unless the stage carries its own batch's marker —
+  publishing a foreign stage and marking the batch applied would silently
+  drop the batch's own data. Both direct the operator to
+  :func:`publish_pending_batch`.
 
 ``root`` is the loop's stateful store (its index path): the pending dir,
 the markers, and the txn metadata all live under it, and Spark/Hadoop
@@ -55,6 +66,7 @@ STAGED_OK = "_STAGED_OK"
 MARKERS = "_markers"
 APPLIED = "_stream_applied"
 TARGETS = "_targets"
+ASIDE = "_aside"
 WRITER_LOCK = "_WRITER_LOCK"
 MARKER_RETAIN = 8
 
@@ -107,24 +119,65 @@ def writer_lock(root: str, name_hint: str, stale_after_s: float = 6 * 3600.0):
             pass
 
 
-def _read_targets(pend: str) -> list[tuple[str, str]]:
+class Replace(str):
+    """A ``targets`` value whose staged directory REPLACES the live one
+    whole (the merged BM25 stats, a recentered IVF corpus, a compacted
+    list). A plain ``str`` value is an APPEND target: the staged
+    part-files join the live directory, hive partition subdirectories
+    (``bucket=N/``, ``cid=N/``) kept."""
+
+
+def _read_targets(pend: str) -> list[tuple[str, str, bool]]:
+    """``(staged subdir, live dir, replace?)`` per manifest line. A
+    two-field line (the pre-replace manifest format) is an append."""
     out = []
     with open(os.path.join(pend, TARGETS)) as f:
         for line in f:
             line = line.rstrip("\n")
             if line:
-                sub, tgt = line.split("\t", 1)
-                out.append((sub, tgt))
+                sub, tgt, *mode = line.split("\t")
+                out.append((sub, tgt, mode == ["replace"]))
     return out
 
 
+def _move_parts(staged: str, live: str) -> None:
+    """Move every parquet part-file under ``staged`` to the same relative
+    path under ``live``. Spark part-file names carry task UUIDs, so moves
+    never collide; a file already moved is simply no longer listed."""
+    os.makedirs(live, exist_ok=True)
+    for dirpath, _dirs, files in os.walk(staged):
+        dest = os.path.normpath(os.path.join(live, os.path.relpath(dirpath, staged)))
+        for fname in sorted(files):
+            if fname.endswith(".parquet"):
+                os.makedirs(dest, exist_ok=True)
+                shutil.move(os.path.join(dirpath, fname), os.path.join(dest, fname))
+    shutil.rmtree(staged)
+
+
+def _swap_in(staged: str, live: str, aside: str) -> None:
+    """Rename-aside swap of ``staged`` over ``live``. The aside copy goes
+    under the pending dir, never beside the live table, and is swept
+    unconditionally — a retry after a crash between the swap and the
+    sweep still leaves no stale copy."""
+    if os.path.isdir(staged):
+        if os.path.isdir(live):
+            shutil.rmtree(aside, ignore_errors=True)
+            os.makedirs(os.path.dirname(aside), exist_ok=True)
+            shutil.move(live, aside)
+        # live absent here: renamed aside by this call, or by a publish
+        # that crashed before its move — the staged table still lands
+        os.makedirs(os.path.dirname(live), exist_ok=True)
+        shutil.move(staged, live)
+    shutil.rmtree(aside, ignore_errors=True)
+
+
 def publish_pending_batch(root: str) -> None:
-    """Publish a fully-staged micro-batch at ``{root}/_append_pending``:
-    move every staged parquet part-file into its live target directory
-    (recorded in the stage's ``_targets`` manifest; Spark part-file names
-    carry task UUIDs, so moves never collide), land the staged
-    applied-markers into ``{root}/_stream_applied``, then drop the
-    pending dir. Every step tolerates its object being already
+    """Publish the completed stage at ``{root}/_append_pending`` — the one
+    recovery call for every stored index: per ``_targets`` manifest line,
+    move an APPEND target's part-files into its live directory (partition
+    subdirectories kept) or swap a REPLACE target in rename-aside; land
+    the staged applied-markers into ``{root}/_stream_applied``; then drop
+    the pending dir. Every step tolerates its object being already
     moved/created, so after ANY crash mid-publish calling this again
     completes the batch exactly once — data and marker together.
 
@@ -136,25 +189,22 @@ def publish_pending_batch(root: str) -> None:
     atomic unlink first, everything is already live at that point, a
     crash leaves only an un-marked half-stage, and "no completed stage
     at {pend}" from a retry means the publish in fact COMPLETED (the
-    next batch discards the husk)."""
+    next writer discards the husk)."""
     pend = os.path.join(root, PENDING)
     ok = os.path.join(pend, STAGED_OK)
     if not os.path.exists(ok):
         raise RuntimeError(
             f"publish_pending_batch: no completed stage at {pend}; nothing "
             "to publish (an un-marked pending dir is either an aborted "
-            "stage — re-run the ingest, which discards and restages it — "
+            "stage — re-run the write, which discards and restages it — "
             "or the husk of a publish that already completed)."
         )
-    for sub, tgt in _read_targets(pend):
+    for sub, tgt, replace in _read_targets(pend):
         staged = os.path.join(pend, sub)
-        if not os.path.isdir(staged):
-            continue  # already moved by a previous (crashed) publish
-        os.makedirs(tgt, exist_ok=True)
-        for fname in sorted(os.listdir(staged)):
-            if fname.endswith(".parquet"):
-                shutil.move(os.path.join(staged, fname), os.path.join(tgt, fname))
-        shutil.rmtree(staged)
+        if replace:
+            _swap_in(staged, tgt, os.path.join(pend, ASIDE, sub))
+        elif os.path.isdir(staged):  # absent: moved by a crashed publish
+            _move_parts(staged, tgt)
     markers = os.path.join(pend, MARKERS)
     if os.path.isdir(markers):
         applied = os.path.join(root, APPLIED)
@@ -199,40 +249,69 @@ def sweep_applied_markers(root: str, current_batch_id: int) -> int:
     return swept
 
 
+def _stage_and_publish(
+    root: str,
+    stage: "Callable[[str], dict | None]",
+    targets: "dict[str, str] | None",
+    marker: "str | None" = None,
+) -> None:
+    """The commit tail both entry points share: discard any aborted
+    half-stage (nothing of it was published), run ``stage(pend)``, then
+    land the ``_targets`` manifest, the applied-marker (BEFORE
+    ``_STAGED_OK``, so a stage is never complete without its ownership
+    record) and ``_STAGED_OK``, and publish. ``targets=None`` takes the
+    mapping ``stage`` returns; an empty one commits nothing."""
+    pend = os.path.join(root, PENDING)
+    if os.path.isdir(pend):
+        shutil.rmtree(pend)
+    returned = stage(pend)
+    targets = returned if targets is None else targets
+    if not targets and marker is None:
+        shutil.rmtree(pend, ignore_errors=True)
+        return
+    os.makedirs(pend, exist_ok=True)
+    with open(os.path.join(pend, TARGETS), "w") as f:
+        for sub, tgt in sorted(targets.items()):
+            mode = "replace" if isinstance(tgt, Replace) else "append"
+            f.write(f"{sub}\t{os.path.abspath(tgt)}\t{mode}\n")
+    if marker is not None:
+        os.makedirs(os.path.join(pend, MARKERS), exist_ok=True)
+        open(os.path.join(pend, MARKERS, marker), "w").close()
+    open(os.path.join(pend, STAGED_OK), "w").close()
+    publish_pending_batch(root)
+
+
 def staged_batch_publish(
     root: str,
-    targets: "dict[str, str]",
-    stage: "Callable[[str], None]",
+    targets: "dict[str, str] | None",
+    stage: "Callable[[str], dict | None]",
     name_hint: str,
 ) -> None:
     """Batch-side staged commit — the marker-less sibling of
-    :func:`exactly_once_apply` for OFFLINE multi-table appends (e.g. the
-    minhash index's sigs+bands pair): a crash between two live-table
-    appends must not leave the pair inconsistent, so both stage under
-    ``{root}/_append_pending`` and publish together. A completed stage
-    found on disk is a previous caller's crashed publish: this function
-    refuses (re-staging would double-append the published part) and
-    directs to :func:`publish_pending_batch`; an un-marked half-stage is
-    discarded and restaged."""
+    :func:`exactly_once_apply` for OFFLINE index writes (BM25 append,
+    IVF recenter, layout compaction, the minhash sigs+bands pair): every
+    table the write touches stages under ``{root}/_append_pending`` and
+    publishes together, so a crash never leaves them inconsistent.
+
+    ``targets`` maps each staged subdirectory to its live directory
+    (:class:`Replace` marks a whole-table swap). Pass ``None`` when the
+    targets depend on what ``stage`` reads of the live layout — it then
+    returns the mapping, read under the writer lock like the rest of the
+    stage. A completed stage found on disk is a previous writer's crashed
+    publish: this function refuses (re-staging would double-append the
+    published part) and directs to :func:`publish_pending_batch`; an
+    un-marked half-stage is discarded and restaged."""
     with writer_lock(root, name_hint):
         pend = os.path.join(root, PENDING)
         if os.path.exists(os.path.join(pend, STAGED_OK)):
             raise RuntimeError(
-                f"{name_hint}: found a fully-staged pending append at {pend} — "
-                "a previous append crashed DURING publish. Run "
+                f"{name_hint}: found a fully-staged pending write at {pend} "
+                "— a previous write crashed DURING publish. Run "
                 "laradb_spark.streaming.txn.publish_pending_batch(root) to "
-                "finish it; re-running the append would double-count the "
+                "finish it; re-running the write would double-count the "
                 "published part."
             )
-        if os.path.isdir(pend):
-            shutil.rmtree(pend)  # aborted half-stage: nothing was published
-        stage(pend)
-        os.makedirs(pend, exist_ok=True)
-        with open(os.path.join(pend, TARGETS), "w") as f:
-            for sub, tgt in sorted(targets.items()):
-                f.write(f"{sub}\t{os.path.abspath(tgt)}\n")
-        open(os.path.join(pend, STAGED_OK), "w").close()
-        publish_pending_batch(root)
+        _stage_and_publish(root, stage, targets)
 
 
 def exactly_once_apply(
@@ -265,53 +344,37 @@ def exactly_once_apply(
       parquet under ``{pend}/<key>`` for every key in ``targets`` — then
       land the manifest + marker + ``_STAGED_OK`` and publish.
 
-    ``targets`` maps each staged subdirectory to its live directory. The
-    stage callback's reads of the live index are safe by construction:
-    staging never mutates live tables, so a crash anywhere inside
-    ``stage`` leaves the loop re-runnable."""
+    ``targets`` maps each staged subdirectory to its live directory, as
+    in :func:`staged_batch_publish`. The stage callback's reads of the
+    live index are safe by construction: staging never mutates live
+    tables, so a crash anywhere inside ``stage`` leaves the loop
+    re-runnable."""
     name = f"batch_{int(batch_id)}"
     if os.path.exists(os.path.join(root, APPLIED, name)):
         return
     with writer_lock(root, name_hint):
         pend = os.path.join(root, PENDING)
-        ok = os.path.join(pend, STAGED_OK)
-        if os.path.exists(ok):
-            if not os.path.exists(os.path.join(pend, MARKERS, name)):
-                if _is_published_leftover(root, pend):
-                    # its data AND markers are already live — the writer
-                    # crashed between landing markers and dropping pend
-                    # (ADVICE r14). Finish the teardown (idempotent: the
-                    # staged dirs are gone, markers re-create as no-ops)
-                    # and fall through to stage THIS batch.
-                    publish_pending_batch(root)
-                else:
-                    raise RuntimeError(
-                        f"{name_hint}: found a completed pending stage at "
-                        f"{pend} that does NOT belong to this micro-batch "
-                        f"({name}) — a foreign writer crashed mid-publish "
-                        "before this stream ran. Publishing it here would "
-                        "mark this batch applied without ingesting its "
-                        "data. Run "
-                        "laradb_spark.streaming.txn.publish_pending_batch"
-                        "(root) first, then restart the stream."
-                    )
-            else:
+        if os.path.exists(os.path.join(pend, STAGED_OK)):
+            if os.path.exists(os.path.join(pend, MARKERS, name)):
                 publish_pending_batch(root)
                 sweep_applied_markers(root, batch_id)
                 return
-        if os.path.isdir(pend):
-            # aborted half-stage: nothing was published, the live tables
-            # never saw it — discard and restage
-            shutil.rmtree(pend)
-        stage(pend)
-        os.makedirs(pend, exist_ok=True)
-        with open(os.path.join(pend, TARGETS), "w") as f:
-            for sub, tgt in sorted(targets.items()):
-                f.write(f"{sub}\t{os.path.abspath(tgt)}\n")
-        os.makedirs(os.path.join(pend, MARKERS), exist_ok=True)
-        open(os.path.join(pend, MARKERS, name), "w").close()
-        open(ok, "w").close()
-        publish_pending_batch(root)
+            if not _is_published_leftover(root, pend):
+                raise RuntimeError(
+                    f"{name_hint}: found a completed pending stage at "
+                    f"{pend} that does NOT belong to this micro-batch "
+                    f"({name}) — a foreign writer crashed mid-publish "
+                    "before this stream ran. Publishing it here would "
+                    "mark this batch applied without ingesting its data. "
+                    "Run laradb_spark.streaming.txn.publish_pending_batch"
+                    "(root) first, then restart the stream."
+                )
+            # its data AND markers are already live — the writer crashed
+            # between landing markers and dropping pend (ADVICE r14).
+            # Finish the teardown (idempotent: the staged dirs are gone,
+            # markers re-create as no-ops) and stage THIS batch.
+            publish_pending_batch(root)
+        _stage_and_publish(root, stage, targets, marker=name)
         sweep_applied_markers(root, batch_id)
 
 

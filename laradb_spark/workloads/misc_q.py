@@ -649,8 +649,8 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     buys = first_after("purchase", clicks.select("user_id", "t_click"), "t_click", "t_buy")
     return (
         views.agg(F.count(F.lit(1)).alias("n_view"))
-        .crossJoin(clicks.agg(F.count(F.lit(1)).alias("n_click_after_view")))
-        .crossJoin(buys.agg(F.count(F.lit(1)).alias("n_buy_after_click")))
+        .crossJoin(F.broadcast(clicks.agg(F.count(F.lit(1)).alias("n_click_after_view"))))
+        .crossJoin(F.broadcast(buys.agg(F.count(F.lit(1)).alias("n_buy_after_click"))))
     )
 
 

@@ -1204,9 +1204,13 @@ def test_ivf_recenter_crash_mid_swap_is_resumable(spark, clustered, tmp_path, mo
     rmtree-then-rename had a window that lost the live corpus outright,
     and a crash between the corpus and centroid swaps left a new corpus
     paired with OLD centroids (inconsistent assignments). Inject a crash
-    exactly there: the index is recoverable by ivf_finish_recenter, and
-    the finished index searches identically to an uncrashed recenter."""
+    exactly there: a second recenter refuses, the one recovery call
+    txn.publish_pending_batch finishes the swap, and the finished index
+    searches identically to an uncrashed recenter."""
     import os
+    import shutil
+
+    from laradb_spark.streaming import txn
 
     a, b = str(tmp_path / "rc_a"), str(tmp_path / "rc_b")
     for path in (a, b):
@@ -1217,26 +1221,27 @@ def test_ivf_recenter_crash_mid_swap_is_resumable(spark, clustered, tmp_path, mo
         sim.ivf_append_index(clustered.filter(F.col("vec_id") >= 150), path)
     sim.ivf_recenter_index(spark, b, lloyd_iters=2)  # the uncrashed twin
 
-    real_rename = os.rename
+    real_move = shutil.move
     state = {"n": 0}
 
-    def crash_third_rename(src, dst):
-        # renames: corpus cur->aside, corpus new->cur, centroids cur->aside
+    def crash_third_move(src, dst):
+        # moves: centroids live->aside, centroids staged->live, corpus live->aside
         state["n"] += 1
         if state["n"] == 3:
-            raise OSError("injected crash between corpus and centroid swaps")
-        return real_rename(src, dst)
+            raise OSError("injected crash between centroid and corpus swaps")
+        return real_move(src, dst)
 
-    monkeypatch.setattr(os, "rename", crash_third_rename)
+    monkeypatch.setattr(shutil, "move", crash_third_move)
     with pytest.raises(OSError, match="injected"):
         sim.ivf_recenter_index(spark, a, lloyd_iters=2)
-    monkeypatch.setattr(os, "rename", real_rename)
-    # crash state: new corpus live, OLD centroids live, centroids._new waiting
-    assert os.path.isdir(f"{a}/centroids._new")
-    sim.ivf_finish_recenter(a)
-    assert not os.path.exists(f"{a}/centroids._new")
-    assert not os.path.exists(f"{a}/corpus._old")
-    assert not os.path.exists(f"{a}/centroids._old")
+    monkeypatch.setattr(shutil, "move", real_move)
+    # crash state: NEW centroids live, the old corpus live, the new one staged
+    assert os.path.isdir(f"{a}/{txn.PENDING}/corpus")
+    assert not [d for d in os.listdir(a) if d.endswith(("._old", "._new"))]
+    with pytest.raises(RuntimeError, match="publish_pending_batch"):
+        sim.ivf_recenter_index(spark, a, lloyd_iters=2)
+    txn.publish_pending_batch(a)
+    assert not os.path.exists(f"{a}/{txn.PENDING}")
     q = _queries(clustered)
     got = _pairs_ranked(sim.ivf_search_index(spark, a, q, n_probe=3, k=5))
     want = _pairs_ranked(sim.ivf_search_index(spark, b, q, n_probe=3, k=5))
@@ -1371,6 +1376,58 @@ def test_ivf_compact_index(spark, clustered, tmp_path):
     # idempotent-ish: a second pass finds nothing (or no-ops harmlessly)
     rep2 = sim.ivf_compact_index(spark, path)
     assert rep2["files_before"] == 0 or rep2["files_after"] <= rep2["files_before"]
+
+
+def test_ivf_compact_crash_mid_swap_is_resumable(spark, clustered, tmp_path, monkeypatch):
+    """A compaction that crashes between renaming a list aside and moving
+    its compacted copy in leaves no half-renamed list inside the table
+    (a 'cid=N._old' directory there made Spark read cid as a STRING), and
+    txn.publish_pending_batch resumes it to an index that searches
+    exactly like an uncrashed compaction's twin."""
+    import os
+    import shutil
+
+    from laradb_spark.streaming import txn
+
+    a, b = str(tmp_path / "cmp_a"), str(tmp_path / "cmp_b")
+    for path in (a, b):
+        sim.ivf_build_index(
+            clustered.filter(F.col("vec_id") < 150), path, n_centroids=8, lloyd_iters=2
+        )
+        for lo in (150, 175):
+            sim.ivf_append_index(
+                clustered.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 25)),
+                path,
+            )
+    want_rep = sim.ivf_compact_index(spark, b)  # the uncrashed twin
+    assert want_rep["lists_compacted"] > 1
+
+    real_move = shutil.move
+    state = {"n": 0}
+
+    def crash_second_move(src, dst):
+        # moves: first list live->aside, then its compacted copy in (crash)
+        state["n"] += 1
+        if state["n"] == 2:
+            raise OSError("injected crash mid-swap")
+        return real_move(src, dst)
+
+    monkeypatch.setattr(shutil, "move", crash_second_move)
+    with pytest.raises(OSError, match="injected"):
+        sim.ivf_compact_index(spark, a)
+    monkeypatch.setattr(shutil, "move", real_move)
+    for d in os.listdir(f"{a}/corpus"):
+        if not d.startswith(("_", ".")):
+            int(d.split("=", 1)[1])  # every list dir still names an integer cid
+    with pytest.raises(RuntimeError, match="publish_pending_batch"):
+        sim.ivf_compact_index(spark, a)
+    txn.publish_pending_batch(a)
+    assert not os.path.exists(f"{a}/{txn.PENDING}")
+    q = _queries(clustered)
+    got = _pairs_ranked(sim.ivf_search_index(spark, a, q, n_probe=3, k=5))
+    want = _pairs_ranked(sim.ivf_search_index(spark, b, q, n_probe=3, k=5))
+    assert got == want and len(got) > 0
+    assert sim.ivf_compact_index(spark, a)["lists_compacted"] == 0
 
 
 def test_append_without_meta_to_meta_layout_raises(spark, clustered, tmp_path):

@@ -1021,13 +1021,14 @@ def test_bm25_append_stage_crash_noop_and_publish_resumable(spark, tmp_path, sf_
     """Crash-safety of the staged append (ADVICE r12):
     (1) an aborted STAGE (pending dir, no _STAGED_OK marker) is invisible
         to readers and a re-run append discards it and lands correctly;
-    (2) a crash MID-PUBLISH is recovered by re-running
-        bm25_publish_pending_append — idempotent file moves, no
+    (2) a crash MID-PUBLISH is recovered by
+        txn.publish_pending_batch — idempotent file moves, no
         double-count — ending exactly equal to a fresh union build."""
     import os
     import shutil
 
     from laradb_spark.pipelines import retrieval as rt
+    from laradb_spark.streaming.txn import publish_pending_batch
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     queries = [(1, "hash join"), (2, "stream window agg")]
@@ -1052,18 +1053,18 @@ def test_bm25_append_stage_crash_noop_and_publish_resumable(spark, tmp_path, sf_
             raise OSError("injected crash mid-publish")
         return real_move(src, dst)
 
-    # retrieval's publish imports the global shutil module inside the
-    # function, so patching shutil.move patches what it calls
+    # txn's publish calls the global shutil module, so patching
+    # shutil.move patches what it calls
     monkeypatch.setattr(shutil, "move", flaky_move)
     with pytest.raises(OSError, match="injected"):
         rt.bm25_append_index(docs.filter(F.col("doc_id") % 2 == 1), a)
     monkeypatch.setattr(shutil, "move", real_move)
 
     # re-running the APPEND must refuse (double-count hazard)...
-    with pytest.raises(RuntimeError, match="bm25_publish_pending_append"):
+    with pytest.raises(RuntimeError, match="publish_pending_batch"):
         rt.bm25_append_index(docs.filter(F.col("doc_id") % 2 == 1), a)
     # ...and the publish retry completes the append exactly once
-    rt.bm25_publish_pending_append(a)
+    publish_pending_batch(a)
     assert not os.path.exists(f"{a}/_append_pending")
     got = sorted(map(tuple, rt.bm25_search_index(spark, a, queries, k=5).collect()))
     want = sorted(map(tuple, rt.bm25_search_index(spark, b, queries, k=5).collect()))
@@ -1072,7 +1073,8 @@ def test_bm25_append_stage_crash_noop_and_publish_resumable(spark, tmp_path, sf_
 
 def test_bm25_append_stream_marker_fused_commit(spark, tmp_path, sf_dir, monkeypatch):
     """ADVICE r13 (medium): the streaming applied-marker commits WITH the
-    publish, not after it. (1) a normal stream-marked append lands the
+    publish, not after it. The BM25 append's stage, applied exactly once
+    per batch as bm25_index_stream does: (1) a normal batch lands the
     marker in _stream_applied as part of the publish; (2) a crash
     mid-publish leaves the marker STAGED inside the pending dir (ownership
     is on disk), and the publish retry lands data and marker together —
@@ -1082,6 +1084,11 @@ def test_bm25_append_stream_marker_fused_commit(spark, tmp_path, sf_dir, monkeyp
     import shutil
 
     from laradb_spark.pipelines import retrieval as rt
+    from laradb_spark.streaming.txn import exactly_once_apply, publish_pending_batch
+
+    def apply_batch(batch, batch_id):
+        stage, targets = rt._bm25_append_stage(batch, a, "doc_id", "text")
+        exactly_once_apply(a, batch_id, "t", stage, targets)
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     queries = [(1, "hash join"), (2, "stream window agg")]
@@ -1091,9 +1098,7 @@ def test_bm25_append_stream_marker_fused_commit(spark, tmp_path, sf_dir, monkeyp
     rt.bm25_build_index(docs, b)
 
     # (1) normal path: marker lands atomically with the publish
-    rt.bm25_append_index(
-        docs.filter(F.col("doc_id") % 3 == 1), a, stream_marker="batch_7"
-    )
+    apply_batch(docs.filter(F.col("doc_id") % 3 == 1), 7)
     assert os.path.exists(f"{a}/_stream_applied/batch_7")
     assert not os.path.exists(f"{a}/_append_pending")
 
@@ -1106,14 +1111,12 @@ def test_bm25_append_stream_marker_fused_commit(spark, tmp_path, sf_dir, monkeyp
 
     monkeypatch.setattr(shutil, "move", crash_move)
     with pytest.raises(OSError, match="injected"):
-        rt.bm25_append_index(
-            docs.filter(F.col("doc_id") % 3 == 2), a, stream_marker="batch_8"
-        )
+        apply_batch(docs.filter(F.col("doc_id") % 3 == 2), 8)
     monkeypatch.setattr(shutil, "move", real_move)
     assert os.path.exists(f"{a}/_append_pending/_STAGED_OK")
     assert os.path.exists(f"{a}/_append_pending/_markers/batch_8")
     assert not os.path.exists(f"{a}/_stream_applied/batch_8")
-    rt.bm25_publish_pending_append(a)
+    publish_pending_batch(a)
     assert os.path.exists(f"{a}/_stream_applied/batch_8")
     assert not os.path.exists(f"{a}/_append_pending")
     got = sorted(map(tuple, rt.bm25_search_index(spark, a, queries, k=5).collect()))
@@ -1123,13 +1126,14 @@ def test_bm25_append_stream_marker_fused_commit(spark, tmp_path, sf_dir, monkeyp
 
 def test_bm25_publish_sweeps_stale_old_dirs(spark, tmp_path, sf_dir, monkeypatch):
     """ADVICE r13 (low): a crash between move(staged, cur) and the aside
-    rmtree leaves {name}._old behind with the staged copy gone; the publish
-    retry must still sweep it (the old code skipped the table entirely when
-    staged was absent, so a stale full stats copy lingered on disk)."""
+    rmtree leaves the aside copy behind with the staged copy gone; the
+    publish retry must still sweep it. The aside lives under the pending
+    dir, never beside the live table."""
     import os
     import shutil
 
     from laradb_spark.pipelines import retrieval as rt
+    from laradb_spark.streaming import txn
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     queries = [(1, "hash join"), (2, "stream window agg")]
@@ -1140,11 +1144,12 @@ def test_bm25_publish_sweeps_stale_old_dirs(spark, tmp_path, sf_dir, monkeypatch
 
     real_rmtree = shutil.rmtree
     state = {"old_calls": 0}
+    aside = f"{a}/{txn.PENDING}/{txn.ASIDE}"
 
     def flaky_rmtree(path, *args, **kwargs):
-        # crash on the POST-move aside sweep (the 2nd ._old-targeted call
-        # for termstats: the 1st is the pre-rename defensive sweep)
-        if str(path).endswith("._old"):
+        # crash on the POST-move aside sweep (the 2nd aside-targeted call
+        # for stats: the 1st is the pre-rename defensive sweep)
+        if str(path).startswith(aside):
             state["old_calls"] += 1
             if state["old_calls"] == 2:
                 raise OSError("injected crash before aside sweep")
@@ -1154,13 +1159,12 @@ def test_bm25_publish_sweeps_stale_old_dirs(spark, tmp_path, sf_dir, monkeypatch
     with pytest.raises(OSError, match="injected"):
         rt.bm25_append_index(docs.filter(F.col("doc_id") % 2 == 1), a)
     monkeypatch.setattr(shutil, "rmtree", real_rmtree)
-    # crash point: termstats swapped (staged gone), its ._old left behind
-    assert os.path.isdir(f"{a}/termstats._old")
-    assert not os.path.isdir(f"{a}/_append_pending/termstats")
-    rt.bm25_publish_pending_append(a)
-    assert not os.path.exists(f"{a}/termstats._old")
-    assert not os.path.exists(f"{a}/stats._old")
-    assert not os.path.exists(f"{a}/_append_pending")
+    # crash point: stats swapped (staged gone), its aside left behind
+    assert os.path.isdir(f"{aside}/stats")
+    assert not os.path.isdir(f"{a}/{txn.PENDING}/stats")
+    assert not [d for d in os.listdir(a) if d.endswith("._old")]
+    txn.publish_pending_batch(a)
+    assert not os.path.exists(f"{a}/{txn.PENDING}")
     got = sorted(map(tuple, rt.bm25_search_index(spark, a, queries, k=5).collect()))
     want = sorted(map(tuple, rt.bm25_search_index(spark, b, queries, k=5).collect()))
     assert got == want and len(got) > 0

@@ -387,6 +387,14 @@ def test_check_query_reports_each_fault(spark):
     cross_sql = f"SELECT a.k, a.v, b.k AS k2 FROM ({sql}) a CROSS JOIN ({sql}) b"
     assert check_query(con, "probe", cross, cross_sql) == ["plan has a CartesianProduct"]
     assert check_query(con, "lara_cross_grid", cross, cross_sql) == []
+    # a cross join broadcast only because its side is small is a cartesian
+    # product at scale: the re-plan without size-based broadcast flags it
+    small = spark.range(2).select(F.col("id").alias("k2"))
+    small_sql = f"SELECT a.k, a.v, b.k2 FROM ({sql}) a CROSS JOIN range(2) b(k2)"
+    sized = df.crossJoin(small)
+    assert "CartesianProduct" not in _plan(sized)
+    assert check_query(con, "probe", sized, small_sql) == ["plan has a CartesianProduct"]
+    assert check_query(con, "probe", df.crossJoin(F.broadcast(small)), small_sql) == []
     dec = df.select("k", F.col("v").cast("decimal(10,2)").alias("v"))
     assert any("decimal" in p for p in check_query(con, "probe", dec, sql))
     assert any("empty" in p for p in check_query(con, "probe", df.limit(0), sql + " LIMIT 0"))

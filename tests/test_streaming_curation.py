@@ -566,7 +566,7 @@ def test_bm25_index_stream_refuses_foreign_stage(spark, tmp_path, monkeypatch):
     bm25_append_index that crashed mid-publish before the stream started is
     NOT this batch's data — publishing it and marking the batch applied
     would silently drop the batch. The stream must fail loudly and direct
-    the operator to bm25_publish_pending_append; after the operator
+    the operator to txn.publish_pending_batch; after the operator
     publishes, the restarted stream appends its batch and the index ends
     exactly equal to a fresh union build."""
     import os
@@ -574,6 +574,7 @@ def test_bm25_index_stream_refuses_foreign_stage(spark, tmp_path, monkeypatch):
 
     from laradb_spark.pipelines import retrieval as rt
     from laradb_spark.streaming.ingest import bm25_index_stream
+    from laradb_spark.streaming.txn import publish_pending_batch
 
     docs = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -611,12 +612,12 @@ def test_bm25_index_stream_refuses_foreign_stage(spark, tmp_path, monkeypatch):
     except Exception:
         pass  # the ownership refusal fails the query
     assert not q.isActive
-    assert "bm25_publish_pending_append" in str(q.exception())
+    assert "publish_pending_batch" in str(q.exception())
     # the batch was NOT marked applied (that would be the silent data loss)
     assert not os.path.exists(f"{idx}/_stream_applied/batch_0")
 
     # operator recovery: finish the manual publish, restart the stream
-    rt.bm25_publish_pending_append(idx)
+    publish_pending_batch(idx)
     q2 = bm25_index_stream(
         spark.readStream.schema(schema).parquet(src), idx, ck,
     )

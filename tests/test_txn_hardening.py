@@ -1,7 +1,8 @@
-"""r15 crash-safety hardening: writer-lock enforcement (VERDICT r14 #5),
-teardown ordering, fully-published-leftover recovery, marker retention,
-and the _RECENTER_OK gate (ADVICE r14). All pure-filesystem — the txn
-machinery moves files; Spark never needs to run here."""
+"""Crash safety of the one stored-index commit protocol (streaming.txn):
+writer-lock enforcement, teardown ordering, fully-published-leftover
+recovery, marker retention, partitioned appends, replace targets and the
+pre-replace manifest format. All pure-filesystem — the txn machinery
+moves files; Spark never needs to run here."""
 
 import os
 import shutil
@@ -186,40 +187,157 @@ def test_staged_batch_publish_takes_the_lock(tmp_path):
             staged_batch_publish(root, {}, _stage_writer(), "offline_append")
 
 
-def test_finish_recenter_refuses_unverified_new_dirs(tmp_path):
-    """ADVICE r14 (medium): without _RECENTER_OK the ._new dirs are
-    partial/unverified — ivf_finish_recenter must DISCARD them and leave
-    the live tables untouched, never install them."""
-    from laradb_spark.pipelines.similarity import ivf_finish_recenter
+def _replace_layout(root):
+    """A two-table live layout (old part-files), the stage callback that
+    rewrites both tables, and their replace targets."""
+    names = ("centroids", "corpus")
+    for name in names:
+        os.makedirs(os.path.join(root, name))
+        with open(os.path.join(root, name, "old.parquet"), "w") as f:
+            f.write("old")
 
-    path = str(tmp_path / "ivf")
-    for name in ("corpus", "centroids"):
-        os.makedirs(os.path.join(path, name))
-        open(os.path.join(path, name, "live.parquet"), "w").write("live")
-        os.makedirs(os.path.join(path, f"{name}._new"))
-        open(os.path.join(path, f"{name}._new", "p.parquet"), "w").write("partial")
-    assert ivf_finish_recenter(path) is False
-    for name in ("corpus", "centroids"):
-        assert not os.path.exists(os.path.join(path, f"{name}._new"))
-        with open(os.path.join(path, name, "live.parquet")) as f:
-            assert f.read() == "live"
+    def stage(pend):
+        for name in names:
+            os.makedirs(os.path.join(pend, name))
+            with open(os.path.join(pend, name, "new.parquet"), "w") as f:
+                f.write("new")
+
+    return stage, {n: txn.Replace(os.path.join(root, n)) for n in names}
 
 
-def test_finish_recenter_completes_verified_swap_and_clears_marker(tmp_path):
-    from laradb_spark.pipelines.similarity import ivf_finish_recenter
+def _assert_replaced(root):
+    assert sorted(os.listdir(root)) == ["centroids", "corpus"]  # no aside, no stage
+    for name in ("centroids", "corpus"):
+        assert os.listdir(os.path.join(root, name)) == ["new.parquet"]
 
-    path = str(tmp_path / "ivf")
-    for name in ("corpus", "centroids"):
-        os.makedirs(os.path.join(path, name))
-        open(os.path.join(path, name, "old.parquet"), "w").write("old")
-        os.makedirs(os.path.join(path, f"{name}._new"))
-        open(os.path.join(path, f"{name}._new", "new.parquet"), "w").write("new")
-    open(os.path.join(path, "_RECENTER_OK"), "w").close()
-    assert ivf_finish_recenter(path) is True
-    for name in ("corpus", "centroids"):
-        assert sorted(os.listdir(os.path.join(path, name))) == ["new.parquet"]
-        assert not os.path.exists(os.path.join(path, f"{name}._old"))
-    assert not os.path.exists(os.path.join(path, "_RECENTER_OK"))
-    # idempotent re-run on the settled layout: nothing verified pending
-    assert ivf_finish_recenter(path) is False
-    assert sorted(os.listdir(os.path.join(path, "corpus"))) == ["new.parquet"]
+
+def test_partitioned_stage_keeps_partition_subdirs(tmp_path):
+    """An append target's hive partition subdirectories land under the
+    same relative paths in the live table (a stage written with
+    partitionBy, like the BM25 postings), next to the existing lists."""
+    root = str(tmp_path / "idx")
+    live = str(tmp_path / "idx" / "postings")
+    os.makedirs(os.path.join(live, "bucket=1"))
+    open(os.path.join(live, "bucket=1", "part-old.parquet"), "w").close()
+
+    def stage(pend):
+        for sub in ("bucket=1", "bucket=2"):
+            os.makedirs(os.path.join(pend, "postings", sub))
+            open(os.path.join(pend, "postings", sub, "part-new.parquet"), "w").close()
+        open(os.path.join(pend, "postings", "_SUCCESS"), "w").close()
+
+    staged_batch_publish(root, {"postings": live}, stage, "t")
+    assert sorted(os.listdir(live)) == ["bucket=1", "bucket=2"]
+    assert sorted(os.listdir(os.path.join(live, "bucket=1"))) == [
+        "part-new.parquet", "part-old.parquet"
+    ]
+    assert os.listdir(os.path.join(live, "bucket=2")) == ["part-new.parquet"]
+    assert not os.path.exists(os.path.join(root, txn.PENDING))
+
+
+def test_replace_target_resumes_from_a_crash_at_every_step(tmp_path, monkeypatch):
+    """Crash the publish at each move and each aside sweep in turn: the
+    aside copy is never beside a live table, a new write refuses, and the
+    one recovery call, publish_pending_batch, lands both tables with no
+    aside left anywhere."""
+    real_move, real_rmtree = shutil.move, shutil.rmtree
+    step = 0
+    while True:
+        step += 1
+        root = str(tmp_path / f"idx{step}")
+        stage, targets = _replace_layout(root)
+        calls = {"n": 0}
+
+        def crash_at_step(real):
+            def wrapped(path, *args, **kwargs):
+                if real is real_move or txn.ASIDE in str(path):
+                    calls["n"] += 1
+                    if calls["n"] == step:
+                        raise OSError("injected crash")
+                return real(path, *args, **kwargs)
+
+            return wrapped
+
+        monkeypatch.setattr(shutil, "move", crash_at_step(real_move))
+        monkeypatch.setattr(shutil, "rmtree", crash_at_step(real_rmtree))
+        try:
+            staged_batch_publish(root, targets, stage, "t")
+            crashed = False
+        except OSError:
+            crashed = True
+        monkeypatch.setattr(shutil, "move", real_move)
+        monkeypatch.setattr(shutil, "rmtree", real_rmtree)
+        assert set(os.listdir(root)) <= {"centroids", "corpus", txn.PENDING}
+        if not crashed:
+            break
+        with pytest.raises(RuntimeError, match="publish_pending_batch"):
+            staged_batch_publish(root, targets, stage, "t")
+        publish_pending_batch(root)
+        _assert_replaced(root)
+    _assert_replaced(root)
+    # per table: pre-swap sweep, move aside, move in, post-swap sweep
+    assert step == 4 * 2 + 1
+
+
+def test_replace_target_unverified_stage_is_discarded(tmp_path):
+    """A stage that dies before _STAGED_OK (a verification failure or a
+    crash during the heavy writes) is never installed: the live tables
+    are untouched, publish_pending_batch has nothing to publish, and the
+    next write discards the half-stage."""
+    root = str(tmp_path / "ivf")
+    stage, targets = _replace_layout(root)
+
+    def failing_stage(pend):
+        stage(pend)
+        raise RuntimeError("verification failed")
+
+    with pytest.raises(RuntimeError, match="verification failed"):
+        staged_batch_publish(root, targets, failing_stage, "t")
+    assert not os.path.exists(os.path.join(root, txn.PENDING, txn.STAGED_OK))
+    with pytest.raises(RuntimeError, match="no completed stage"):
+        publish_pending_batch(root)
+    for name in ("centroids", "corpus"):
+        assert os.listdir(os.path.join(root, name)) == ["old.parquet"]
+    staged_batch_publish(root, targets, stage, "t")
+    _assert_replaced(root)
+
+
+def test_replace_target_completes_verified_swap_and_leaves_no_aside(tmp_path, monkeypatch):
+    """A completed replace stage whose publish crashed before any move is
+    finished by publish_pending_batch; a second call finds nothing to do
+    and leaves the settled layout as it is."""
+    root = str(tmp_path / "ivf")
+    stage, targets = _replace_layout(root)
+
+    def crash_move(src, dst):
+        raise OSError("injected crash")
+
+    monkeypatch.setattr(shutil, "move", crash_move)
+    with pytest.raises(OSError, match="injected"):
+        staged_batch_publish(root, targets, stage, "t")
+    monkeypatch.undo()
+    assert os.path.exists(os.path.join(root, txn.PENDING, txn.STAGED_OK))
+    publish_pending_batch(root)
+    _assert_replaced(root)
+    with pytest.raises(RuntimeError, match="no completed stage"):
+        publish_pending_batch(root)
+    _assert_replaced(root)
+
+
+def test_two_field_manifest_still_publishes_as_append(tmp_path):
+    """A stage whose _targets lines carry only (staged subdir, live dir)
+    — the manifest format before replace targets — publishes each line
+    as an append."""
+    root = str(tmp_path / "idx")
+    live = str(tmp_path / "live")
+    os.makedirs(live)
+    open(os.path.join(live, "part-old.parquet"), "w").close()
+    pend = os.path.join(root, txn.PENDING)
+    os.makedirs(os.path.join(pend, "data"))
+    open(os.path.join(pend, "data", "part-new.parquet"), "w").close()
+    with open(os.path.join(pend, txn.TARGETS), "w") as f:
+        f.write(f"data\t{live}\n")
+    open(os.path.join(pend, txn.STAGED_OK), "w").close()
+    publish_pending_batch(root)
+    assert sorted(os.listdir(live)) == ["part-new.parquet", "part-old.parquet"]
+    assert not os.path.exists(pend)

@@ -89,8 +89,11 @@ BOUND_CHECKS = {
 }
 
 # The one intentional cross product: a Lara join on disjoint key sets
-# (5×5 pre-aggregates). Broadcast scalar/tiny cross-joins lower to
-# BroadcastNestedLoopJoin, which is fine anywhere.
+# (5×5 pre-aggregates). A cross join that broadcasts only because the
+# fixture is small would turn into a CartesianProduct at scale, so the
+# gate re-plans every query with size-based broadcast off: a cross join
+# must carry a broadcast hint (BroadcastNestedLoopJoin in both plans) or
+# an entry here with its reason.
 CARTESIAN_ALLOWED = {"lara_cross_grid"}
 
 # Queries ALLOWED an Exchange SinglePartition: every one is a bounded
@@ -186,11 +189,30 @@ SHJ_ALLOWED = {
 }
 
 
+def _plan_without_size_broadcast(sdf) -> str:
+    """The physical plan of ``sdf`` re-planned with
+    ``spark.sql.autoBroadcastJoinThreshold=-1``: planned only, nothing
+    executes. A join that stays broadcast here is hinted, not sized."""
+    conf = sdf.sparkSession.conf
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = conf.get(key)
+    conf.set(key, "-1")
+    try:
+        return sdf.alias("_replan")._jdf.queryExecution().executedPlan().toString()
+    finally:
+        conf.set(key, old)
+
+
 def plan_problems(name: str, sdf) -> list[str]:
-    """Plan invariants, a string scan of the physical plan Spark will run."""
+    """Plan invariants, a string scan of the physical plan Spark will run
+    (and, for the cartesian check, of its re-plan without size-based
+    broadcast)."""
     plan = sdf._jdf.queryExecution().executedPlan().toString()
     problems = []
-    if "CartesianProduct" in plan and name not in CARTESIAN_ALLOWED:
+    if name not in CARTESIAN_ALLOWED and (
+        "CartesianProduct" in plan
+        or "CartesianProduct" in _plan_without_size_broadcast(sdf)
+    ):
         problems.append("plan has a CartesianProduct")
     if "Exchange SinglePartition" in plan and name not in SINGLE_PARTITION_ALLOWED:
         problems.append(
